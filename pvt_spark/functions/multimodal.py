@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -374,4 +376,4 @@ def synthesize_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
         rows.append(
             (i, f"https://example.org/media/{i}", kind, mime, bytearray(data), w, h, dur)
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def _argmin_cells(
     v: np.ndarray, cmat: np.ndarray, chunk: int = 8192
@@ -101,9 +103,7 @@ def kmeans_fit(
     )
     cents_rows = [(int(i), list(r[1])) for i, r in enumerate(init_rows)]
     if not cents_rows:
-        return spark.createDataFrame(
-            [], "centroid_id long, cv array<double>"
-        )
+        return local_frame(spark, [], "centroid_id long, cv array<double>")
     dim = len(cents_rows[0][1])
     sc = spark.sparkContext
     for _ in range(iters):
@@ -159,8 +159,8 @@ def kmeans_fit(
                 (cid, (s / n).tolist()) for cid, (n, s) in acc.items()
             )
         else:
-            cents_df = spark.createDataFrame(
-                cents_rows, "centroid_id long, cv array<double>"
+            cents_df = local_frame(
+                spark, cents_rows, "centroid_id long, cv array<double>"
             )
             assigned = ivf_assign(
                 vectors, cents_df, id_col=id_col, vec_col=vec_col,
@@ -184,9 +184,7 @@ def kmeans_fit(
                 (cid, [ms[d] for d in sorted(ms)])
                 for cid, ms in by_cell.items()
             )
-    return spark.createDataFrame(
-        cents_rows, "centroid_id long, cv array<double>"
-    )
+    return local_frame(spark, cents_rows, "centroid_id long, cv array<double>")
 
 
 def ivf_assign(
@@ -378,7 +376,7 @@ def _pq_codebook_to_df(spark, codebook):
         for j in range(codebook.m)
         for c in range(codebook.ksub)
     ]
-    return spark.createDataFrame(rows, "j int, code int, cv array<bigint>")
+    return local_frame(spark, rows, "j int, code int, cv array<bigint>")
 
 
 def _pq_codebook_from_df(df):
@@ -450,6 +448,7 @@ def ivf_index_build(
     # the persisted copy need not be read back
     cents.write.mode("overwrite").parquet(os.path.join(index_dir, "centroids"))
     dim = len(cents.first()["cv"])
+    bc = None
     if pq_m is not None:
         from .pq import pq_train, quantize_expr
 
@@ -464,7 +463,7 @@ def ivf_index_build(
         )
         # one fused Arrow pass: centroid assign + quantize + PQ encode
         # (identical output to ivf_assign + SQL quantize + pq_encode)
-        assigned, _bc = _assign_encode_fused(vectors, cents, codebook, vec_col)
+        assigned, bc = _assign_encode_fused(vectors, cents, codebook, vec_col)
     else:
         assigned = ivf_assign(vectors, cents, id_col=id_col, vec_col=vec_col)
     (
@@ -473,6 +472,8 @@ def ivf_index_build(
         .partitionBy("centroid_id")
         .parquet(os.path.join(index_dir, "vectors"))
     )
+    if bc is not None:
+        bc.unpersist()
     desc = {
         "n_vectors": n,
         "n_centroids": k,
@@ -532,6 +533,7 @@ def ivf_index_append(
     if n_new == 0:
         return desc
     cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
+    bc = None
     if desc.get("pq_m"):
         # the PQ codebook is as frozen as the centroids: new vectors
         # encode against it so the appended rows stay ADC-searchable —
@@ -539,7 +541,7 @@ def ivf_index_append(
         codebook = _pq_codebook_from_df(
             spark.read.parquet(os.path.join(index_dir, "pq_codebook"))
         )
-        assigned, _bc = _assign_encode_fused(
+        assigned, bc = _assign_encode_fused(
             new_vectors, cents, codebook, vec_col
         )
     else:
@@ -550,6 +552,8 @@ def ivf_index_append(
         .partitionBy("centroid_id")
         .parquet(os.path.join(index_dir, "vectors"))
     )
+    if bc is not None:
+        bc.unpersist()
     desc["n_vectors"] = int(desc["n_vectors"]) + n_new
     desc["appended_since_fit"] = int(desc.get("appended_since_fit", 0)) + n_new
     desc.setdefault("appends", []).append(

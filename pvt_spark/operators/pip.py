@@ -26,6 +26,7 @@ from pyspark.sql.types import BooleanType, StructType
 
 from .. import hilbert as hb
 from ..functions.geo import zoom_h
+from ..session import local_frame
 
 
 def polygon_cover_tiles(rings: list, cover_zoom: int) -> list[int]:
@@ -151,7 +152,7 @@ def point_in_polygon_join(
         rings = [[(p["lon_dm7"], p["lat_dm7"]) for p in ring] for ring in r["rings"]]
         for t in polygon_cover_tiles(rings, cover_zoom):
             cover_rows.append((r["admin_id"], t))
-    cover = spark.createDataFrame(cover_rows, "admin_id long, cover_tile long")
+    cover = local_frame(spark, cover_rows, "admin_id long, cover_tile long")
 
     pts = points.withColumn("cover_tile", zoom_h(F.col("h"), cover_zoom))
     cand = pts.join(F.broadcast(cover), "cover_tile")

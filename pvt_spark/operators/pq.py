@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def quantize_expr(vec_col: str) -> str:
     """The certified milli-quantization idiom (q39/q57): float vector ->
@@ -62,12 +64,24 @@ def quantize_np(v: np.ndarray) -> np.ndarray:
     comparison ``frac >= 0.5`` lands on the same side as the decimal
     expansion does — the two paths agree on every double in range
     (property-tested against the SQL expression incl. exact halves and
-    1-ulp-from-half adversaries in test_pq.py)."""
+    1-ulp-from-half adversaries in test_pq.py).
+
+    Out of range: under ANSI mode (Spark 4's default, kept by
+    ``get_spark``) the bigint cast raises ``CAST_OVERFLOW`` on NaN, ±inf
+    and anything rounding past ±2^63, so this raises ``ArithmeticError``
+    on the same inputs; exactly 2^63 saturates like Spark's cast."""
     x = v * 1000.0
     ax = np.abs(x)
+    if not (ax <= 2.0**63).all():  # NaN compares False
+        raise ArithmeticError(
+            "[CAST_OVERFLOW] quantize_np: NaN, infinite or out-of-bigint-range "
+            "value (the SQL quantize_expr raises on the same input)"
+        )
     fl = np.floor(ax)
     r = fl + (ax - fl >= 0.5)
-    return np.where(x < 0, -r, r).astype(np.int64)
+    out = np.where(x < 0, -r, np.minimum(r, 2.0**63 - 1024)).astype(np.int64)
+    out[x == 2.0**63] = np.iinfo(np.int64).max
+    return out
 
 
 def _argmin_codes_exact(vj: np.ndarray, cbj: np.ndarray) -> np.ndarray:
@@ -314,8 +328,8 @@ def pq_adc_topk(
             d += table[qi, j, c[:, j]]
         return pd.Series(d)
 
-    qids = codes_df.sparkSession.createDataFrame(
-        [(q,) for q, _ in qrows], f"{query_id_col} long"
+    qids = local_frame(
+        codes_df.sparkSession, [(q,) for q, _ in qrows], f"{query_id_col} long"
     )
     wk = Window.partitionBy(query_id_col).orderBy(
         F.asc("adc_d2"), F.asc(id_col)
@@ -417,8 +431,9 @@ def ivfpq_search(
         F.col(id_col), F.expr(quantize_expr(vec_col)).alias("_vq")
     )
     qmap = {q: v for q, v in qrows}
-    qdf = assigned_codes.sparkSession.createDataFrame(
-        [(q, v) for q, v in qmap.items()],
+    qdf = local_frame(
+        assigned_codes.sparkSession,
+        list(qmap.items()),
         f"{query_id_col} long, _qq array<bigint>",
     )
     d2 = (

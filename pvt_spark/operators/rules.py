@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..manifest import CompiledRules
+from ..session import local_frame
 
 EVAL_SCHEMA = (
     "eval_i int, rule string, layers array<string>, minzoom int, maxzoom int, "
@@ -35,23 +36,28 @@ EVAL_SCHEMA = (
 
 def rules_to_dfs(spark: SparkSession, compiled: CompiledRules):
     """CompiledRules -> (evals_df, tag_df, value_df, key_df), broadcast-sized."""
-    evals = spark.createDataFrame(
+    evals = local_frame(
+        spark,
         [
             (i, name, layers, mn, mx, ik, iks)
             for i, (name, layers, mn, mx, ik, iks) in enumerate(compiled.evals)
         ],
         EVAL_SCHEMA,
     )
-    tag_df = spark.createDataFrame(
-        compiled.tag_matches or [("", "", -1)], "k string, v string, eval_i int"
-    ).where(F.col("eval_i") >= 0)
-    value_df = spark.createDataFrame(
-        compiled.value_matches or [("", -1)], "v string, eval_i int"
-    ).where(F.col("eval_i") >= 0)
-    key_df = spark.createDataFrame(
-        compiled.key_matches or [("", -1)], "k string, eval_i int"
-    ).where(F.col("eval_i") >= 0)
+    tag_df = local_frame(spark, compiled.tag_matches, "k string, v string, eval_i int")
+    value_df = local_frame(spark, compiled.value_matches, "v string, eval_i int")
+    key_df = local_frame(spark, compiled.key_matches, "k string, eval_i int")
     return evals, tag_df, value_df, key_df
+
+
+def include_evals(spark: SparkSession, compiled: CompiledRules) -> DataFrame:
+    """eval_i -> (include_kind, include_keys): the broadcast side that
+    render-feature builders join onto content rows before include_tags."""
+    return local_frame(
+        spark,
+        [(i, e[4], e[5]) for i, e in enumerate(compiled.evals)],
+        "eval_i int, include_kind string, include_keys array<string>",
+    )
 
 
 def evaluate_rules(

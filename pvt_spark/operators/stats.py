@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def group_quantiles(
     df: DataFrame,
@@ -66,8 +68,10 @@ def group_quantiles(
     # group totals come from the histogram, not a second corpus scan —
     # the input is read and shuffled exactly once (the histogram groupBy)
     totals = hist.groupBy(key).agg(F.sum("cnt").alias("n"))
-    qdf = totals.sparkSession.createDataFrame(
-        [(int(q),) for q in sorted(set(qs_milli))], "q_milli long"
+    qdf = local_frame(
+        totals.sparkSession,
+        [(int(q),) for q in sorted(set(qs_milli))],
+        "q_milli long",
     )
     ranks = totals.crossJoin(F.broadcast(qdf)).withColumn(
         "rank", F.expr("(q_milli * n + 999) div 1000")

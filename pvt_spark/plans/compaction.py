@@ -61,6 +61,7 @@ from ..operators.geotag import pages_to_points
 from ..operators.hilbert_sort import hilbert_sort
 from ..operators.leaves import build_leaves
 from ..operators.tree import build_tile_tree
+from ..session import local_frame
 from ..streaming.incremental import dirty_tiles_for_points
 from .pipeline import BuildConfig, _featureize, _layer_order, _mp_rf, _points_rf
 
@@ -77,6 +78,17 @@ def _atomic_json_write(path: str, obj) -> None:
     with open(tmp, "w") as f:
         json.dump(obj, f, indent=1, sort_keys=True)
     os.replace(tmp, path)
+
+
+def _append_log(planet_dir: str, record: dict) -> None:
+    """Append one record to the planet's ``_compaction.json`` log."""
+    log_path = os.path.join(planet_dir, "_compaction.json")
+    log = []
+    if os.path.exists(log_path):
+        with open(log_path) as f:
+            log = json.load(f)
+    log.append(record)
+    _atomic_json_write(log_path, log)
 
 
 def _swap_write(df: DataFrame, path: str, partition_by: str | None = None) -> None:
@@ -205,9 +217,7 @@ def _tree_delta_splice(
     dkeys = [
         (z, int(r.leaf_h) >> (2 * (leaf_zoom - z))) for z in zooms for r in rows
     ]
-    dkeys_df = spark.createDataFrame(
-        sorted(set(dkeys)), "zoom int, tile_h long"
-    )
+    dkeys_df = local_frame(spark, sorted(set(dkeys)), "zoom int, tile_h long")
     exist = {
         (r.zoom, r.tile_h)
         for r in old_tree.join(
@@ -254,7 +264,7 @@ def _tree_delta_splice(
         "d_hmin long, d_hmax long"
     )
     merged = old_tree.join(
-        F.broadcast(spark.createDataFrame(merge_rows, dschema)),
+        F.broadcast(local_frame(spark, merge_rows, dschema)),
         ["zoom", "tile_h"],
         "left",
     ).select(
@@ -282,7 +292,7 @@ def _tree_delta_splice(
             F.col("h_max"), F.coalesce(F.col("d_hmax"), F.col("h_max"))
         ).alias("h_max"),
     )
-    fresh = spark.createDataFrame(new_rows, dschema).select(
+    fresh = local_frame(spark, new_rows, dschema).select(
         "zoom",
         "tile_h",
         F.col("d_mask").cast("int").alias("child_mask"),
@@ -546,7 +556,7 @@ def _recompose_dirty_tiles(
             _refresh_lineage(planet_dir, "tile_manifest", gen)
             metrics_path = _stage_path(planet_dir, "zoom_metrics")
             _swap_write(
-                spark.createDataFrame(metrics_rows, metrics.schema),
+                local_frame(spark, metrics_rows, metrics.schema),
                 metrics_path,
             )
             spliced.unpersist()
@@ -589,6 +599,7 @@ def compact_planet(
     pre-drain state, the same staleness contract as _deferred_dirty.
 
     Returns a summary dict (generation, dirty tile count, delta rows).
+    A delta with no geo points writes nothing and logs ``gen: None``.
     ``stream_batch_id`` (the streaming exactly-once marker) is written
     INTO this compaction's log record in the same json write — atomic
     with the fold, so a crash can never leave a folded-but-unmarked
@@ -643,6 +654,23 @@ def compact_planet(
         num_partitions=config.sort_partitions,
     ).persist()
     n_delta = delta_points.count()
+
+    def _log_summary(summary: dict) -> dict:
+        summary["wall_sec"] = round(time.time() - t0, 3)
+        summary["steps"] = steps
+        if stream_batch_id is not None:
+            summary["stream_batch_id"] = stream_batch_id
+        _append_log(planet_dir, summary)
+        return summary
+
+    if n_delta == 0:
+        # no geo mention in the delta: nothing is dirty, so the fold
+        # writes no generation (an empty one has no files to read back)
+        delta_points.unpersist()
+        _mark("delta_points")
+        return _log_summary(
+            {"gen": None, "delta_rows": 0, "dirty_tiles": 0, "deferred_tiles": 0}
+        )
     # micro-batch deltas (the overwhelmingly common fold): ONE collect of
     # the delta leaf aggregate feeds the dirty set (derived in Python —
     # the exact distinct-ancestor-ladder set dirty_tiles_for_points
@@ -744,7 +772,7 @@ def compact_planet(
                 }
             )
             n_dirty = len(dirty_keys)
-            dirty = spark.createDataFrame(dirty_keys, "zoom int, tile_h long")
+            dirty = local_frame(spark, dirty_keys, "zoom int, tile_h long")
         else:
             dirty_cached = dirty_tiles_for_points(
                 delta_points, config.leaf_zoom
@@ -772,12 +800,10 @@ def compact_planet(
                 deferred_keys = [k for k in dirty_keys if k[0] < defer_z]
                 deferred_n = len(deferred_keys)
                 dirty_now_keys = [k for k in dirty_keys if k[0] >= defer_z]
-                dirty_now = spark.createDataFrame(
-                    dirty_now_keys, "zoom int, tile_h long"
+                dirty_now = local_frame(
+                    spark, dirty_now_keys, "zoom int, tile_h long"
                 )
-                to_park = spark.createDataFrame(
-                    deferred_keys, "zoom int, tile_h long"
-                )
+                to_park = local_frame(spark, deferred_keys, "zoom int, tile_h long")
             else:
                 deferred_n = int(
                     dirty.where(F.col("zoom") < defer_zoom_below).count()
@@ -813,24 +839,14 @@ def compact_planet(
     if dirty_cached is not None:
         dirty_cached.unpersist()
 
-    summary = {
-        "gen": gen,
-        "delta_rows": n_delta,
-        "dirty_tiles": n_dirty,
-        "deferred_tiles": deferred_n,
-        "wall_sec": round(time.time() - t0, 3),
-        "steps": steps,
-    }
-    if stream_batch_id is not None:
-        summary["stream_batch_id"] = stream_batch_id
-    log_path = os.path.join(planet_dir, "_compaction.json")
-    log = []
-    if os.path.exists(log_path):
-        with open(log_path) as f:
-            log = json.load(f)
-    log.append(summary)
-    _atomic_json_write(log_path, log)
-    return summary
+    return _log_summary(
+        {
+            "gen": gen,
+            "delta_rows": n_delta,
+            "dirty_tiles": n_dirty,
+            "deferred_tiles": deferred_n,
+        }
+    )
 
 
 def read_tiles(spark: SparkSession, planet_dir: str) -> DataFrame:
@@ -910,7 +926,7 @@ def resolve_manifest(
     _swap_write(spliced, man_path)
     _refresh_lineage(planet_dir, "tile_manifest", -1)
     _swap_write(
-        spark.createDataFrame(metrics_rows, metrics.schema),
+        local_frame(spark, metrics_rows, metrics.schema),
         _stage_path(planet_dir, "zoom_metrics"),
     )
     spliced.unpersist()
@@ -963,16 +979,11 @@ def flush_deferred(
     )
     pending.unpersist()
     shutil.rmtree(ddir)
-    log_path = os.path.join(planet_dir, "_compaction.json")
-    log = []
-    if os.path.exists(log_path):
-        with open(log_path) as f:
-            log = json.load(f)
-    log.append(
+    _append_log(
+        planet_dir,
         {"gen": gen, "flush": True, "flushed_tiles": n,
-         "wall_sec": round(time.time() - t0, 3)}
+         "wall_sec": round(time.time() - t0, 3)},
     )
-    _atomic_json_write(log_path, log)
     return n
 
 

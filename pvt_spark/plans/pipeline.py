@@ -58,8 +58,9 @@ from ..operators.feature_h import (
 from ..operators.geotag import pages_to_points
 from ..operators.hilbert_sort import hilbert_sort
 from ..operators.leaves import build_leaves
-from ..operators.rules import include_tags
+from ..operators.rules import include_evals, include_tags
 from ..operators.tree import build_tile_tree
+from ..session import local_frame
 from ..sources.ways import synthesize_relations, synthesize_ways
 
 PIPELINE_VERSION = 4  # v4: geom_seq rides content_mp (deterministic ring order)
@@ -199,10 +200,7 @@ def _layer_order(config: BuildConfig) -> list[str]:
 def _points_rf(spark, content: DataFrame, compiled, config: BuildConfig) -> DataFrame:
     """Point-content rows -> primitive-only render-features for the
     point fast path (see compose_points_presorted input contract)."""
-    evals_df = spark.createDataFrame(
-        [(i, e[4], e[5]) for i, e in enumerate(compiled.evals)],
-        "eval_i int, include_kind string, include_keys array<string>",
-    )
+    evals_df = include_evals(spark, compiled)
     feats = include_tags(
         content.join(F.broadcast(evals_df), "eval_i", "left"),
         all_tags=config.manifest.all_tags,
@@ -232,10 +230,7 @@ def _points_rf(spark, content: DataFrame, compiled, config: BuildConfig) -> Data
 
 def _mp_rf(spark, content_mp: DataFrame, compiled, config: BuildConfig) -> DataFrame:
     """Multi-point content rows -> render-features for geometry_chunks."""
-    evals_df = spark.createDataFrame(
-        [(i, e[4], e[5]) for i, e in enumerate(compiled.evals)],
-        "eval_i int, include_kind string, include_keys array<string>",
-    )
+    evals_df = include_evals(spark, compiled)
     feats = include_tags(
         content_mp.join(F.broadcast(evals_df), "eval_i", "left"),
         all_tags=config.manifest.all_tags,
@@ -307,8 +302,8 @@ def build_planet(
         elif config.synth_ways > 0:
             src_ways = synthesize_ways(points_sorted, config.synth_ways)
         else:  # relations-only build (node-member relations)
-            src_ways = spark.createDataFrame(
-                [], "feature_id long, refs array<long>, tags map<string,string>"
+            src_ways = local_frame(
+                spark, [], "feature_id long, refs array<long>, tags map<string,string>"
             )
         # fused J3+J1: one explode/join + one feature_id shuffle yields
         # both the way h and the ordered grid geometry arrays

@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 TABLES = [
     "region",
     "nation",
@@ -1234,7 +1236,8 @@ def q25_hilbert_goldens(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's pandas-UDF path (reference src/location.rs:237-284)."""
     from .functions.geo import hilbert_h
 
-    pts = spark.createDataFrame(
+    pts = local_frame(
+        spark,
         [
             ("cavallero", -1220279745, 370491457),
             ("null_island", 0, 0),
@@ -1343,7 +1346,7 @@ def q28_tile_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .manifest import DEFAULT_MANIFEST, compile_rules
     from .operators.compose import compose_tiles
     from .operators.content import render_content
-    from .operators.rules import include_tags
+    from .operators.rules import include_evals, include_tags
 
     (supp,) = load(spark, sf_dir, "supplier")
     kinds = ["place", "amenity", "highway", "building", "shop", "natural", "power"]
@@ -1364,10 +1367,7 @@ def q28_tile_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     content = render_content(
         pts, DEFAULT_MANIFEST, compiled, carry_cols=["tags", "gx", "gy"]
     )
-    evals_df = spark.createDataFrame(
-        [(i, e[4], e[5]) for i, e in enumerate(compiled.evals)],
-        "eval_i int, include_kind string, include_keys array<string>",
-    )
+    evals_df = include_evals(spark, compiled)
     feats = include_tags(content.join(F.broadcast(evals_df), "eval_i", "left"))
     rf = feats.select(
         "zoom",
@@ -1553,7 +1553,7 @@ def q30_way_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.compose import compose_tiles
     from .operators.content import render_content
     from .operators.feature_h import assign_way_h, way_geometry
-    from .operators.rules import include_tags
+    from .operators.rules import include_evals, include_tags
     from .sources.ways import synthesize_ways
 
     pts = _grid_points(spark, sf_dir)
@@ -1565,10 +1565,7 @@ def q30_way_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     content = render_content(
         feats, DEFAULT_MANIFEST, compiled, carry_cols=["tags", "geom_x", "geom_y"]
     )
-    evals_df = spark.createDataFrame(
-        [(i, e[4], e[5]) for i, e in enumerate(compiled.evals)],
-        "eval_i int, include_kind string, include_keys array<string>",
-    )
+    evals_df = include_evals(spark, compiled)
     rf = include_tags(content.join(F.broadcast(evals_df), "eval_i", "left")).select(
         "zoom",
         "tile_h",
@@ -1706,7 +1703,7 @@ def q33_raster_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         rasterize_features,
         rasterize_payloads,
     )
-    from .operators.rules import include_tags
+    from .operators.rules import include_evals, include_tags
 
     (supp,) = load(spark, sf_dir, "supplier")
     kinds = ["place", "amenity", "highway", "building", "shop", "natural", "power"]
@@ -1727,10 +1724,7 @@ def q33_raster_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     content = render_content(
         pts, DEFAULT_MANIFEST, compiled, carry_cols=["tags", "gx", "gy"]
     )
-    evals_df = spark.createDataFrame(
-        [(i, e[4], e[5]) for i, e in enumerate(compiled.evals)],
-        "eval_i int, include_kind string, include_keys array<string>",
-    )
+    evals_df = include_evals(spark, compiled)
     feats = include_tags(content.join(F.broadcast(evals_df), "eval_i", "left"))
     rf = feats.select(
         "zoom",
@@ -3133,8 +3127,8 @@ def q56_streaming_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_once()  # ingest; everything pends behind the watermark
         max_us = ev.agg(F.max("us")).collect()[0][0]
         clock_us = (max_us if max_us is not None else 0) + 365 * 86_400_000_000
-        spark.createDataFrame(
-            [("__clock__", 0, clock_us)], "key string, tag int, us long"
+        local_frame(
+            spark, [("__clock__", 0, clock_us)], "key string, tag int, us long"
         ).select(
             "key", "tag", F.timestamp_micros(F.col("us")).alias("ts"),
             F.lit(0).cast("long").alias("id"),

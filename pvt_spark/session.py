@@ -8,8 +8,10 @@ batches for the vectorized UDF kernels).
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -57,9 +59,43 @@ def get_spark(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # workers fork from a daemon that stops PySpark's per-task
+        # importlib.invalidate_caches() from re-reading unchanged zip
+        # archives on sys.path (see pvt_spark/daemon.py)
+        .config("spark.python.daemon.module", "pvt_spark.daemon")
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: str | StructType
+) -> DataFrame:
+    """Driver-side rows -> a JVM-local relation (``LocalTableScan``).
+
+    Classic PySpark turns ``createDataFrame(<python list>, schema)`` into
+    a parallelized Python RDD (``Scan ExistingRDD``): every job that
+    scans the frame starts Python worker tasks just to replay the rows.
+    Handed a ``pyarrow.Table`` instead, Spark plans a ``LocalTableScan``
+    whose rows live in the plan, so no task runs Python for them. This
+    is the engine's one way to build a frame from driver rows (dirty-key
+    sets, tree-splice rows, rule tables, covers, metrics rows).
+
+    ``rows`` are tuples or ``Row``s in schema order; ``schema`` is a DDL
+    string or a ``StructType``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def drop_local_checkpoint(df: DataFrame) -> None:

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import hilbert as hb
+from ..session import local_frame
 
 # (feature_id, lon_dm7, lat_dm7, tags) — reference tests/fixtures/nodes4.osm
 NODES4 = [
@@ -37,8 +38,10 @@ def nodes4(spark: SparkSession) -> DataFrame:
     for fid, lon, lat, tags in NODES4:
         h = int(hb.lonlat_to_signed_h(np.array([lon]), np.array([lat]))[0])
         rows.append((fid, lon, lat, tags, h))
-    return spark.createDataFrame(
-        rows, "feature_id long, lon_dm7 int, lat_dm7 int, tags map<string,string>, h long"
+    return local_frame(
+        spark,
+        rows,
+        "feature_id long, lon_dm7 int, lat_dm7 int, tags map<string,string>, h long",
     )
 
 
@@ -105,15 +108,18 @@ def _minicruz_frames(
 
 def minicruz(spark: SparkSession, **kw):
     points_pd, ways_pd, rels_pd = _minicruz_frames(**kw)
-    points = spark.createDataFrame(
-        points_pd,
+    points = local_frame(
+        spark,
+        points_pd.itertuples(index=False, name=None),
         "feature_id long, lon_dm7 int, lat_dm7 int, tag_key string, tag_value string, h long",
     )
-    ways = spark.createDataFrame(
+    ways = local_frame(
+        spark,
         [(int(r.feature_id), [int(x) for x in r.refs], r.tag_key, r.tag_value) for r in ways_pd.itertuples()],
         "feature_id long, refs array<long>, tag_key string, tag_value string",
     )
-    relations = spark.createDataFrame(
+    relations = local_frame(
+        spark,
         [
             (int(r.feature_id), [(t, int(ref)) for t, ref in r.members])
             for r in rels_pd.itertuples()
@@ -142,7 +148,8 @@ def admin_polygons(spark: SparkSession, grid: int = 4) -> DataFrame:
             ring = [(w, s), (e, s), (e, n), (w, n), (w, s)]
             rows.append((aid, 4 + (aid % 5), f"admin_{i}_{j}", [ring]))
             aid += 1
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "admin_id long, admin_level int, name string, "
         "rings array<array<struct<lon_dm7:int, lat_dm7:int>>>",

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..tile import Tile, hilbert_bearing
+from ..session import local_frame
 
 BOUNDARY = [(0, 0), (8191, 0), (8191, 8191), (0, 8191), (0, 0)]
 
@@ -87,7 +88,8 @@ def info_features(
                     [int(ey), int(cy), int(xy)],
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "zoom int, tile_h long, feature_id long, h long, layer string, "
         "out_tags map<string,string>, geom_x array<long>, geom_y array<long>",

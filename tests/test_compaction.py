@@ -6,6 +6,9 @@ manifest to ONE full build over P0+P1+P2 — and folding the delta
 generations back into the base (materialize) must change nothing.
 """
 
+import json
+import os
+
 from pyspark.sql import functions as F
 
 from pvt_spark.plans.compaction import (
@@ -88,6 +91,27 @@ def test_compaction_equals_full_rebuild(spark, tmp_path):
     assert materialize_tiles(spark, inc_dir) == 2
     assert _tile_map(spark.read.parquet(inc_dir + "/tiles")) == full_tiles
     assert materialize_tiles(spark, inc_dir) == 0
+
+
+def test_compaction_empty_delta_writes_no_generation(spark, tmp_path):
+    """A delta whose pages mention no place folds nothing: it logs its
+    summary (delta_rows 0) and writes no tiles_delta generation, so
+    read_tiles still opens the planet and serves the same tiles."""
+    cfg = BuildConfig()
+    planet = str(tmp_path / "p")
+    build_planet(spark, synthesize_pages(spark, 120, seed=1, partitions=2), planet, cfg)
+    before = _tile_map(read_tiles(spark, planet))
+    no_mentions = synthesize_pages(
+        spark, 20, seed=2, partitions=1, start=10_000
+    ).withColumn("html", F.lit(bytearray(b"<html><body><p>no places</p></body></html>")))
+
+    s = compact_planet(spark, planet, no_mentions, cfg, stream_batch_id=7)
+    assert s["delta_rows"] == 0 and s["dirty_tiles"] == 0 and s["gen"] is None
+    assert not os.path.exists(os.path.join(planet, "tiles_delta"))
+    with open(os.path.join(planet, "_compaction.json")) as f:
+        last = json.load(f)[-1]
+    assert last["delta_rows"] == 0 and last["stream_batch_id"] == 7
+    assert _tile_map(read_tiles(spark, planet)) == before and before
 
 
 def test_compaction_rejects_config_mismatch(spark, tmp_path):

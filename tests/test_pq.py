@@ -248,6 +248,30 @@ def test_quantize_np_parity(spark):
         assert got_sql[vid] == want, (vid, got_sql[vid], want)
 
 
+def test_quantize_np_non_finite_matches_sql(spark):
+    """Out-of-range input: NaN, +-inf and values past the bigint range
+    make the SQL quantize_expr (ANSI cast) raise CAST_OVERFLOW, and
+    quantize_np raises on the same inputs instead of returning an
+    undefined int64. At exactly +-2^63 both saturate."""
+    from pvt_spark.operators.pq import quantize_np
+    from pvt_spark.session import local_frame
+
+    for bad in [float("nan"), float("inf"), float("-inf"), 1e17, -1e17]:
+        df = local_frame(spark, [([0.5, bad],)], "vec array<double>")
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            df.selectExpr(quantize_expr("vec")).collect()
+        with pytest.raises(ArithmeticError, match="CAST_OVERFLOW"):
+            quantize_np(np.array([[0.5, bad]], dtype=np.float64))
+    edge = [2.0**63 / 1000, -(2.0**63) / 1000]  # products are exactly +-2^63
+    got_sql = (
+        local_frame(spark, [(edge,)], "vec array<double>")
+        .selectExpr(quantize_expr("vec") + " as qv")
+        .collect()[0]
+        .qv
+    )
+    assert list(got_sql) == quantize_np(np.array([edge]))[0].tolist()
+
+
 def test_fused_assign_encode_matches_unfused(spark, tmp_path):
     """The ivf_index_build fused Arrow pass stores exactly the
     centroid_id/codes the unfused ivf_assign + SQL quantize + pq_encode
