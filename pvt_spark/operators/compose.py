@@ -493,34 +493,6 @@ def compose_tiles(
     )
 
 
-def compose_tiles_presorted(
-    render_features: DataFrame,
-    layer_order: list[str],
-    tolerance: float = DEFAULT_TOLERANCE,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Zero-extra-shuffle compose for input that is ALREADY clustered by
-    (zoom, tile_h) within its files (the content table is written
-    repartitionByRange + sortWithinPartitions, so a tile's rows are
-    contiguous per partition).
-
-    Phase 1 runs directly on the input partitions — chunks are
-    mergeable, so file/batch boundaries splitting a tile are harmless
-    and play the role of the salt (a hot tile spanning many batches
-    yields many chunks, each bounded by the Arrow batch size). Phase 2
-    shuffles only the chunk rows (orders of magnitude smaller than the
-    feature rows) to merge per tile.
-    """
-    spark = render_features.sparkSession
-    partitions = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    with_salt = render_features.withColumn("salt", F.lit(0))
-    chunks = with_salt.mapInPandas(lambda it: _phase1_stream(it, tolerance), CHUNK_SCHEMA)
-    part2 = chunks.repartition(partitions, "zoom", "tile_h").sortWithinPartitions(
-        "zoom", "tile_h", "layer"
-    )
-    return part2.mapInPandas(lambda it: _phase2_stream(it, layer_order), TILE_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Point-feature fast path: every column primitive (no per-row lists/dicts
 # cross the Arrow boundary), finals emitted in phase 1

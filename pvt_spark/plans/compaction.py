@@ -37,114 +37,47 @@ manifest to one full rebuild over the concatenated pages.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..manifest import compile_rules
-from ..operators.compose import (
-    compose_points_presorted,
-    geometry_chunks,
-    merge_chunks,
-    points_chunks,
-)
-from ..operators.content import (
-    render_content,
-    tile_manifest,
-    zoom_metrics_from_manifest,
-)
-from ..operators.geotag import pages_to_points
-from ..operators.hilbert_sort import hilbert_sort
+from ..operators.content import tile_manifest
 from ..operators.leaves import build_leaves
 from ..operators.tree import build_tile_tree
 from ..session import local_frame
 from ..streaming.incremental import dirty_tiles_for_points
-from .pipeline import BuildConfig, _featureize, _layer_order, _mp_rf, _points_rf
-
-
-def _stage_path(planet_dir: str, name: str) -> str:
-    return os.path.join(planet_dir, name)
-
-
-def _atomic_json_write(path: str, obj) -> None:
-    """Crash-safe json replace: a torn in-place truncate-and-write of
-    the exactly-once ledger would fail every subsequent read_log
-    (ADVICE r5). Write a sibling tmp then os.replace (atomic rename)."""
-    tmp = path + ".__tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
+from .pipeline import (
+    BuildConfig,
+    atomic_json_write,
+    check_config,
+    compose_planet_tiles,
+    generations,
+    manifest_input,
+    point_content,
+    read_json,
+    sorted_points,
+    splice_manifest,
+    swap_write,
+    timed,
+    write_lineage,
+)
 
 
 def _append_log(planet_dir: str, record: dict) -> None:
     """Append one record to the planet's ``_compaction.json`` log."""
     log_path = os.path.join(planet_dir, "_compaction.json")
-    log = []
-    if os.path.exists(log_path):
-        with open(log_path) as f:
-            log = json.load(f)
-    log.append(record)
-    _atomic_json_write(log_path, log)
+    atomic_json_write(log_path, read_json(log_path, []) + [record])
 
 
-def _swap_write(df: DataFrame, path: str, partition_by: str | None = None) -> None:
-    """Overwrite a stage dir that ``df`` may itself be reading from:
-    materialize to a sibling tmp dir first, then swap. (On an object
-    store this becomes a metadata commit — Iceberg snapshot swap.)"""
-    tmp = path + "__compact_tmp"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-
-
-def _refresh_lineage(planet_dir: str, name: str, gen: int) -> None:
-    """Keep a compacted stage's sidecar honest: recount rows from the
-    parquet footers and stamp the compaction generation.
-
-    Incremental: footers already counted in the sidecar are reused (an
-    append-only stage accumulates files every fold, and re-reading every
-    footer per fold made the walk O(total files) instead of O(new
-    files)); entries whose file disappeared (swap-written stages) drop.
-    """
-    import pyarrow.parquet as pq
-
-    path = _stage_path(planet_dir, name)
-    lpath = os.path.join(path, "_lineage.json")
-    lin = {}
-    if os.path.exists(lpath):
-        with open(lpath) as f:
-            lin = json.load(f)
-    prev = lin.get("partitions") or {}
-    counts: dict[str, int] = {}
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            fp = os.path.join(root, fn)
-            rel = os.path.relpath(fp, path)
-            if rel in prev:
-                counts[rel] = prev[rel]
-                continue
-            try:
-                counts[rel] = pq.ParquetFile(fp).metadata.num_rows
-            except Exception:
-                pass
-    lin.update(
-        {
-            "row_count": int(sum(counts.values())),
-            "partitions": counts,
-            "compaction_gen": gen,
-        }
-    )
-    with open(lpath, "w") as f:
-        json.dump(lin, f, indent=1, sort_keys=True)
+def _entity_counts(cols) -> list[str]:
+    # leaf_count is derived (1 per leaf row), not an entity count —
+    # build_tile_tree re-adds it
+    return [c for c in cols if c.endswith("_count") and c != "leaf_count"]
 
 
 def merge_leaf_levels(
@@ -157,19 +90,14 @@ def merge_leaf_levels(
     columns missing on either side (entity pivots from mixed builds)
     are zero-filled so a points-only delta merges into a mixed base.
     """
-    def entity_counts(cols) -> list[str]:
-        # leaf_count is derived (1 per leaf row), not an entity count —
-        # build_tile_tree re-adds it
-        return [c for c in cols if c.endswith("_count") and c != "leaf_count"]
-
     old = old_leaf_level.select(
         F.col("tile_h").alias("leaf_h"),
-        *entity_counts(old_leaf_level.columns),
+        *_entity_counts(old_leaf_level.columns),
         "h_min",
         "h_max",
     )
     count_cols = sorted(
-        set(entity_counts(old.columns)) | set(entity_counts(delta_leaves.columns))
+        set(_entity_counts(old.columns)) | set(_entity_counts(delta_leaves.columns))
     )
 
     def align(df: DataFrame) -> DataFrame:
@@ -196,6 +124,7 @@ def _tree_delta_splice(
     spark: SparkSession,
     old_tree: DataFrame,
     delta_leaf_rows: list,
+    dirty_keys: list,
     leaf_zoom: int,
 ) -> DataFrame:
     """Associative DELTA update of the tile tree for an append-only page
@@ -210,14 +139,12 @@ def _tree_delta_splice(
     ``delta_leaf_rows`` are pre-collected ``build_leaves`` rows (micro-
     batch sized; the caller enforces the collect cap and falls back to
     the full rebuild above it — the same rows also derive the dirty
-    set, so the fold pays ONE leaf collect total).
+    set ``dirty_keys``, the sorted ladder keys of those leaves, so the
+    fold pays ONE leaf collect total).
     """
     rows = delta_leaf_rows
     zooms = list(range(leaf_zoom, -1, -2))
-    dkeys = [
-        (z, int(r.leaf_h) >> (2 * (leaf_zoom - z))) for z in zooms for r in rows
-    ]
-    dkeys_df = local_frame(spark, sorted(set(dkeys)), "zoom int, tile_h long")
+    dkeys_df = local_frame(spark, dirty_keys, "zoom int, tile_h long")
     exist = {
         (r.zoom, r.tile_h)
         for r in old_tree.join(
@@ -244,11 +171,7 @@ def _tree_delta_splice(
             a[1] += n
             a[3] = min(a[3], hmin)
             a[4] = max(a[4], hmax)
-    count_cols = [
-        c
-        for c in old_tree.columns
-        if c.endswith("_count") and c != "leaf_count"
-    ]
+    count_cols = _entity_counts(old_tree.columns)
     merge_rows = [
         (z, th, a[0], a[1], a[2], a[3], a[4])
         for (z, th), a in acc.items()
@@ -350,17 +273,7 @@ def _dirty_content(
     ~the full range (the semi-join stays exact either way), and a dirty
     set above ``collect_cap`` keys skips the driver-side interval pass
     and keeps the one-range form."""
-    if dirty_keys is not None:
-        # caller already holds the key set (micro-batch folds derive it
-        # driver-side) — no collect job at all
-        by_zoom: dict[int, list[int]] = {}
-        for z, th in dirty_keys:
-            by_zoom.setdefault(z, []).append(th)
-        intervals: dict[int, list[tuple[int, int]]] = {
-            z: _merge_intervals(sorted(set(hs)), max_intervals)
-            for z, hs in by_zoom.items()
-        }
-    elif n_dirty is not None and n_dirty > collect_cap:
+    if dirty_keys is None and n_dirty is not None and n_dirty > collect_cap:
         # above the driver-pass cap: keep the one-range-per-zoom form
         # without collecting the key set (same degradation as before)
         stats = dirty.groupBy("zoom").agg(
@@ -368,26 +281,21 @@ def _dirty_content(
         ).collect()
         intervals = {r.zoom: [(r.lo, r.hi)] for r in stats}
     else:
-        # ONE collect job feeds both the per-zoom stats and the interval
-        # cover (the stats pass was a second job over the same tiny set)
+        # caller-held keys (micro-batch folds derive them driver-side)
+        # need no job; otherwise ONE collect feeds both the per-zoom
+        # ranges and the interval cover. An uncounted set past the cap
+        # keeps one range per zoom.
+        if dirty_keys is None:
+            dirty_keys = [tuple(r) for r in dirty.select("zoom", "tile_h").collect()]
+            if n_dirty is None and len(dirty_keys) > collect_cap:
+                max_intervals = 1
         by_zoom: dict[int, list[int]] = {}
-        rows = dirty.select("zoom", "tile_h").collect()
-        if n_dirty is None and len(rows) > collect_cap:
-            intervals = {}
-            for r in rows:
-                lo_hi = intervals.get(r.zoom)
-                if lo_hi is None:
-                    intervals[r.zoom] = [(r.tile_h, r.tile_h)]
-                else:
-                    lo, hi = lo_hi[0]
-                    intervals[r.zoom] = [(min(lo, r.tile_h), max(hi, r.tile_h))]
-        else:
-            for r in rows:
-                by_zoom.setdefault(r.zoom, []).append(r.tile_h)
-            intervals = {
-                z: _merge_intervals(sorted(set(hs)), max_intervals)
-                for z, hs in by_zoom.items()
-            }
+        for z, th in dirty_keys:
+            by_zoom.setdefault(z, []).append(th)
+        intervals = {
+            z: _merge_intervals(sorted(set(hs)), max_intervals)
+            for z, hs in by_zoom.items()
+        }
     content = spark.read.parquet(content_path)
     coarse = None
     for z, ivs in intervals.items():
@@ -425,8 +333,8 @@ def _recompose_dirty_tiles(
     concurrent jobs. Per-step walls land in ``steps`` (overlapping)."""
     if steps is None:
         steps = {}
-    mixed = os.path.isdir(_stage_path(planet_dir, "content_mp"))
-    content_path = _stage_path(planet_dir, "content")
+    mixed = os.path.isdir(os.path.join(planet_dir, "content_mp"))
+    content_path = os.path.join(planet_dir, "content")
     delta_dir = os.path.join(planet_dir, "tiles_delta")
     dirty_all = _dirty_content(
         spark, content_path, dirty, n_dirty=n_dirty, dirty_keys=dirty_keys
@@ -439,7 +347,6 @@ def _recompose_dirty_tiles(
     # The count materializes the cache ONCE so the two concurrent
     # consumers below (gen write, manifest splice) both read it instead
     # of racing to recompute the scan+shuffle.
-    t_step = time.time()
     # cluster width follows the DIRTY TILE count (~500 tiles per python
     # phase-1 task), not the corpus conf: an explicit conf-width
     # repartition spread a few thousand dirty tiles over 128 python
@@ -455,54 +362,20 @@ def _recompose_dirty_tiles(
         .sortWithinPartitions("zoom", "tile_h")
         .persist()
     )
-    dirty_sorted.count()
-    steps["dirty_cluster"] = round(time.time() - t_step, 3)
+    timed(steps, "dirty_cluster", dirty_sorted.count)
     mp_dirty = None
     try:
-        rf = _points_rf(spark, dirty_sorted, compiled, config)
-        if not mixed:
-            recomposed = compose_points_presorted(
-                rf, _layer_order(config), file_marker=False
-            )
-        else:
+        if mixed:
             # same merge shape as build_planet's mixed compose, restricted
             # to the dirty keys: the mp tile subset demotes from finals to
             # chunks and merges with its (unchanged) geometry chunks
             mp_dirty = spark.read.parquet(
-                _stage_path(planet_dir, "content_mp")
+                os.path.join(planet_dir, "content_mp")
             ).join(F.broadcast(dirty), ["zoom", "tile_h"], "left_semi").persist()
-            gchunks = geometry_chunks(
-                _mp_rf(spark, mp_dirty, compiled, config),
-                salt_threshold=config.salt_threshold,
-                projected=True,
-            )
-            mp_keys = mp_dirty.select("zoom", "tile_h").distinct()
-            n_mp = mp_keys.count()
-            if n_mp <= 200_000:
-                keys = frozenset(
-                    (int(r.zoom) << 50) | int(r.tile_h) for r in mp_keys.collect()
-                )
-                # phase-2 width follows the chunk count, not the conf
-                # (see the pipeline compose note)
-                recomposed = compose_points_presorted(
-                    rf,
-                    _layer_order(config),
-                    merge_partitions=max(
-                        8,
-                        min(
-                            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                            n_mp // 4000 + 1,
-                        ),
-                    ),
-                    exclude_keys=keys,
-                    extra_chunks=gchunks,
-                    file_marker=False,
-                )
-            else:
-                recomposed = merge_chunks(
-                    points_chunks(rf, file_marker=False).unionByName(gchunks),
-                    _layer_order(config),
-                )
+        recomposed = compose_planet_tiles(
+            dirty_sorted, mp_dirty, compiled, config, file_marker=False
+        )
+
         def _gen_write() -> None:
             (
                 recomposed.write.mode("overwrite")
@@ -522,12 +395,7 @@ def _recompose_dirty_tiles(
         # base manifest + zoom metrics serve stale until then, the same
         # staleness contract _deferred_dirty tiles already have).
         def _manifest_metrics() -> None:
-            man_input = dirty_sorted.select("zoom", "tile_h", "feature_id")
-            if mp_dirty is not None:
-                man_input = man_input.unionByName(
-                    mp_dirty.select("zoom", "tile_h", "feature_id")
-                )
-            new_counts = tile_manifest(man_input)
+            new_counts = tile_manifest(manifest_input(dirty_sorted, mp_dirty))
             if defer_manifest:
                 (
                     new_counts.withColumn("gen", F.lit(gen))
@@ -536,42 +404,11 @@ def _recompose_dirty_tiles(
                     .parquet(os.path.join(planet_dir, "_manifest_delta"))
                 )
                 return
-            man_path = _stage_path(planet_dir, "tile_manifest")
-            old_man = spark.read.parquet(man_path)
-            spliced = (
-                old_man.join(
-                    F.broadcast(dirty), ["zoom", "tile_h"], "left_anti"
-                )
-                .unionByName(new_counts)
-                .persist()
-            )
-            # per-zoom rollup is ~a dozen rows: collect it off the cached
-            # splice BEFORE the swap (so no plan ever re-reads the
-            # replaced path), then write it back as a literal frame — one
-            # manifest scan serves both tables instead of write +
-            # re-read + re-agg
-            metrics = zoom_metrics_from_manifest(spliced)
-            metrics_rows = metrics.collect()
-            _swap_write(spliced, man_path)
-            _refresh_lineage(planet_dir, "tile_manifest", gen)
-            metrics_path = _stage_path(planet_dir, "zoom_metrics")
-            _swap_write(
-                local_frame(spark, metrics_rows, metrics.schema),
-                metrics_path,
-            )
-            spliced.unpersist()
-            _refresh_lineage(planet_dir, "zoom_metrics", gen)
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _timed(name: str, fn) -> None:
-            t = time.time()
-            fn()
-            steps[name] = round(time.time() - t, 3)
+            splice_manifest(spark, planet_dir, F.broadcast(dirty), new_counts, gen)
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_gen = pool.submit(_timed, "recompose", _gen_write)
-            f_man = pool.submit(_timed, "manifest_metrics", _manifest_metrics)
+            f_gen = pool.submit(timed, steps, "recompose", _gen_write)
+            f_man = pool.submit(timed, steps, "manifest_metrics", _manifest_metrics)
             f_gen.result()
             f_man.result()
     finally:
@@ -614,14 +451,7 @@ def compact_planet(
     ref while the incremental path keeps the base resolution.
     """
     config = config or BuildConfig()
-    fp = config.fingerprint()
-    lpath = os.path.join(_stage_path(planet_dir, "points_sorted"), "_lineage.json")
-    with open(lpath) as f:
-        base_fp = json.load(f).get("fingerprint")
-    if base_fp != fp:
-        raise ValueError(
-            "compaction config fingerprint does not match the base build"
-        )
+    check_config(planet_dir, config, "compaction")
     # Mixed planets: a PAGE delta adds points only — it cannot change
     # way/relation geometry (ways reference the base build's node ids,
     # relation h is a fixed point over those members), so the persisted
@@ -638,21 +468,12 @@ def compact_planet(
         steps[name] = round(now - _last[0], 3)
         _last[0] = now
 
-    delta_dir = os.path.join(planet_dir, "tiles_delta")
-    gens = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(delta_dir)
-        if d.startswith("gen=")
-    ] if os.path.isdir(delta_dir) else []
-    gen = (max(gens) + 1) if gens else 1
+    gen = max(generations(planet_dir), default=0) + 1
 
     # 1. delta points (same fused extract+featureize+sort kernel as the
     #    points_sorted stage), persisted — three derivations read it,
     #    and delta batches are micro-batch sized by design
-    delta_points = hilbert_sort(
-        _featureize(pages_to_points(delta_pages), config.tags_from_url),
-        num_partitions=config.sort_partitions,
-    ).persist()
+    delta_points = sorted_points(delta_pages, config).persist()
     n_delta = delta_points.count()
 
     def _log_summary(summary: dict) -> dict:
@@ -682,6 +503,14 @@ def compact_planet(
         if n_delta <= 200_000
         else None
     )
+    lz = config.leaf_zoom
+    dirty_keys = None if leaf_rows is None else sorted(
+        {
+            (z, int(r.leaf_h) >> (2 * (lz - z)))
+            for z in range(lz, -1, -2)
+            for r in leaf_rows
+        }
+    )
     _mark("delta_points")
 
     # Steps 2-7 below are a dependency DAG, not a chain: the tree
@@ -693,25 +522,16 @@ def compact_planet(
     # next instead of idling the executor) cuts the per-fold wall by the
     # sum of the overlapped steps. Step walls are recorded per step
     # (concurrent steps overlap, so they no longer sum to the fold wall).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _timed(name: str, fn) -> None:
-        t = time.time()
-        fn()
-        steps[name] = round(time.time() - t, 3)
-
     # 3. tree: delta-splice the rollup (counts sum, masks OR, extents
     #    widen — exact) so per-fold tree work is O(delta ladder), not a
     #    leaf-set shuffle + explode rollup over every leaf. Deltas past
     #    the driver cap fall back to the associative leaf merge + full
     #    interior rebuild (identical result, test-pinned equivalence).
     def _tree_task() -> None:
-        tree_path = _stage_path(planet_dir, "tile_tree")
+        tree_path = os.path.join(planet_dir, "tile_tree")
         old_tree = spark.read.parquet(tree_path)
         if leaf_rows is not None:
-            new_tree = _tree_delta_splice(
-                spark, old_tree, leaf_rows, config.leaf_zoom
-            )
+            new_tree = _tree_delta_splice(spark, old_tree, leaf_rows, dirty_keys, lz)
         else:
             new_tree = build_tile_tree(
                 merge_leaf_levels(
@@ -720,40 +540,28 @@ def compact_planet(
                 ),
                 config.leaf_zoom,
             )
-        _swap_write(new_tree, tree_path)
-        _refresh_lineage(planet_dir, "tile_tree", gen)
+        swap_write(new_tree, tree_path)
+        write_lineage(tree_path, compaction_gen=gen)
 
     # 4. content: append the delta's rule-pyramid rows (purely
     #    per-feature -> append-composable)
-    from ..functions.geo import grid_x, grid_y
-
     def _content_task() -> None:
-        content_path = _stage_path(planet_dir, "content")
-        delta_content = render_content(
-            delta_points.withColumn("gx", grid_x(F.col("lon_dm7"))).withColumn(
-                "gy", grid_y(F.col("lat_dm7"))
-            ),
-            config.manifest,
-            compiled,
-            carry_cols=["tags", "gx", "gy"],
-        )
-        delta_content.write.mode("append").partitionBy("zoom").parquet(
-            content_path
-        )
-        _refresh_lineage(planet_dir, "content", gen)
+        content_path = os.path.join(planet_dir, "content")
+        delta_content = point_content(delta_points, config, compiled)
+        delta_content.write.mode("append").partitionBy("zoom").parquet(content_path)
+        write_lineage(content_path, compaction_gen=gen)
 
     # 7. points append: nothing in the fold re-reads the points stage
     def _points_task() -> None:
-        delta_points.write.mode("append").parquet(
-            _stage_path(planet_dir, "points_sorted")
-        )
-        _refresh_lineage(planet_dir, "points_sorted", gen)
+        points_path = os.path.join(planet_dir, "points_sorted")
+        delta_points.write.mode("append").parquet(points_path)
+        write_lineage(points_path, compaction_gen=gen)
 
     deferred_n = 0
     with ThreadPoolExecutor(max_workers=4) as pool:
-        f_tree = pool.submit(_timed, "tree_merge", _tree_task)
-        f_content = pool.submit(_timed, "content_append", _content_task)
-        f_points = pool.submit(_timed, "points_append", _points_task)
+        f_tree = pool.submit(timed, steps, "tree_merge", _tree_task)
+        f_content = pool.submit(timed, steps, "content_append", _content_task)
+        f_points = pool.submit(timed, steps, "points_append", _points_task)
 
         # 2. invalidation set: tile-bounded, reused as broadcast both
         #    sides. Micro-batch deltas derive it in Python off the one
@@ -762,15 +570,7 @@ def compact_planet(
         t_step = time.time()
         defer_z = -1 if defer_zoom_below is None else int(defer_zoom_below)
         dirty_cached = None
-        if leaf_rows is not None:
-            lz = config.leaf_zoom
-            dirty_keys = sorted(
-                {
-                    (z, int(r.leaf_h) >> (2 * (lz - z)))
-                    for z in range(lz, -1, -2)
-                    for r in leaf_rows
-                }
-            )
+        if dirty_keys is not None:
             n_dirty = len(dirty_keys)
             dirty = local_frame(spark, dirty_keys, "zoom int, tile_h long")
         else:
@@ -793,7 +593,7 @@ def compact_planet(
         #     serves the previous (stale) low-zoom overview tiles — the
         #     standard tile-server tradeoff.
         dirty_now = dirty
-        dirty_now_keys = dirty_keys if leaf_rows is not None else None
+        dirty_now_keys = dirty_keys
         if defer_zoom_below is not None:
             ddir = os.path.join(planet_dir, "_deferred_dirty")
             if leaf_rows is not None:
@@ -812,7 +612,8 @@ def compact_planet(
                 to_park = dirty.where(F.col("zoom") < defer_zoom_below)
             # the parked write blocks nothing downstream — overlap it
             f_park = pool.submit(
-                _timed,
+                timed,
+                steps,
                 "defer_split",
                 lambda: (
                     to_park.withColumn("gen", F.lit(gen))
@@ -849,6 +650,16 @@ def compact_planet(
     )
 
 
+def _latest_wins(df: DataFrame, gen_col: str) -> DataFrame:
+    """Each (zoom, tile_h)'s row of the highest ``gen_col``, which drops."""
+    w = Window.partitionBy("zoom", "tile_h").orderBy(F.col(gen_col).desc())
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop(gen_col, "_rn")
+    )
+
+
 def read_tiles(spark: SparkSession, planet_dir: str) -> DataFrame:
     """Serving view over base tiles + compaction generations:
     latest-generation-wins per (zoom, tile_h).
@@ -862,27 +673,16 @@ def read_tiles(spark: SparkSession, planet_dir: str) -> DataFrame:
     With ``defer_zoom_below`` compaction, low-zoom overview tiles serve
     their pre-deferral payloads until ``flush_deferred`` runs.
     """
-    base = spark.read.parquet(_stage_path(planet_dir, "tiles")).withColumn(
+    out = spark.read.parquet(os.path.join(planet_dir, "tiles")).withColumn(
         "_gen", F.lit(0)
     )
-    delta_dir = os.path.join(planet_dir, "tiles_delta")
-    out = base
-    if os.path.isdir(delta_dir):
-        for d in sorted(os.listdir(delta_dir)):
-            if not d.startswith("gen="):
-                continue
-            g = int(d.split("=", 1)[1])
-            out = out.unionByName(
-                spark.read.parquet(os.path.join(delta_dir, d)).withColumn(
-                    "_gen", F.lit(g)
-                )
-            )
-    w = Window.partitionBy("zoom", "tile_h").orderBy(F.col("_gen").desc())
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_gen", "_rn")
-    )
+    for g in generations(planet_dir):
+        out = out.unionByName(
+            spark.read.parquet(
+                os.path.join(planet_dir, "tiles_delta", f"gen={g}")
+            ).withColumn("_gen", F.lit(g))
+        )
+    return _latest_wins(out, "_gen")
 
 
 def resolve_manifest(
@@ -904,33 +704,10 @@ def resolve_manifest(
     if n == 0:
         shutil.rmtree(ddir)
         return 0
-    w = Window.partitionBy("zoom", "tile_h").orderBy(F.col("gen").desc())
-    latest = (
-        deltas.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "gen")
+    splice_manifest(
+        spark, planet_dir, deltas.select("zoom", "tile_h").distinct(),
+        _latest_wins(deltas, "gen"), -1,
     )
-    man_path = _stage_path(planet_dir, "tile_manifest")
-    old_man = spark.read.parquet(man_path)
-    spliced = (
-        old_man.join(
-            deltas.select("zoom", "tile_h").distinct(),
-            ["zoom", "tile_h"],
-            "left_anti",
-        )
-        .unionByName(latest.select(*old_man.columns))
-        .persist()
-    )
-    metrics = zoom_metrics_from_manifest(spliced)
-    metrics_rows = metrics.collect()
-    _swap_write(spliced, man_path)
-    _refresh_lineage(planet_dir, "tile_manifest", -1)
-    _swap_write(
-        local_frame(spark, metrics_rows, metrics.schema),
-        _stage_path(planet_dir, "zoom_metrics"),
-    )
-    spliced.unpersist()
-    _refresh_lineage(planet_dir, "zoom_metrics", -1)
     shutil.rmtree(ddir)
     return int(n)
 
@@ -948,12 +725,7 @@ def flush_deferred(
     if not os.path.isdir(ddir):
         return 0
     config = config or BuildConfig()
-    lpath = os.path.join(_stage_path(planet_dir, "points_sorted"), "_lineage.json")
-    with open(lpath) as f:
-        if json.load(f).get("fingerprint") != config.fingerprint():
-            raise ValueError(
-                "flush config fingerprint does not match the base build"
-            )
+    check_config(planet_dir, config, "flush")
     pending = (
         spark.read.parquet(ddir).select("zoom", "tile_h").dropDuplicates(
             ["zoom", "tile_h"]
@@ -964,13 +736,7 @@ def flush_deferred(
         pending.unpersist()
         shutil.rmtree(ddir)
         return 0
-    delta_dir = os.path.join(planet_dir, "tiles_delta")
-    gens = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(delta_dir)
-        if d.startswith("gen=")
-    ] if os.path.isdir(delta_dir) else []
-    gen = (max(gens) + 1) if gens else 1
+    gen = max(generations(planet_dir), default=0) + 1
     compiled = compile_rules(config.manifest)
     t0 = time.time()
     _recompose_dirty_tiles(
@@ -997,13 +763,12 @@ def materialize_tiles(
     Flushes any deferred low-zoom dirty set first so the materialized
     base is exact."""
     flush_deferred(spark, planet_dir, config)
-    delta_dir = os.path.join(planet_dir, "tiles_delta")
-    if not os.path.isdir(delta_dir):
-        return 0
-    gens = [d for d in os.listdir(delta_dir) if d.startswith("gen=")]
+    gens = generations(planet_dir)
     if not gens:
         return 0
     resolved = read_tiles(spark, planet_dir)
-    _swap_write(resolved, _stage_path(planet_dir, "tiles"), partition_by="zoom")
-    shutil.rmtree(delta_dir)
+    tiles_path = os.path.join(planet_dir, "tiles")
+    swap_write(resolved, tiles_path, partition_by="zoom")
+    write_lineage(tiles_path, compaction_gen=gens[-1])
+    shutil.rmtree(os.path.join(planet_dir, "tiles_delta"))
     return len(gens)

@@ -2,14 +2,20 @@
 
 Reference lifecycle (src/main.rs:87-113): convert -> sort -> tree ->
 render, each persisting files to the planet dir; those file boundaries
-are the reference's resume points. Here every stage writes a parquet
-snapshot + a ``_lineage.json`` sidecar (stage name, code version,
-config fingerprint, input snapshot ids, row count, partition count,
-wall seconds). ``build_planet`` skips any stage whose snapshot already
-exists with a matching fingerprint — Iceberg-style snapshot semantics
-without requiring an Iceberg catalog in this sandbox (swap
-``.write.parquet`` for an Iceberg table write on a real cluster; the
-lineage JSON maps 1:1 onto Iceberg snapshot summary properties).
+are the reference's resume points. Here every stage commits a parquet
+snapshot, then atomically replaces its ``_lineage.json`` sidecar:
+``stage``, ``config`` (the BuildConfig fingerprint), ``fingerprint``
+(the resume key), ``inputs``, ``row_count``, per-file ``partitions``
+row counts, ``wall_sec`` and ``ts``. The resume key hashes the config
+with the upstream stages' keys and, for external inputs (``pages``,
+and ``ways``/``relations`` when passed), every scanned file's path,
+size and mtime_ns: a rewritten input recomputes its stage and
+everything downstream. ``build_planet`` skips any stage whose sidecar
+carries a matching key — Iceberg-style snapshot semantics without an
+Iceberg catalog (swap ``.write.parquet`` for an Iceberg table write on
+a real cluster; the lineage JSON maps 1:1 onto Iceberg snapshot
+summary properties). Compaction (``compaction.py``) folds through the
+same snapshot helpers and the same point, content and compose code.
 
 Stage graph (shuffle-minimal; see build_planet docstring):
 
@@ -22,14 +28,19 @@ Stage graph (shuffle-minimal; see build_planet docstring):
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.geo import grid_x, grid_y
 from ..manifest import DEFAULT_MANIFEST, Manifest, compile_rules
 from ..operators.compose import (
     compose_points_presorted,
@@ -65,21 +76,143 @@ from ..sources.ways import synthesize_relations, synthesize_ways
 
 PIPELINE_VERSION = 4  # v4: geom_seq rides content_mp (deterministic ring order)
 
+# ---------------------------------------------------------------------------
+# Snapshot format, shared by the build and the compaction fold: data is
+# committed first, then the JSON record beside it is atomically replaced
+# ---------------------------------------------------------------------------
 
-def _parquet_file_counts(path: str) -> dict[str, int]:
-    """Row count per parquet file from footers only (fast, driver-side)."""
+
+def read_json(path: str, default=None):
+    """The JSON document at ``path``, or ``default`` if there is none."""
+    if not os.path.exists(path):
+        return default
+    with open(path) as f:
+        return json.load(f)
+
+
+def atomic_json_write(path: str, obj) -> None:
+    """Crash-safe json replace: a torn in-place truncate-and-write would
+    fail every later read. Write a sibling tmp then os.replace (atomic
+    rename)."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".__tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1, sort_keys=True)
+    os.replace(tmp, path)
+
+
+def write_lineage(stage_dir: str, **fields) -> None:
+    """Merge ``fields`` into a stage's ``_lineage.json`` with its row
+    count per parquet file, read from footers only (driver-side metadata,
+    no Spark job — the Iceberg-manifest analog).
+
+    Incremental: footers already counted in the sidecar are reused (an
+    append-only stage accumulates files every fold, so the walk stays
+    O(new files)); entries whose file disappeared (swap-written stages)
+    drop."""
     import pyarrow.parquet as pq
 
+    lpath = os.path.join(stage_dir, "_lineage.json")
+    lin = read_json(lpath, {})
+    prev = lin.get("partitions") or {}
     counts: dict[str, int] = {}
-    for root, _dirs, files in os.walk(path):
+    for root, _dirs, files in os.walk(stage_dir):
         for fn in files:
-            if fn.endswith(".parquet"):
-                fp = os.path.join(root, fn)
-                try:
-                    counts[os.path.relpath(fp, path)] = pq.ParquetFile(fp).metadata.num_rows
-                except Exception:
-                    pass
-    return counts
+            if not fn.endswith(".parquet"):
+                continue
+            fp = os.path.join(root, fn)
+            rel = os.path.relpath(fp, stage_dir)
+            if rel in prev:
+                counts[rel] = prev[rel]
+                continue
+            try:
+                counts[rel] = pq.ParquetFile(fp).metadata.num_rows
+            except Exception:
+                pass
+    lin.update(fields, row_count=int(sum(counts.values())), partitions=counts)
+    atomic_json_write(lpath, lin)
+
+
+def swap_write(df: DataFrame, path: str, partition_by: str | None = None) -> None:
+    """Overwrite a stage dir that ``df`` may itself be reading from:
+    materialize to a sibling tmp dir first, then swap. (On an object
+    store this becomes a metadata commit — Iceberg snapshot swap.) The
+    stage's sidecar moves over with the data; callers restamp it with
+    ``write_lineage``."""
+    tmp = path + "__compact_tmp"
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(tmp)
+    lineage = os.path.join(path, "_lineage.json")
+    if os.path.exists(lineage):
+        os.replace(lineage, os.path.join(tmp, "_lineage.json"))
+    shutil.rmtree(path)
+    os.rename(tmp, path)
+
+
+def generations(planet_dir: str) -> list[int]:
+    """Committed ``tiles_delta/gen=N`` tile generations, ascending."""
+    delta_dir = os.path.join(planet_dir, "tiles_delta")
+    if not os.path.isdir(delta_dir):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1]) for d in os.listdir(delta_dir) if d.startswith("gen=")
+    )
+
+
+def check_config(planet_dir: str, config: BuildConfig, what: str) -> None:
+    """Raise unless ``config`` fingerprint-matches the planet's base
+    build — folding under different rules would splice tiles rendered
+    under two manifests."""
+    lin = read_json(os.path.join(planet_dir, "points_sorted", "_lineage.json"), {})
+    if lin.get("config") != config.fingerprint():
+        raise ValueError(f"{what} config fingerprint does not match the base build")
+
+
+def splice_manifest(
+    spark: SparkSession, planet_dir: str, drop_keys: DataFrame,
+    new_rows: DataFrame, gen: int,
+) -> None:
+    """Replace the tile_manifest rows of ``drop_keys`` by ``new_rows``,
+    recompute zoom_metrics from the result, swap-write both and stamp
+    their lineage with compaction generation ``gen``."""
+    man_path = os.path.join(planet_dir, "tile_manifest")
+    old_man = spark.read.parquet(man_path)
+    spliced = (
+        old_man.join(drop_keys, ["zoom", "tile_h"], "left_anti")
+        .unionByName(new_rows.select(*old_man.columns))
+        .persist()
+    )
+    # per-zoom rollup is ~a dozen rows: collect it off the cached splice
+    # BEFORE the swap (so no plan ever re-reads the replaced path), then
+    # write it back as a literal frame — one manifest scan serves both
+    # tables instead of write + re-read + re-agg
+    metrics = zoom_metrics_from_manifest(spliced)
+    metrics_rows = metrics.collect()
+    swap_write(spliced, man_path)
+    write_lineage(man_path, compaction_gen=gen)
+    metrics_path = os.path.join(planet_dir, "zoom_metrics")
+    swap_write(local_frame(spark, metrics_rows, metrics.schema), metrics_path)
+    spliced.unpersist()
+    write_lineage(metrics_path, compaction_gen=gen)
+
+
+def timed(steps: dict, name: str, fn) -> None:
+    """Run ``fn`` and record its wall seconds as ``steps[name]``."""
+    t = time.time()
+    fn()
+    steps[name] = round(time.time() - t, 3)
+
+
+def input_identity(df: DataFrame) -> list:
+    """``[file, size, mtime_ns]`` for every file ``df`` scans; an
+    in-memory frame scans none and yields ``[]``."""
+    out = []
+    for f in sorted(df.inputFiles()):
+        st = os.stat(unquote(urlparse(f).path))
+        out.append([f, st.st_size, st.st_mtime_ns])
+    return out
 
 
 @dataclass
@@ -119,31 +252,36 @@ class BuildConfig:
 
 
 class Stage:
-    """One checkpointed stage: compute -> write -> lineage sidecar."""
+    """One checkpointed stage: compute -> write data -> lineage sidecar.
 
-    def __init__(self, planet_dir: str, name: str, fingerprint: str):
+    ``inputs`` maps each input name to its identity: an upstream
+    stage's resume fingerprint, or ``input_identity`` of an external
+    frame. The resume fingerprint hashes the config fingerprint with
+    those identities, so the stage recomputes when its config, any
+    upstream stage or any input file (path, size, mtime_ns) changed.
+    In-memory inputs (e.g. ``synthesize_pages``) have no files: their
+    stages resume on the config alone. A stage dir without a readable
+    sidecar — a crash between the data write and the sidecar write, or
+    a torn sidecar — recomputes; the config fingerprint is kept under
+    its own ``config`` key for compaction's base-build check."""
+
+    def __init__(self, planet_dir: str, name: str, config_fp: str, inputs: dict):
         self.path = os.path.join(planet_dir, name)
         self.lineage_path = os.path.join(self.path, "_lineage.json")
         self.name = name
-        self.fingerprint = fingerprint
+        self.config_fp = config_fp
+        self.inputs = sorted(inputs)
+        key = json.dumps([config_fp, inputs], sort_keys=True)
+        self.fingerprint = hashlib.sha256(key.encode()).hexdigest()
 
     def is_complete(self) -> bool:
-        if not os.path.exists(self.lineage_path):
-            return False
         try:
-            with open(self.lineage_path) as f:
-                lin = json.load(f)
-            return lin.get("fingerprint") == self.fingerprint
-        except (json.JSONDecodeError, OSError):
+            lin = read_json(self.lineage_path, {})
+        except (ValueError, OSError):
             return False
+        return lin.get("fingerprint") == self.fingerprint
 
-    def run(
-        self,
-        spark: SparkSession,
-        compute,
-        writer=None,
-        inputs: list[str] | None = None,
-    ) -> DataFrame:
+    def run(self, spark: SparkSession, compute, writer=None) -> DataFrame:
         if self.is_complete():
             return spark.read.parquet(self.path)
         t0 = time.time()
@@ -153,20 +291,16 @@ class Stage:
         else:
             writer(df, self.path)
         out = spark.read.parquet(self.path)
-        # per-partition lineage from parquet footers (driver-side metadata
-        # read, no extra Spark job — the Iceberg-manifest analog)
-        part_counts = _parquet_file_counts(self.path)
-        lineage = {
-            "stage": self.name,
-            "fingerprint": self.fingerprint,
-            "inputs": inputs or [],
-            "row_count": int(sum(part_counts.values())),
-            "partitions": part_counts,
-            "wall_sec": round(time.time() - t0, 3),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        with open(self.lineage_path, "w") as f:
-            json.dump(lineage, f, indent=1, sort_keys=True)
+        # the overwrite removed any old sidecar; this one commits the data
+        write_lineage(
+            self.path,
+            stage=self.name,
+            config=self.config_fp,
+            fingerprint=self.fingerprint,
+            inputs=self.inputs,
+            wall_sec=round(time.time() - t0, 3),
+            ts=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        )
         return out
 
 
@@ -248,6 +382,91 @@ def _mp_rf(spark, content_mp: DataFrame, compiled, config: BuildConfig) -> DataF
     )
 
 
+def sorted_points(pages: DataFrame, config: BuildConfig) -> DataFrame:
+    """extract + geotag + feature ids + global Hilbert sort (O1) — one
+    shuffle, h order: the points_sorted stage and a fold's delta points."""
+    return hilbert_sort(
+        _featureize(pages_to_points(pages), config.tags_from_url),
+        num_partitions=config.sort_partitions,
+    )
+
+
+def point_content(points: DataFrame, config: BuildConfig, compiled) -> DataFrame:
+    """Rule-pyramid content rows of point features, grid coords carried
+    for the point compose fast path (purely per-feature, so a fold's
+    delta content appends to the build's)."""
+    pts = points.withColumn("gx", grid_x(F.col("lon_dm7"))).withColumn(
+        "gy", grid_y(F.col("lat_dm7"))
+    )
+    return render_content(
+        pts, config.manifest, compiled, carry_cols=["tags", "gx", "gy"]
+    )
+
+
+def manifest_input(content: DataFrame, content_mp: DataFrame | None) -> DataFrame:
+    """(zoom, tile_h, feature_id) rows of point + multi-point content."""
+    c = content.select("zoom", "tile_h", "feature_id")
+    if content_mp is not None:
+        c = c.unionByName(content_mp.select("zoom", "tile_h", "feature_id"))
+    return c
+
+
+def compose_planet_tiles(
+    content: DataFrame, content_mp: DataFrame | None, compiled,
+    config: BuildConfig, file_marker: bool = True,
+) -> DataFrame:
+    """Tile payload assembly (A6/P7/DP) on (zoom, tile_h)-clustered point
+    content — points-only: fast path with interior-tile finals; mixed:
+    point chunks + geometry chunks merged in one phase 2. The build
+    composes the whole planet, a fold its dirty slice (``file_marker``
+    False: in-memory clustered input, see compose_points_presorted)."""
+    spark = content.sparkSession
+    layer_order = _layer_order(config)
+    rf = _points_rf(spark, content, compiled, config)
+    if content_mp is None:
+        return compose_points_presorted(rf, layer_order, file_marker=file_marker)
+    gchunks = geometry_chunks(
+        _mp_rf(spark, content_mp, compiled, config),
+        salt_threshold=config.salt_threshold,
+        projected=True,  # content_mp stores tile-local simplified coords
+    )
+    # the point finals fast path stays available for every tile with
+    # NO multi-point features: demote only the mp tile set to chunks
+    # (key set rides a sparkContext.broadcast inside
+    # compose_points_presorted), merge those with the geometry
+    # chunks. Very way-dense planets (mp tile set beyond the bounded
+    # driver collect below) fall back to all-chunks.
+    mp_keys = content_mp.select("zoom", "tile_h").distinct()
+    n_mp = mp_keys.count()
+    if n_mp <= 200_000:
+        keys = frozenset(
+            (int(r.zoom) << 50) | int(r.tile_h) for r in mp_keys.collect()
+        )
+        # phase-2 width follows the CHUNK count (~one row per mp
+        # tile), not the corpus-shuffle conf: an explicit partition
+        # count blocks AQE coalescing, and 128 Python merge tasks
+        # over a few thousand chunk rows each paid ~4s of pure
+        # worker dispatch at the bench shape (measured; ~4k chunk
+        # rows per task is the sweet spot, conf stays the ceiling
+        # for way-dense planets)
+        return compose_points_presorted(
+            rf,
+            layer_order,
+            merge_partitions=max(
+                8,
+                min(
+                    int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+                    n_mp // 4000 + 1,
+                ),
+            ),
+            exclude_keys=keys,
+            extra_chunks=gchunks,
+            file_marker=file_marker,
+        )
+    pchunks = points_chunks(rf, file_marker=file_marker)
+    return merge_chunks(pchunks.unionByName(gchunks), layer_order)
+
+
 def build_planet(
     spark: SparkSession,
     pages: DataFrame,
@@ -276,21 +495,27 @@ def build_planet(
     """
     config = config or BuildConfig()
     os.makedirs(planet_dir, exist_ok=True)
-    fp = config.fingerprint()
+    config_fp = config.fingerprint()
     compiled = compile_rules(config.manifest)
+    # input identities: external frames by their files, stages (added as
+    # they are declared) by their resume fingerprints
+    idents = {
+        name: input_identity(df)
+        for name, df in (("pages", pages), ("ways", ways), ("relations", relations))
+        if df is not None
+    }
 
-    def stage(name: str) -> Stage:
-        return Stage(planet_dir, name, fp)
+    def stage(name: str, *inputs: str) -> Stage:
+        st = Stage(
+            planet_dir, name, config_fp, {i: idents[i] for i in inputs if i in idents}
+        )
+        idents[name] = st.fingerprint
+        return st
 
     # 1. extract + geotag + feature ids + global Hilbert sort (O1) —
     #    one stage, one shuffle, written in h order
-    points_sorted = stage("points_sorted").run(
-        spark,
-        lambda: hilbert_sort(
-            _featureize(pages_to_points(pages), config.tags_from_url),
-            num_partitions=config.sort_partitions,
-        ),
-        inputs=["pages"],
+    points_sorted = stage("points_sorted", "pages").run(
+        spark, lambda: sorted_points(pages, config)
     )
 
     # 1b. multi-point features: way/relation h-assignment + geometry
@@ -307,10 +532,8 @@ def build_planet(
             )
         # fused J3+J1: one explode/join + one feature_id shuffle yields
         # both the way h and the ordered grid geometry arrays
-        way_feats = stage("way_features").run(
-            spark,
-            lambda: assign_way_h_geometry(src_ways, points_sorted),
-            inputs=["points_sorted"],
+        way_feats = stage("way_features", "points_sorted", "ways").run(
+            spark, lambda: assign_way_h_geometry(src_ways, points_sorted)
         )
         src_rels = relations
         if src_rels is None and config.synth_relations > 0:
@@ -324,9 +547,9 @@ def build_planet(
                     return relation_ring_geometry(rel_h, way_feats)
                 return relation_point_geometry(rel_h)
 
-            rel_feats = stage("relation_features").run(
-                spark, _rel_geom, inputs=["points_sorted", "way_features"]
-            )
+            rel_feats = stage(
+                "relation_features", "points_sorted", "way_features", "relations"
+            ).run(spark, _rel_geom)
 
         # 1c. external leaf membership (J5/J6): leaves a way/relation's
         #     geometry enters beyond its home leaf
@@ -358,9 +581,9 @@ def build_planet(
                 )
             return ext
 
-        external = stage("external_members").run(
-            spark, _external, inputs=["way_features", "points_sorted"]
-        )
+        external = stage(
+            "external_members", "points_sorted", "way_features", "relation_features"
+        ).run(spark, _external)
 
     # 2. tile tree (A3 leaves + A4 rollup in one stage; the leaf level IS
     #    the zoom==leaf_zoom slice of the tree); mixed builds pivot counts
@@ -383,15 +606,7 @@ def build_planet(
 
     # 3. rule-filtered pyramid content (F1-F4 + A5), attrs denormalized so
     #    tile assembly needs no join; written clustered by (zoom, tile_h)
-    from ..functions.geo import grid_x, grid_y
-
-    def _content() -> DataFrame:
-        pts = points_sorted.withColumn("gx", grid_x(F.col("lon_dm7"))).withColumn(
-            "gy", grid_y(F.col("lat_dm7"))
-        )
-        return render_content(
-            pts, config.manifest, compiled, carry_cols=["tags", "gx", "gy"]
-        )
+    #    — point_content, run by the content stage below
 
     # 3b. multi-point content: rule pyramid over way/relation features
     #     PLUS external leaf rows (U1/F5: a leaf's tile also renders the
@@ -451,16 +666,19 @@ def build_planet(
     # PVT_SERIAL_STAGES=1 serializes them (one pool worker) so per-stage
     # lineage walls measure each stage's OWN plan, not co-scheduling —
     # used by scripts/stage_scaling.py for clean per-stage efficiency
-    from concurrent.futures import ThreadPoolExecutor
-
     serial = bool(os.environ.get("PVT_SERIAL_STAGES"))
     content_mp = None
     with ThreadPoolExecutor(max_workers=1 if serial else 3) as pool:
         f_tree = pool.submit(
-            stage("tile_tree").run, spark, _tree, None, ["points_sorted"]
+            stage("tile_tree", "points_sorted", "way_features", "relation_features").run,
+            spark,
+            _tree,
         )
         f_content = pool.submit(
-            stage("content").run, spark, _content, write_content, ["points_sorted"]
+            stage("content", "points_sorted").run,
+            spark,
+            lambda: point_content(points_sorted, config, compiled),
+            write_content,
         )
         # content_mp skips the range-clustered write content gets: serving
         # never reads it and its one consumer (geometry_chunks) reshuffles
@@ -468,9 +686,12 @@ def build_planet(
         # + boundary-sampling pass + a full sorted shuffle of mp content
         f_mp = (
             pool.submit(
-                stage("content_mp").run, spark, _content_mp,
+                stage(
+                    "content_mp", "way_features", "relation_features", "external_members"
+                ).run,
+                spark,
+                _content_mp,
                 lambda df, p: df.write.mode("overwrite").parquet(p),
-                ["way_features", "external_members"],
             )
             if has_mp
             else None
@@ -480,79 +701,26 @@ def build_planet(
         if f_mp is not None:
             content_mp = f_mp.result()
 
-    # 4. tile payload assembly (A6/P7/DP) on the pre-clustered content —
-    #    points-only: fast path with interior-tile finals; mixed: point
-    #    chunks + geometry chunks merged in one phase 2
-    def _compose() -> DataFrame:
-        rf = _points_rf(spark, content, compiled, config)
-        if not has_mp:
-            return compose_points_presorted(rf, _layer_order(config))
-        gchunks = geometry_chunks(
-            _mp_rf(spark, content_mp, compiled, config),
-            salt_threshold=config.salt_threshold,
-            projected=True,  # content_mp stores tile-local simplified coords
-        )
-        # the point finals fast path stays available for every tile with
-        # NO multi-point features: demote only the mp tile set to chunks
-        # (key set rides a sparkContext.broadcast inside
-        # compose_points_presorted), merge those with the geometry
-        # chunks. Very way-dense planets (mp tile set beyond the bounded
-        # driver collect below) fall back to all-chunks.
-        mp_keys = content_mp.select("zoom", "tile_h").distinct()
-        n_mp = mp_keys.count()
-        if n_mp <= 200_000:
-            keys = frozenset(
-                (int(r.zoom) << 50) | int(r.tile_h) for r in mp_keys.collect()
-            )
-            # phase-2 width follows the CHUNK count (~one row per mp
-            # tile), not the corpus-shuffle conf: an explicit partition
-            # count blocks AQE coalescing, and 128 Python merge tasks
-            # over a few thousand chunk rows each paid ~4s of pure
-            # worker dispatch at the bench shape (measured; ~4k chunk
-            # rows per task is the sweet spot, conf stays the ceiling
-            # for way-dense planets)
-            return compose_points_presorted(
-                rf,
-                _layer_order(config),
-                merge_partitions=max(
-                    8,
-                    min(
-                        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                        n_mp // 4000 + 1,
-                    ),
-                ),
-                exclude_keys=keys,
-                extra_chunks=gchunks,
-            )
-        pchunks = points_chunks(rf)
-        return merge_chunks(pchunks.unionByName(gchunks), _layer_order(config))
-
+    # 4. tile payload assembly on the pre-clustered content
     # 5. metrics tables (S11 report analog); zoom metrics derive from the
     #    small tile manifest, not a content re-scan. tiles and manifest
-    #    both read only the (already-written) content stage -> concurrent
-    def _manifest() -> DataFrame:
-        c = content.select("zoom", "tile_h", "feature_id")
-        if content_mp is not None:
-            c = c.unionByName(content_mp.select("zoom", "tile_h", "feature_id"))
-        return tile_manifest(c)
-
+    #    both read only the (already-written) content stages -> concurrent
     with ThreadPoolExecutor(max_workers=1 if serial else 2) as pool:
         f_tiles = pool.submit(
-            stage("tiles").run,
+            stage("tiles", "content", "content_mp").run,
             spark,
-            _compose,
+            lambda: compose_planet_tiles(content, content_mp, compiled, config),
             lambda df, p: df.write.mode("overwrite").partitionBy("zoom").parquet(p),
-            ["content"] + (["content_mp"] if has_mp else []),
         )
         f_manifest = pool.submit(
-            stage("tile_manifest").run, spark, _manifest, None, ["content"]
+            stage("tile_manifest", "content", "content_mp").run,
+            spark,
+            lambda: tile_manifest(manifest_input(content, content_mp)),
         )
         tiles = f_tiles.result()
         manifest_df = f_manifest.result()
-    metrics_df = stage("zoom_metrics").run(
-        spark,
-        lambda: zoom_metrics_from_manifest(manifest_df),
-        inputs=["tile_manifest"],
+    metrics_df = stage("zoom_metrics", "tile_manifest").run(
+        spark, lambda: zoom_metrics_from_manifest(manifest_df)
     )
 
     out = {

@@ -267,7 +267,6 @@ def run_incremental_build(
     (lineage present, no compaction log) is adopted with a synthetic
     ``prebuilt`` bootstrap record and the first batch folds normally.
     """
-    import json
     import os
 
     from ..plans.compaction import (
@@ -275,28 +274,20 @@ def run_incremental_build(
         flush_deferred,
         resolve_manifest,
     )
-    from ..plans.pipeline import BuildConfig, build_planet
+    from ..plans.pipeline import (
+        BuildConfig,
+        atomic_json_write,
+        build_planet,
+        read_json,
+    )
 
     config = config or BuildConfig()
+    # the exactly-once ledger: every write is an atomic replace, so a
+    # crash mid-write never leaves torn JSON behind
     log_path = os.path.join(planet_dir, "_compaction.json")
 
-    def read_log() -> list:
-        if not os.path.exists(log_path):
-            return []
-        with open(log_path) as f:
-            return json.load(f)
-
-    def write_log(log: list) -> None:
-        # atomic rename: a crash mid-write must never leave torn JSON in
-        # the exactly-once ledger (ADVICE r5)
-        os.makedirs(planet_dir, exist_ok=True)
-        tmp = log_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump(log, f, indent=1, sort_keys=True)
-        os.replace(tmp, log_path)
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        log = read_log()
+        log = read_json(log_path, [])
         if not any(r.get("bootstrap") for r in log):
             pending = next((r for r in log if "bootstrap_pending" in r), None)
             lineage_exists = os.path.exists(
@@ -307,18 +298,18 @@ def run_incremental_build(
                 # bootstrap (build_planet resumes finished stages)
                 if pending is None:
                     log.append({"bootstrap_pending": batch_id})
-                    write_log(log)
+                    atomic_json_write(log_path, log)
                 build_planet(spark, batch_df, planet_dir, config)
-                log = read_log()
+                log = read_json(log_path, [])
                 for r in log:
                     if "bootstrap_pending" in r:
                         bid = r.pop("bootstrap_pending")
                         r.update({"bootstrap": True, "stream_batch_id": bid})
-                write_log(log)
+                atomic_json_write(log_path, log)
                 return
             # lineage but no compaction log: adopt an offline build
             log.append({"bootstrap": True, "prebuilt": True})
-            write_log(log)
+            atomic_json_write(log_path, log)
         applied = {r["stream_batch_id"] for r in log if "stream_batch_id" in r}
         if batch_id in applied:
             return  # crash-replay of an already-folded batch
@@ -336,7 +327,7 @@ def run_incremental_build(
             # since the last flush; a crash between compact and flush
             # self-heals — the next batch sees count > flush_every
             since_flush = 0
-            for r in read_log():
+            for r in read_json(log_path, []):
                 if r.get("flush"):
                     since_flush = 0
                 elif not r.get("bootstrap") and "bootstrap_pending" not in r:

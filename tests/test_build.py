@@ -70,3 +70,86 @@ def test_build_resume_skips_completed_stages(spark, tmp_path):
     cfg2 = BuildConfig(leaf_zoom=12, sort_partitions=2)
     build_planet(spark, pages, planet, cfg2)
     assert os.path.getmtime(os.path.join(planet, "points_sorted", "_lineage.json")) > mtime
+
+
+def _sidecar(planet, stage):
+    with open(os.path.join(planet, stage, "_lineage.json")) as f:
+        return json.load(f)
+
+
+def _tile_md5(df):
+    return {
+        (r.zoom, r.tile_h): r.m
+        for r in df.select("zoom", "tile_h", F.md5("payload").alias("m")).collect()
+    }
+
+
+STAGES = ["points_sorted", "tile_tree", "content", "tiles", "tile_manifest", "zoom_metrics"]
+
+
+def test_build_recomputes_when_pages_input_changes(spark, tmp_path):
+    """The resume key covers the pages' files (path, size, mtime_ns) and
+    every upstream stage's key: rewriting the pages parquet with other
+    rows recomputes points_sorted and everything downstream, and the
+    tiles equal a fresh build over the new pages."""
+    cfg = BuildConfig(leaf_zoom=10, sort_partitions=2)
+    pages_path = str(tmp_path / "pages")
+    planet = str(tmp_path / "planet")
+    synthesize_pages(spark, 120, seed=7, partitions=2).write.parquet(pages_path)
+    build_planet(spark, spark.read.parquet(pages_path), planet, cfg)
+    before = {st: _sidecar(planet, st) for st in STAGES}
+    assert before["points_sorted"]["config"] == cfg.fingerprint()
+
+    synthesize_pages(spark, 90, seed=8, partitions=2).write.mode("overwrite").parquet(
+        pages_path
+    )
+    pages = spark.read.parquet(pages_path)
+    out = build_planet(spark, pages, planet, cfg)
+    after = {st: _sidecar(planet, st) for st in STAGES}
+    for st in STAGES:
+        assert after[st]["fingerprint"] != before[st]["fingerprint"], st
+        assert after[st]["config"] == before[st]["config"], st
+
+    fresh = build_planet(spark, pages, str(tmp_path / "fresh"), cfg)
+    assert _tile_md5(out["tiles"]) == _tile_md5(fresh["tiles"]) and _tile_md5(
+        fresh["tiles"]
+    )
+    assert after["points_sorted"]["row_count"] == fresh["points_sorted"].count()
+
+
+def test_build_recomputes_stage_with_torn_lineage(spark, tmp_path):
+    """A truncated ``_lineage.json`` is no commit record: its stage
+    recomputes (and commits a whole sidecar); other stages resume."""
+    planet = str(tmp_path / "planet")
+    pages = synthesize_pages(spark, 120, seed=7, partitions=2)
+    cfg = BuildConfig(leaf_zoom=10, sort_partitions=2)
+    build_planet(spark, pages, planet, cfg)
+    lin = os.path.join(planet, "tile_tree", "_lineage.json")
+    with open(lin) as f:
+        text = f.read()
+    with open(lin, "w") as f:
+        f.write(text[: len(text) // 2])
+    untouched = os.stat(os.path.join(planet, "content", "_lineage.json")).st_mtime_ns
+
+    out = build_planet(spark, pages, planet, cfg)
+    tree = _sidecar(planet, "tile_tree")
+    assert tree["fingerprint"] == json.loads(text)["fingerprint"]
+    assert tree["row_count"] == out["tree"].count() > 0
+    assert os.stat(os.path.join(planet, "content", "_lineage.json")).st_mtime_ns == untouched
+
+
+def test_build_recomputes_stage_with_data_but_no_lineage(spark, tmp_path):
+    """Crash point between a stage's data write and its sidecar write:
+    the data alone does not count as committed, so the stage recomputes."""
+    planet = str(tmp_path / "planet")
+    pages = synthesize_pages(spark, 120, seed=7, partitions=2)
+    cfg = BuildConfig(leaf_zoom=10, sort_partitions=2)
+    first = build_planet(spark, pages, planet, cfg)
+    n_points = first["points_sorted"].count()
+    lin = os.path.join(planet, "points_sorted", "_lineage.json")
+    os.remove(lin)
+
+    out = build_planet(spark, pages, planet, cfg)
+    assert os.path.exists(lin)  # only a recompute writes the sidecar
+    assert _sidecar(planet, "points_sorted")["row_count"] == n_points
+    assert out["points_sorted"].count() == n_points

@@ -20,6 +20,15 @@ from pvt_spark.plans.pipeline import BuildConfig, build_planet
 from pvt_spark.sources.pages import synthesize_pages
 
 
+FOLD_STEPS = [
+    "delta_points", "dirty_set", "points_append", "content_append",
+    "tree_merge", "dirty_cluster", "manifest_metrics", "recompose",
+]
+BUILD_STAGES = [
+    "points_sorted", "tile_tree", "content", "tiles", "tile_manifest", "zoom_metrics",
+]
+
+
 def _tile_map(df):
     return {
         (r.zoom, r.tile_h): (r.m, r.feature_count, r.layer_count)
@@ -81,6 +90,21 @@ def test_compaction_equals_full_rebuild(spark, tmp_path):
     assert _rows(spark.read.parquet(inc_dir + "/points_sorted").select(*keys)) == _rows(
         spark.read.parquet(full_dir + "/points_sorted").select(*keys)
     )
+
+    # the run records the benchmark reads per layer: each fold record
+    # carries exactly the fold step names (perfbench/layers.py
+    # FOLD_STEPS) and every build stage's sidecar keeps its wall_sec
+    with open(os.path.join(inc_dir, "_compaction.json")) as f:
+        log = json.load(f)
+    assert [sorted(r["steps"]) for r in log] == [sorted(FOLD_STEPS)] * 2
+    stages = [
+        st for st in os.listdir(inc_dir)
+        if os.path.exists(os.path.join(inc_dir, st, "_lineage.json"))
+    ]
+    assert sorted(stages) == sorted(BUILD_STAGES)
+    for st in stages:
+        with open(os.path.join(inc_dir, st, "_lineage.json")) as f:
+            assert isinstance(json.load(f)["wall_sec"], float), st
 
     # serve path resolves through the generation view pre-materialize
     from pvt_spark.operators.serve import open_planet
