@@ -8,7 +8,11 @@ Subcommands (python bench_extra.py <cmd>):
              compacted planet (warm session, N random z12 tiles), reported
              as serve_tile_p50_ms / p99 next to a plan check that the scan
              stays partition-pruned (zoom partition filter + tile_h
-             row-group predicate). Reference figure: 20-50 ms/tile
+             row-group predicate). The same sample through tile_lookup
+             over open_planet's tiles (the served path, no Spark job)
+             reports serve_open_p50_ms / p99, the row groups whose tile_h
+             column one lookup reads, and the wall of building the serving
+             index. Reference figure: 20-50 ms/tile
              (BASELINE.md, /root/reference/docs/hilbert.md:11).
   compact  — per-step instrumented compaction folds at a configurable page
              count (PVT_XB_PAGES, default 100k) — the iteration harness the
@@ -44,12 +48,15 @@ def _spark(cpus: int | None = None, app: str = "pvt-bench-extra"):
 def cmd_serve() -> dict:
     """Build (or reuse PVT_XB_PLANET) a planet, fold one 0.5% delta so the
     serve path exercises the compaction generation view, then time N
-    point lookups through operators/serve.tile_lookup."""
+    point lookups through a pushed-predicate scan and through
+    operators/serve.tile_lookup over open_planet's served tiles."""
     from pyspark.sql import functions as F
 
+    from pvt_spark.operators import serve
     from pvt_spark.plans.compaction import compact_planet, read_tiles
     from pvt_spark.plans.pipeline import BuildConfig, build_planet
     from pvt_spark.sources.pages import synthesize_pages
+    from pvt_spark.tile import Tile
 
     n_pages = int(os.environ.get("PVT_XB_PAGES", "1000000"))
     n_lookups = int(os.environ.get("PVT_XB_LOOKUPS", "100"))
@@ -114,6 +121,30 @@ def cmd_serve() -> dict:
         )
         out["serve_plan_partition_pruned"] = "PartitionFilters: [isnotnull(zoom" in plan or "zoom#" in plan.split("PartitionFilters")[-1][:200]
         out["serve_plan_pushed_tile_h"] = "PushedFilters: [IsNotNull(tile_h)" in plan or "EqualTo(tile_h" in plan
+
+        # served path: the same sample through tile_lookup over the
+        # tiles open_planet returns (in-process pyarrow read, no job)
+        t0 = time.time()
+        serve._index_planet(planet)
+        out["serve_index_open_ms"] = round((time.time() - t0) * 1000, 1)
+        served = serve.open_planet(spark, planet)["tiles"]
+        index = serve._SERVED[served]
+
+        def served_lookup(z, th):
+            t = Tile.from_zh(z, th)
+            return serve.tile_lookup(served, z, t.x, t.y).select("payload_size").collect()
+
+        served_lookup(*sample[0])
+        walls, read0 = [], index.row_groups_read
+        for z, th in sample:
+            t0 = time.time()
+            rows = served_lookup(z, th)
+            walls.append((time.time() - t0) * 1000)
+            assert rows, f"tile ({z},{th}) missing"
+        walls.sort()
+        out["serve_open_p50_ms"] = round(walls[len(walls) // 2], 1)
+        out["serve_open_p99_ms"] = round(walls[min(len(walls) - 1, int(len(walls) * 0.99))], 1)
+        out["serve_row_groups_per_lookup"] = round((index.row_groups_read - read0) / len(sample), 2)
     finally:
         spark.stop()
         shutil.rmtree(tmp, ignore_errors=True)

@@ -5,12 +5,11 @@ The toy-constant version of this shape lives in queries.q31 (oracle-
 certified); this module is the scale path the bench exercises at 1e5+
 vectors with sqrt(N) centroids:
 
-- ``kmeans_fit``: distributed Lloyd iterations. Assignment is
-  map-side (zero shuffle) against the always-small (sqrt(N)-row)
-  broadcast centroid set — a per-Arrow-batch BLAS matmul by default,
-  or the retained pure-SQL argmin; the update step is a posexplode to
-  (cell, dim) rows + avg — one narrow shuffle per round. No RNG
-  (hash-ordered deterministic init). At planet scale you fit on a
+- ``kmeans_fit``: distributed Lloyd iterations. Each round is one
+  map-side pass (zero shuffle) against the always-small (sqrt(N)-row)
+  broadcast centroid set: a per-Arrow-batch BLAS argmin that emits
+  per-cell partial sums, merged on the driver. No RNG (hash-ordered
+  deterministic init). At planet scale you fit on a
   sample (``vectors.sample(...)``) and assign the full table once.
 - ``ivf_assign``: nearest-centroid cell id per vector.
 - ``ivf_search``: per query, rank the nprobe nearest cells, then an
@@ -75,14 +74,13 @@ def kmeans_fit(
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "vec",
-    method: str = "numpy",
 ) -> DataFrame:
     """vectors(id, vec array<double>) -> centroids(centroid_id bigint,
     cv array<double>). Init is fully deterministic: the ``n_centroids``
     rows with the smallest ``xxhash64(id)`` (a hash-ordered
     pseudo-random sample — no RNG, stable across partitionings). The
-    Lloyd update is deterministic up to floating point: ``avg`` merges
-    partial sums in scheduling order, so centroid coordinates can
+    Lloyd update is deterministic up to floating point: per-batch
+    partial sums merge in batch order, so centroid coordinates can
     differ in the last ulp across cluster layouts, which can flip a
     near-tie assignment — runs on a fixed layout reproduce exactly.
     Cells that lose all members drop out (standard k-means behavior),
@@ -104,86 +102,57 @@ def kmeans_fit(
     cents_rows = [(int(i), list(r[1])) for i, r in enumerate(init_rows)]
     if not cents_rows:
         return local_frame(spark, [], "centroid_id long, cv array<double>")
-    dim = len(cents_rows[0][1])
     sc = spark.sparkContext
     for _ in range(iters):
-        if method == "numpy":
-            # FUSED assign + partial update: one mapInPandas pass emits
-            # per-batch (cell, count, sum-vector) partials — k rows per
-            # Arrow batch — merged driver-side. One job per Lloyd round,
-            # no per-round assignment stage, and no 64-column aggregate
-            # whose generated code costs seconds to compile. Partial
-            # sums merge in batch order (deterministic for a fixed
-            # layout) — the same documented last-ulp contract as the
-            # shuffled avg it replaces.
-            cids = np.array([i for i, _ in cents_rows], dtype=np.int64)
-            cmat = np.array([cv for _, cv in cents_rows], dtype=np.float64)
-            bc = sc.broadcast((cids, cmat))
+        # FUSED assign + partial update: one mapInPandas pass emits
+        # per-batch (cell, count, sum-vector) partials — k rows per
+        # Arrow batch — merged driver-side. One job per Lloyd round,
+        # no per-round assignment stage, and no 64-column aggregate
+        # whose generated code costs seconds to compile. Partial
+        # sums merge in batch order (deterministic for a fixed
+        # layout).
+        cids = np.array([i for i, _ in cents_rows], dtype=np.int64)
+        cmat = np.array([cv for _, cv in cents_rows], dtype=np.float64)
+        bc = sc.broadcast((cids, cmat))
 
-            def partials(batches):
-                ids, cm = bc.value
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    v = np.vstack(pdf[vec_col].to_numpy())
-                    a = _argmin_cells(v, cm)  # first min = lowest id
-                    sums = np.zeros((len(ids), v.shape[1]))
-                    np.add.at(sums, a, v)
-                    counts = np.bincount(a, minlength=len(ids))
-                    nz = np.flatnonzero(counts)
-                    yield pd.DataFrame(
-                        {
-                            "centroid_id": ids[nz],
-                            "n": counts[nz],
-                            "s": [sums[i] for i in nz],
-                        }
-                    )
+        def partials(batches):
+            ids, cm = bc.value
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                v = np.vstack(pdf[vec_col].to_numpy())
+                a = _argmin_cells(v, cm)  # first min = lowest id
+                sums = np.zeros((len(ids), v.shape[1]))
+                np.add.at(sums, a, v)
+                counts = np.bincount(a, minlength=len(ids))
+                nz = np.flatnonzero(counts)
+                yield pd.DataFrame(
+                    {
+                        "centroid_id": ids[nz],
+                        "n": counts[nz],
+                        "s": [sums[i] for i in nz],
+                    }
+                )
 
-            rows = (
-                vectors.select(vec_col)
-                .mapInPandas(
-                    partials, "centroid_id long, n long, s array<double>"
-                )
-                .collect()
+        rows = (
+            vectors.select(vec_col)
+            .mapInPandas(
+                partials, "centroid_id long, n long, s array<double>"
             )
-            bc.unpersist()
-            acc: dict[int, tuple[int, np.ndarray]] = {}
-            for r in rows:
-                n0, s0 = acc.get(int(r.centroid_id), (0, None))
-                sv = np.asarray(r.s, dtype=np.float64)
-                acc[int(r.centroid_id)] = (
-                    n0 + int(r.n),
-                    sv if s0 is None else s0 + sv,
-                )
-            cents_rows = sorted(
-                (cid, (s / n).tolist()) for cid, (n, s) in acc.items()
+            .collect()
+        )
+        bc.unpersist()
+        acc: dict[int, tuple[int, np.ndarray]] = {}
+        for r in rows:
+            n0, s0 = acc.get(int(r.centroid_id), (0, None))
+            sv = np.asarray(r.s, dtype=np.float64)
+            acc[int(r.centroid_id)] = (
+                n0 + int(r.n),
+                sv if s0 is None else s0 + sv,
             )
-        else:
-            cents_df = local_frame(
-                spark, cents_rows, "centroid_id long, cv array<double>"
-            )
-            assigned = ivf_assign(
-                vectors, cents_df, id_col=id_col, vec_col=vec_col,
-                method=method,
-            )
-            # update: element-wise mean per cell — (cell, dim) rows keep
-            # the shuffle narrow regardless of dimension (the pinned
-            # pure-SQL lane)
-            dims = assigned.select(
-                "centroid_id", F.posexplode(vec_col).alias("dim", "x")
-            )
-            agg_rows = (
-                dims.groupBy("centroid_id", "dim")
-                .agg(F.avg("x").alias("m"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            by_cell: dict[int, dict[int, float]] = {}
-            for r in agg_rows:
-                by_cell.setdefault(int(r.centroid_id), {})[int(r.dim)] = r.m
-            cents_rows = sorted(
-                (cid, [ms[d] for d in sorted(ms)])
-                for cid, ms in by_cell.items()
-            )
+        cents_rows = sorted(
+            (cid, (s / n).tolist()) for cid, (n, s) in acc.items()
+        )
     return local_frame(spark, cents_rows, "centroid_id long, cv array<double>")
 
 
@@ -231,8 +200,7 @@ def ivf_assign(
         raise ValueError(f"unsupported method={method}")
     # standalone use: the centroid broadcast must outlive the returned
     # lazy DataFrame, so it is left for the ContextCleaner (the same
-    # lifetime Spark's own broadcast joins have); kmeans_fit uses
-    # _assign_numpy directly and releases it per round
+    # lifetime Spark's own broadcast joins have)
     assigned, _bc = _assign_numpy(vectors, centroids, vec_col)
     return assigned
 
