@@ -205,14 +205,21 @@ def ivf_assign(
     return assigned
 
 
-def _assign_numpy(vectors: DataFrame, centroids: DataFrame, vec_col: str):
-    """(assigned DataFrame, centroid Broadcast) — caller owns release."""
+def _broadcast_centroids(vectors: DataFrame, centroids: DataFrame, *extra):
+    """Broadcast ``(centroid ids, centroid matrix, *extra)``, rows sorted
+    by centroid_id (so an argmin tie breaks to the lowest id); raises on
+    an empty centroid table. Caller owns the broadcast's release."""
     rows = sorted(centroids.collect(), key=lambda r: r.centroid_id)
     if not rows:
         raise ValueError("empty centroid table")
     cids = np.array([r.centroid_id for r in rows], dtype=np.int64)
     cmat = np.array([r.cv for r in rows], dtype=np.float64)
-    bc = vectors.sparkSession.sparkContext.broadcast((cids, cmat))
+    return vectors.sparkSession.sparkContext.broadcast((cids, cmat, *extra))
+
+
+def _assign_numpy(vectors: DataFrame, centroids: DataFrame, vec_col: str):
+    """(assigned DataFrame, centroid Broadcast) — caller owns release."""
+    bc = _broadcast_centroids(vectors, centroids)
 
     @F.pandas_udf(LongType())
     def nearest(vec: pd.Series) -> pd.Series:
@@ -241,14 +248,7 @@ def _assign_encode_fused(vectors: DataFrame, centroids: DataFrame, codebook,
     ``_assign_numpy``)."""
     from .pq import _argmin_codes_exact, quantize_np
 
-    rows = sorted(centroids.collect(), key=lambda r: r.centroid_id)
-    if not rows:
-        raise ValueError("empty centroid table")
-    cids = np.array([r.centroid_id for r in rows], dtype=np.int64)
-    cmat = np.array([r.cv for r in rows], dtype=np.float64)
-    bc = vectors.sparkSession.sparkContext.broadcast(
-        (cids, cmat, codebook.codes)
-    )
+    bc = _broadcast_centroids(vectors, centroids, codebook.codes)
 
     @F.pandas_udf("centroid_id bigint, codes array<int>")
     def fused(vec: pd.Series) -> pd.DataFrame:

@@ -53,6 +53,17 @@ TILE_SCHEMA = (
 )
 
 
+def tile_keys(zoom, tile_h) -> np.ndarray:
+    """(zoom, tile_h) -> int64 tile keys ``zoom << 50 | tile_h``, which
+    sort as (zoom, tile_h) (tile_h < 4^zoom <= 2^28)."""
+    return (np.asarray(zoom, dtype=np.int64) << 50) | np.asarray(tile_h, dtype=np.int64)
+
+
+def split_tile_keys(keys: np.ndarray):
+    """``tile_keys`` -> (zoom, tile_h) int64 arrays."""
+    return keys >> 50, keys & ((1 << 50) - 1)
+
+
 def _feature_tile_id(zoom: np.ndarray, h_signed: np.ndarray) -> np.ndarray:
     """PVT feature id = the feature's own h, 52-bit packed with zoom
     (reference src/tile.rs:141-152 incl. the mod-wrap overflow branch)."""
@@ -429,8 +440,9 @@ def geometry_chunks(
 
     render_features(zoom, tile_h, feature_id, h, layer, out_tags,
     geom_x array<long>, geom_y array<long>); ``layer`` already exploded.
-    Chunks from this path and from ``points_chunks`` share one format,
-    so a mixed node/way/relation build merges them in ONE phase 2.
+    Chunks from this path and the point fast path's boundary chunks
+    share one format, so a mixed node/way/relation build merges them in
+    ONE phase 2 (``compose_points_presorted(extra_chunks=...)``).
     """
     spark = render_features.sparkSession
     partitions = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -708,9 +720,7 @@ def _chunk_rows_for_tile(zoom, tile_h, s, e, layer_rank, layers, hs, raw_ids, n_
     return rows
 
 
-def _phase1_points_stream(
-    batches, tolerance: float, emit_finals: bool = True, exclude_keys=None
-):
+def _phase1_points_stream(batches, tolerance: float, exclude_keys=None):
     """Stateless per-batch processing with per-file-run boundary chunking.
 
     Safety argument: a tile's rows live in exactly ONE content file
@@ -721,6 +731,8 @@ def _phase1_points_stream(
     chunks (their rows may continue in another run/batch/partition);
     strictly interior tiles are provably complete -> final payloads.
     No cross-batch carry state needed — chunks merge in phase 2.
+    Tiles whose key (``tile_keys``) is in the sorted int64 array
+    ``exclude_keys`` are emitted as chunks too.
     """
     cols = [
         "zoom", "tile_h", "final", "tile_id", "layer_count", "feature_count",
@@ -757,23 +769,21 @@ def _phase1_points_stream(
         pts[0::2] = px
         pts[1::2] = py
         fids = _feature_tile_id(zoom, hs)
-        tb = [0] + list(
-            1 + np.flatnonzero((tile_h[1:] != tile_h[:-1]) | (zoom[1:] != zoom[:-1]))
-        ) + [n]
-        n_tiles = len(tb) - 1
+        tb = np.concatenate([
+            [0],
+            1 + np.flatnonzero((tile_h[1:] != tile_h[:-1]) | (zoom[1:] != zoom[:-1])),
+            [n],
+        ])
+        boundary = np.zeros(len(tb) - 1, dtype=bool)
+        boundary[[0, -1]] = True
+        if exclude_keys is not None and len(exclude_keys):
+            keys = tile_keys(zoom[tb[:-1]], tile_h[tb[:-1]])
+            at = np.searchsorted(exclude_keys, keys).clip(max=len(exclude_keys) - 1)
+            boundary |= exclude_keys[at] == keys
         rows = []
         final_slices = []
-        for i, (s_, e_) in enumerate(zip(tb[:-1], tb[1:])):
-            boundary = (
-                (not emit_finals)
-                or i == 0
-                or i == n_tiles - 1
-                or (
-                    exclude_keys is not None
-                    and ((int(zoom[s_]) << 50) | int(tile_h[s_])) in exclude_keys
-                )
-            )
-            if boundary:
+        for i, (s_, e_) in enumerate(zip(tb[:-1].tolist(), tb[1:].tolist())):
+            if boundary[i]:
                 rows.extend(
                     _chunk_rows_for_tile(
                         int(zoom[s_]), int(tile_h[s_]), s_, e_, layer_rank, layers,
@@ -805,33 +815,6 @@ def _phase1_points_stream(
         yield pd.DataFrame(rows, columns=cols)
 
 
-def points_chunks(
-    render_features: DataFrame,
-    tolerance: float = DEFAULT_TOLERANCE,
-    file_marker: bool = True,
-) -> DataFrame:
-    """Point fast path in all-chunks mode (CHUNK_SCHEMA) for MIXED builds:
-    every tile emits mergeable chunks (no finals), so point chunks can be
-    unioned with ``geometry_chunks`` from ways/relations and merged once.
-
-    Input columns as ``compose_points_presorted`` (primitive-only, input
-    already clustered by (zoom, tile_h)); runs shuffle-free.
-    ``file_marker=False``: the input is not a single file scan (e.g. an
-    in-memory clustered frame, where ``input_file_name()`` is undefined)
-    — batch boundaries alone delimit runs, which is safe because chunks
-    merge in phase 2 regardless of how a tile's rows split.
-    """
-    marker = F.xxhash64(F.input_file_name()) if file_marker else F.lit(0)
-    with_file = render_features.withColumn("_file", marker)
-    ph1 = with_file.mapInPandas(
-        lambda it: _phase1_points_stream(it, tolerance, emit_finals=False),
-        UNIFIED_SCHEMA,
-    )
-    return ph1.select(
-        "zoom", "tile_h", F.lit(0).alias("salt"), "layer", "n_features", "chunk"
-    )
-
-
 def compose_points_presorted(
     render_features: DataFrame,
     layer_order: list[str],
@@ -854,10 +837,10 @@ def compose_points_presorted(
     almost all of them) and mergeable chunks only for the first/last
     tile of each partition; phase 2 merges those few boundary tiles.
 
-    Mixed builds: ``exclude_keys`` (frozenset of (zoom << 50) | tile_h)
-    demotes the listed tiles from finals to chunks so their point rows
-    can merge with ``extra_chunks`` (way/relation geometry chunks) in
-    phase 2 — every other tile keeps the finals fast path.
+    Mixed builds: ``exclude_keys`` (sorted int64 ``tile_keys``) demotes
+    the listed tiles from finals to chunks so their point rows can merge
+    with ``extra_chunks`` (way/relation geometry chunks) in phase 2 —
+    every other tile keeps the finals fast path.
     """
     spark = render_features.sparkSession
     merge_partitions = merge_partitions or 8
@@ -873,7 +856,7 @@ def compose_points_presorted(
     marker = F.xxhash64(F.input_file_name()) if file_marker else F.lit(0)
     with_file = render_features.withColumn("_file", marker)
     ph1 = with_file.mapInPandas(
-        lambda it: _phase1_points_stream(it, tolerance, True, bc_exclude),
+        lambda it: _phase1_points_stream(it, tolerance, bc_exclude),
         UNIFIED_SCHEMA,
     ).persist()
     finals = ph1.where(F.col("final")).select(*_TILE_COLS)

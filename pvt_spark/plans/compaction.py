@@ -11,24 +11,28 @@ shape. This module maintains the build incrementally, log-structured:
   (both derivations are purely per-feature, so appends compose —
   feature ids are content-derived ``xxhash64(url, mention_idx)`` and
   identical between a delta build and a full rebuild).
-- **the tile tree merges associatively at the LEAF level** (counts
-  sum, h_min/h_max combine) and interior zooms rebuild from the merged
-  leaf set: leaves are tile-bounded (never point-bounded), so the
-  16x-shrinking rollup costs seconds regardless of planet size, while
-  the expensive leaves-from-points aggregation runs on the delta only.
-- **tile payloads recompose for DIRTY tiles only** — the invalidation
-  set from ``streaming.incremental.dirty_tiles_for_points`` (each
-  delta point's leaf + even-zoom ancestor ladder). Recomposed tiles
-  land in a new ``tiles_delta/gen=N`` generation; ``read_tiles``
-  resolves latest-generation-wins per (zoom, tile_h). Work scales
-  with the dirty-tile content, not the planet.
+- **the tile tree is spliced, not rebuilt**: the delta's leaf
+  aggregate is collected once and its even-zoom ancestor ladder
+  updates the tree associatively (counts sum, child masks OR, h
+  extents widen, leaf counts grow by the new leaves beneath), so the
+  expensive leaves-from-points aggregation runs on the delta only.
+- **tile payloads recompose for DIRTY tiles only** — each delta leaf
+  plus its even-zoom ancestor ladder. Recomposed tiles land in a new
+  ``tiles_delta/gen=N`` generation; ``read_tiles`` resolves
+  latest-generation-wins per (zoom, tile_h). Work scales with the
+  dirty-tile content, not the planet.
 
-Scale note on the dirty-content scan: the exact dirty-key restriction
-is a broadcast semi-join (the dirty set is tile-bounded), fronted by a
-coarse per-zoom ``tile_h BETWEEN min AND max`` predicate that DOES
-push down to parquet row-group stats — content is written tile_h-
-sorted within zoom partitions, so most of the planet's row groups are
-skipped before the join runs.
+Scale note: every tile-key set of a fold is int64 numpy columns on the
+driver — the delta leaf aggregate (``leaf_h``, ``n_count``, ``h_min``,
+``h_max``, one Arrow collect) and the dirty (zoom, tile_h) keys, 16
+bytes per key, the same order as the dirty-set broadcast every fold
+pays. The ladder, the tree-splice aggregation, the defer split and the
+per-zoom interval cover are vectorized over them. The exact
+dirty-content restriction is a broadcast semi-join, fronted by a
+per-zoom ``tile_h`` interval cover that pushes down to parquet
+row-group stats — content is written tile_h-sorted within zoom
+partitions, so most of the planet's row groups are skipped before the
+join runs.
 
 Equivalence contract (tested): base build + N compactions produces
 md5-identical tile payloads, an identical tree, and an identical
@@ -41,16 +45,17 @@ import os
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..manifest import compile_rules
+from ..operators.compose import split_tile_keys, tile_keys
 from ..operators.content import tile_manifest
 from ..operators.leaves import build_leaves
-from ..operators.tree import build_tile_tree
-from ..session import local_frame
-from ..streaming.incremental import dirty_tiles_for_points
+from ..session import int64_columns, local_frame
 from .pipeline import (
     BuildConfig,
     atomic_json_write,
@@ -75,56 +80,47 @@ def _append_log(planet_dir: str, record: dict) -> None:
 
 
 def _entity_counts(cols) -> list[str]:
-    # leaf_count is derived (1 per leaf row), not an entity count —
-    # build_tile_tree re-adds it
+    # leaf_count is derived (1 per leaf row), not an entity count
     return [c for c in cols if c.endswith("_count") and c != "leaf_count"]
 
 
-def merge_leaf_levels(
-    old_leaf_level: DataFrame, delta_leaves: DataFrame
-) -> DataFrame:
-    """Associative merge of two leaf aggregates -> build_leaves schema.
+_KEYS_DDL = "zoom int, tile_h long"
+_LEAF_COLS = ("leaf_h", "n_count", "h_min", "h_max")
 
-    ``old_leaf_level`` is the tree's zoom==leaf_zoom slice (tile_h key);
-    ``delta_leaves`` is ``build_leaves`` output (leaf_h key). Count
-    columns missing on either side (entity pivots from mixed builds)
-    are zero-filled so a points-only delta merges into a mixed base.
-    """
-    old = old_leaf_level.select(
-        F.col("tile_h").alias("leaf_h"),
-        *_entity_counts(old_leaf_level.columns),
-        "h_min",
-        "h_max",
-    )
-    count_cols = sorted(
-        set(_entity_counts(old.columns)) | set(_entity_counts(delta_leaves.columns))
-    )
 
-    def align(df: DataFrame) -> DataFrame:
-        cols = [F.col("leaf_h")]
-        for c in count_cols:
-            cols.append(
-                F.col(c).alias(c) if c in df.columns else F.lit(0).cast("long").alias(c)
-            )
-        return df.select(*cols, "h_min", "h_max")
+def _keys_frame(spark: SparkSession, zoom, tile_h) -> DataFrame:
+    return local_frame(spark, {"zoom": zoom, "tile_h": tile_h}, _KEYS_DDL)
 
-    return (
-        align(old)
-        .unionByName(align(delta_leaves))
-        .groupBy("leaf_h")
-        .agg(
-            *[F.sum(c).alias(c) for c in count_cols],
-            F.min("h_min").alias("h_min"),
-            F.max("h_max").alias("h_max"),
-        )
-    )
+
+class Ladder(NamedTuple):
+    """The even-zoom ancestor ladder of a set of leaves: the distinct
+    (zoom, tile_h) keys in (zoom, tile_h) order — a fold's dirty set —
+    and the ``order``/``starts`` that reduce the per-(zoom, leaf)
+    entries (row-major over zooms ``leaf_zoom, leaf_zoom - 2, ... 0``)
+    onto those keys with ``ufunc.reduceat``."""
+
+    zoom: np.ndarray
+    tile_h: np.ndarray
+    order: np.ndarray
+    starts: np.ndarray
+
+
+def _ladder(leaf_h: np.ndarray, leaf_zoom: int) -> Ladder:
+    zooms = np.arange(leaf_zoom, -1, -2, dtype=np.int64)
+    keys = tile_keys(
+        zooms[:, None], leaf_h[None, :] >> (2 * (leaf_zoom - zooms))[:, None]
+    ).ravel()
+    order = np.argsort(keys, kind="stable")
+    keys = keys[order]
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    return Ladder(*split_tile_keys(keys[starts]), order, starts)
 
 
 def _tree_delta_splice(
     spark: SparkSession,
     old_tree: DataFrame,
-    delta_leaf_rows: list,
-    dirty_keys: list,
+    leaves: dict,
+    ladder: Ladder,
     leaf_zoom: int,
 ) -> DataFrame:
     """Associative DELTA update of the tile tree for an append-only page
@@ -133,61 +129,53 @@ def _tree_delta_splice(
     beneath it. Exactly equal to rebuilding the rollup from the merged
     leaf set (all updates are integer sums / min / max / bit_or —
     order-independent), but the work is O(delta ladder) + two scans of
-    the old tree instead of a leaf-set shuffle + a 7-level explode
-    aggregate over EVERY leaf per fold.
+    the old tree instead of a leaf-set shuffle + an explode aggregate
+    over EVERY leaf per fold.
 
-    ``delta_leaf_rows`` are pre-collected ``build_leaves`` rows (micro-
-    batch sized; the caller enforces the collect cap and falls back to
-    the full rebuild above it — the same rows also derive the dirty
-    set ``dirty_keys``, the sorted ladder keys of those leaves, so the
-    fold pays ONE leaf collect total).
+    ``leaves`` holds the delta's ``build_leaves`` columns as int64
+    arrays; ``ladder`` is their ancestor ladder (the fold's dirty set),
+    aggregated here with numpy.
     """
-    rows = delta_leaf_rows
-    zooms = list(range(leaf_zoom, -1, -2))
-    dkeys_df = local_frame(spark, dirty_keys, "zoom int, tile_h long")
-    exist = {
-        (r.zoom, r.tile_h)
-        for r in old_tree.join(
-            F.broadcast(dkeys_df), ["zoom", "tile_h"], "left_semi"
+    leaf_h = leaves["leaf_h"]
+    exist = tile_keys(
+        *int64_columns(
+            old_tree.join(
+                F.broadcast(_keys_frame(spark, ladder.zoom, ladder.tile_h)),
+                ["zoom", "tile_h"],
+                "left_semi",
+            ).select("zoom", "tile_h")
         )
-        .select("zoom", "tile_h")
-        .collect()
+    )
+    n_z = leaf_zoom // 2 + 1
+    shift = 2 * (leaf_zoom - np.arange(leaf_zoom, -1, -2, dtype=np.int64))[:, None]
+    # per-(zoom, leaf) entries: the bit of the z+2 child holding the
+    # leaf (none at the leaf level), and whether the leaf is new
+    bit = np.where(shift > 0, 1 << ((leaf_h >> np.maximum(shift - 4, 0)) & 15), 0)
+    is_new = ~np.isin(tile_keys(leaf_zoom, leaf_h), exist)
+
+    def reduce(ufunc, per_entry):
+        return ufunc.reduceat(per_entry.ravel()[ladder.order], ladder.starts)
+
+    def tiled(a):
+        return np.broadcast_to(a, (n_z, len(leaf_h)))
+
+    d = {
+        "zoom": ladder.zoom,
+        "tile_h": ladder.tile_h,
+        "d_mask": reduce(np.bitwise_or, bit),
+        "d_n": reduce(np.add, tiled(leaves["n_count"])),
+        "d_leaf": reduce(np.add, tiled(is_new.astype(np.int64))),
+        "d_hmin": reduce(np.minimum, tiled(leaves["h_min"])),
+        "d_hmax": reduce(np.maximum, tiled(leaves["h_max"])),
     }
-    # driver-side ladder aggregation of the delta leaves
-    acc: dict[tuple[int, int], list] = {}  # key -> [mask, n, leaf_inc, hmin, hmax]
-    for r in rows:
-        lh, n, hmin, hmax = int(r.leaf_h), int(r.n_count), int(r.h_min), int(r.h_max)
-        is_new = (leaf_zoom, lh) not in exist
-        for z in zooms:
-            key = (z, lh >> (2 * (leaf_zoom - z)))
-            a = acc.get(key)
-            if a is None:
-                a = acc[key] = [0, 0, 0, hmin, hmax]
-            if z == leaf_zoom:
-                a[2] = 1 if is_new else 0
-            else:
-                a[0] |= 1 << ((lh >> (2 * (leaf_zoom - z - 2))) & 15)
-                a[2] += 1 if is_new else 0
-            a[1] += n
-            a[3] = min(a[3], hmin)
-            a[4] = max(a[4], hmax)
+    old = np.isin(tile_keys(ladder.zoom, ladder.tile_h), exist)
     count_cols = _entity_counts(old_tree.columns)
-    merge_rows = [
-        (z, th, a[0], a[1], a[2], a[3], a[4])
-        for (z, th), a in acc.items()
-        if (z, th) in exist
-    ]
-    new_rows = [
-        (z, th, a[0], a[1], a[2] if z < leaf_zoom else 1, a[3], a[4])
-        for (z, th), a in acc.items()
-        if (z, th) not in exist
-    ]
     dschema = (
         "zoom int, tile_h long, d_mask int, d_n long, d_leaf long, "
         "d_hmin long, d_hmax long"
     )
     merged = old_tree.join(
-        F.broadcast(local_frame(spark, merge_rows, dschema)),
+        F.broadcast(local_frame(spark, {k: v[old] for k, v in d.items()}, dschema)),
         ["zoom", "tile_h"],
         "left",
     ).select(
@@ -215,7 +203,7 @@ def _tree_delta_splice(
             F.col("h_max"), F.coalesce(F.col("d_hmax"), F.col("h_max"))
         ).alias("h_max"),
     )
-    fresh = local_frame(spark, new_rows, dschema).select(
+    fresh = local_frame(spark, {k: v[~old] for k, v in d.items()}, dschema).select(
         "zoom",
         "tile_h",
         F.col("d_mask").cast("int").alias("child_mask"),
@@ -230,98 +218,67 @@ def _tree_delta_splice(
     return merged.unionByName(fresh).select(*old_tree.columns)
 
 
-def _merge_intervals(hs: list[int], max_intervals: int) -> list[tuple[int, int]]:
-    """Cover a sorted unique int list with <= max_intervals closed
+def _merge_intervals(hs, max_intervals: int) -> list[tuple[int, int]]:
+    """Cover a sorted unique int64 array with <= max_intervals closed
     intervals, splitting at the LARGEST gaps (the optimal cover of
     that size: total covered slack = sum of the kept gaps, minimized
-    by removing the biggest ones)."""
-    if not hs:
+    by removing the biggest ones; equal gaps split leftmost first)."""
+    hs = np.asarray(hs, dtype=np.int64)
+    if not len(hs):
         return []
-    if len(hs) == 1 or max_intervals <= 1:
-        return [(hs[0], hs[-1])]
-    gaps = sorted(
-        range(1, len(hs)), key=lambda i: hs[i] - hs[i - 1], reverse=True
-    )[: max_intervals - 1]
-    out = []
-    start = 0
-    for i in sorted(gaps):
-        out.append((hs[start], hs[i - 1]))
-        start = i
-    out.append((hs[start], hs[-1]))
-    return out
+    widest = np.argsort(-np.diff(hs), kind="stable")[: max(max_intervals - 1, 0)]
+    cuts = np.sort(widest) + 1
+    return [
+        (int(hs[a]), int(hs[b]))
+        for a, b in zip(np.r_[0, cuts], np.r_[cuts - 1, len(hs) - 1])
+    ]
 
 
 def _dirty_content(
     spark: SparkSession,
     content_path: str,
-    dirty: DataFrame,
+    zoom: np.ndarray,
+    tile_h: np.ndarray,
     max_intervals: int = 32,
-    collect_cap: int = 200_000,
-    n_dirty: int | None = None,
-    dirty_keys: list | None = None,
 ) -> DataFrame:
-    """Content rows restricted to the dirty (zoom, tile_h) set, with a
+    """Content rows restricted to the dirty (zoom, tile_h) keys, with a
     row-group-skipping coarse predicate in front of the exact broadcast
     semi-join.
 
-    The coarse predicate is per-zoom INTERVAL COVER, not one (min, max)
+    The coarse predicate is a per-zoom INTERVAL COVER, not one (min, max)
     range: real dirt is spatially clustered (a re-crawl region), and
     Hilbert clustering makes clustered tiles contiguous in tile_h, so
     up to ``max_intervals`` largest-gap intervals per zoom let parquet
     min/max stats skip the untouched row groups a single world-spanning
-    range cannot. Degrades gracefully: uniform dirt collapses back to
-    ~the full range (the semi-join stays exact either way), and a dirty
-    set above ``collect_cap`` keys skips the driver-side interval pass
-    and keeps the one-range form."""
-    if dirty_keys is None and n_dirty is not None and n_dirty > collect_cap:
-        # above the driver-pass cap: keep the one-range-per-zoom form
-        # without collecting the key set (same degradation as before)
-        stats = dirty.groupBy("zoom").agg(
-            F.min("tile_h").alias("lo"), F.max("tile_h").alias("hi")
-        ).collect()
-        intervals = {r.zoom: [(r.lo, r.hi)] for r in stats}
-    else:
-        # caller-held keys (micro-batch folds derive them driver-side)
-        # need no job; otherwise ONE collect feeds both the per-zoom
-        # ranges and the interval cover. An uncounted set past the cap
-        # keeps one range per zoom.
-        if dirty_keys is None:
-            dirty_keys = [tuple(r) for r in dirty.select("zoom", "tile_h").collect()]
-            if n_dirty is None and len(dirty_keys) > collect_cap:
-                max_intervals = 1
-        by_zoom: dict[int, list[int]] = {}
-        for z, th in dirty_keys:
-            by_zoom.setdefault(z, []).append(th)
-        intervals = {
-            z: _merge_intervals(sorted(set(hs)), max_intervals)
-            for z, hs in by_zoom.items()
-        }
-    content = spark.read.parquet(content_path)
+    range cannot. Uniform dirt degrades to ~the full range; the
+    semi-join stays exact either way."""
     coarse = None
-    for z, ivs in intervals.items():
+    for z in np.unique(zoom).tolist():
         rng = None
-        for lo, hi in ivs:
+        for lo, hi in _merge_intervals(np.unique(tile_h[zoom == z]), max_intervals):
             q = (F.col("tile_h") >= lo) & (F.col("tile_h") <= hi)
             rng = q if rng is None else (rng | q)
         p = (F.col("zoom") == z) & rng
         coarse = p if coarse is None else (coarse | p)
+    content = spark.read.parquet(content_path)
     if coarse is not None:
         content = content.where(coarse)
-    return content.join(F.broadcast(dirty), ["zoom", "tile_h"], "left_semi")
+    return content.join(
+        F.broadcast(_keys_frame(spark, zoom, tile_h)), ["zoom", "tile_h"], "left_semi"
+    )
 
 
 def _recompose_dirty_tiles(
     spark: SparkSession,
     planet_dir: str,
-    dirty: DataFrame,
+    zoom: np.ndarray,
+    tile_h: np.ndarray,
     config: BuildConfig,
     compiled,
     gen: int,
     steps: dict | None = None,
-    n_dirty: int | None = None,
-    dirty_keys: list | None = None,
     defer_manifest: bool = False,
-) -> None:
+) -> bool:
     """Re-cluster the dirty keys' (old + delta) content in memory (hash
     partition + sort — the compose contract, without the parquet round
     trip the tmp-dir layout paid), run the normal phase-1/phase-2
@@ -330,15 +287,21 @@ def _recompose_dirty_tiles(
     generation ``gen``, and splice the manifest/metrics for exactly the
     keys passed. The gen write and the manifest/metrics splice are
     independent consumers of the materialized dirty cache and run as
-    concurrent jobs. Per-step walls land in ``steps`` (overlapping)."""
+    concurrent jobs. Per-step walls land in ``steps`` (overlapping).
+
+    Returns whether generation ``gen`` was written: keys without point
+    content (all deferred, or zooms the rules render no points at) write
+    none — their tiles cannot have changed, and an empty generation has
+    no files to read back."""
     if steps is None:
         steps = {}
+    if not len(zoom):
+        return False
     mixed = os.path.isdir(os.path.join(planet_dir, "content_mp"))
     content_path = os.path.join(planet_dir, "content")
     delta_dir = os.path.join(planet_dir, "tiles_delta")
-    dirty_all = _dirty_content(
-        spark, content_path, dirty, n_dirty=n_dirty, dirty_keys=dirty_keys
-    )
+    dirty = _keys_frame(spark, zoom, tile_h)
+    dirty_all = _dirty_content(spark, content_path, zoom, tile_h)
     # Cluster the dirty slice IN MEMORY instead of round-tripping it
     # through a parquet tmp dir: hash-partition by (zoom, tile_h) +
     # sort-within gives compose_points_presorted exactly the contract it
@@ -352,17 +315,17 @@ def _recompose_dirty_tiles(
     # repartition spread a few thousand dirty tiles over 128 python
     # tasks and wrote hundreds of near-empty gen files per fold
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    n_parts = (
-        max(8, min(conf_parts, n_dirty // 500 + 1))
-        if n_dirty is not None
-        else conf_parts
-    )
+    n_parts = max(8, min(conf_parts, len(zoom) // 500 + 1))
     dirty_sorted = (
         dirty_all.repartition(n_parts, "zoom", "tile_h")
         .sortWithinPartitions("zoom", "tile_h")
         .persist()
     )
-    timed(steps, "dirty_cluster", dirty_sorted.count)
+    if not timed(steps, "dirty_cluster", dirty_sorted.count):
+        # no point content at any key: multi-point content alone never
+        # changes under a page delta, so every such tile is unchanged
+        dirty_sorted.unpersist()
+        return False
     mp_dirty = None
     try:
         if mixed:
@@ -415,6 +378,7 @@ def _recompose_dirty_tiles(
         if mp_dirty is not None:
             mp_dirty.unpersist()
         dirty_sorted.unpersist()
+    return True
 
 
 def compact_planet(
@@ -436,7 +400,9 @@ def compact_planet(
     pre-drain state, the same staleness contract as _deferred_dirty.
 
     Returns a summary dict (generation, dirty tile count, delta rows).
-    A delta with no geo points writes nothing and logs ``gen: None``.
+    A delta with no geo points writes nothing and logs ``gen: None``; so
+    does the recompose when no dirty tile left after the deferral holds
+    point content (no ``tiles_delta`` generation is written).
     ``stream_batch_id`` (the streaming exactly-once marker) is written
     INTO this compaction's log record in the same json write — atomic
     with the fold, so a crash can never leave a folded-but-unmarked
@@ -492,28 +458,17 @@ def compact_planet(
         return _log_summary(
             {"gen": None, "delta_rows": 0, "dirty_tiles": 0, "deferred_tiles": 0}
         )
-    # micro-batch deltas (the overwhelmingly common fold): ONE collect of
-    # the delta leaf aggregate feeds the dirty set (derived in Python —
-    # the exact distinct-ancestor-ladder set dirty_tiles_for_points
-    # computes, minus its two shuffle jobs) AND the tree delta splice.
-    leaf_rows = (
-        build_leaves(delta_points, config.leaf_zoom)
-        .select("leaf_h", "n_count", "h_min", "h_max")
-        .collect()
-        if n_delta <= 200_000
-        else None
-    )
+    # ONE Arrow collect of the delta leaf aggregate feeds both the dirty
+    # set (2. each leaf's even-zoom ancestor ladder) and the tree splice
     lz = config.leaf_zoom
-    dirty_keys = None if leaf_rows is None else sorted(
-        {
-            (z, int(r.leaf_h) >> (2 * (lz - z)))
-            for z in range(lz, -1, -2)
-            for r in leaf_rows
-        }
-    )
+    leaf_agg = build_leaves(delta_points, lz).select(*_LEAF_COLS)
+    leaves = dict(zip(_LEAF_COLS, int64_columns(leaf_agg)))
     _mark("delta_points")
+    ladder = _ladder(leaves["leaf_h"], lz)
+    n_dirty = len(ladder.zoom)
+    _mark("dirty_set")
 
-    # Steps 2-7 below are a dependency DAG, not a chain: the tree
+    # Steps 3-7 below are a dependency DAG, not a chain: the tree
     # splice, the content append, and the points append each depend only
     # on delta_points, while the recompose chain needs the dirty set AND
     # the appended content. Running the independent branches as
@@ -524,23 +479,11 @@ def compact_planet(
     # (concurrent steps overlap, so they no longer sum to the fold wall).
     # 3. tree: delta-splice the rollup (counts sum, masks OR, extents
     #    widen — exact) so per-fold tree work is O(delta ladder), not a
-    #    leaf-set shuffle + explode rollup over every leaf. Deltas past
-    #    the driver cap fall back to the associative leaf merge + full
-    #    interior rebuild (identical result, test-pinned equivalence).
+    #    leaf-set shuffle + explode rollup over every leaf
     def _tree_task() -> None:
         tree_path = os.path.join(planet_dir, "tile_tree")
         old_tree = spark.read.parquet(tree_path)
-        if leaf_rows is not None:
-            new_tree = _tree_delta_splice(spark, old_tree, leaf_rows, dirty_keys, lz)
-        else:
-            new_tree = build_tile_tree(
-                merge_leaf_levels(
-                    old_tree.where(F.col("zoom") == config.leaf_zoom),
-                    build_leaves(delta_points, config.leaf_zoom),
-                ),
-                config.leaf_zoom,
-            )
-        swap_write(new_tree, tree_path)
+        swap_write(_tree_delta_splice(spark, old_tree, leaves, ladder, lz), tree_path)
         write_lineage(tree_path, compaction_gen=gen)
 
     # 4. content: append the delta's rule-pyramid rows (purely
@@ -557,59 +500,29 @@ def compact_planet(
         delta_points.write.mode("append").parquet(points_path)
         write_lineage(points_path, compaction_gen=gen)
 
-    deferred_n = 0
+    # 2b. low-zoom deferral: a zoom-z tile count shrinks 16x per even
+    #     level, so low-zoom tiles are FEW but are dirtied by ~every
+    #     delta batch and hold a planet-proportional share of content
+    #     (every z-visible feature renders into one of a handful of
+    #     tiles). Recomposing them per micro-batch re-does that work
+    #     every time; deferring them amortizes it across K batches
+    #     and makes the per-batch cost delta-bounded. Deferred keys
+    #     accumulate under _deferred_dirty and fold on
+    #     flush_deferred / materialize_tiles; until then read_tiles
+    #     serves the previous (stale) low-zoom overview tiles — the
+    #     standard tile-server tradeoff.
+    undeferred = ladder.zoom >= (
+        -1 if defer_zoom_below is None else int(defer_zoom_below)
+    )
+    deferred_n = int(n_dirty - undeferred.sum())
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_tree = pool.submit(timed, steps, "tree_merge", _tree_task)
         f_content = pool.submit(timed, steps, "content_append", _content_task)
         f_points = pool.submit(timed, steps, "points_append", _points_task)
-
-        # 2. invalidation set: tile-bounded, reused as broadcast both
-        #    sides. Micro-batch deltas derive it in Python off the one
-        #    leaf collect (a local relation broadcasts the same as a
-        #    computed frame); over-cap deltas keep the Spark derivation.
-        t_step = time.time()
-        defer_z = -1 if defer_zoom_below is None else int(defer_zoom_below)
-        dirty_cached = None
-        if dirty_keys is not None:
-            n_dirty = len(dirty_keys)
-            dirty = local_frame(spark, dirty_keys, "zoom int, tile_h long")
-        else:
-            dirty_cached = dirty_tiles_for_points(
-                delta_points, config.leaf_zoom
-            ).persist()
-            dirty = dirty_cached
-            n_dirty = int(dirty.count())
-        steps["dirty_set"] = round(time.time() - t_step, 3)
-
-        # 2b. low-zoom deferral: a zoom-z tile count shrinks 16x per even
-        #     level, so low-zoom tiles are FEW but are dirtied by ~every
-        #     delta batch and hold a planet-proportional share of content
-        #     (every z-visible feature renders into one of a handful of
-        #     tiles). Recomposing them per micro-batch re-does that work
-        #     every time; deferring them amortizes it across K batches
-        #     and makes the per-batch cost delta-bounded. Deferred keys
-        #     accumulate under _deferred_dirty and fold on
-        #     flush_deferred / materialize_tiles; until then read_tiles
-        #     serves the previous (stale) low-zoom overview tiles — the
-        #     standard tile-server tradeoff.
-        dirty_now = dirty
-        dirty_now_keys = dirty_keys
         if defer_zoom_below is not None:
-            ddir = os.path.join(planet_dir, "_deferred_dirty")
-            if leaf_rows is not None:
-                deferred_keys = [k for k in dirty_keys if k[0] < defer_z]
-                deferred_n = len(deferred_keys)
-                dirty_now_keys = [k for k in dirty_keys if k[0] >= defer_z]
-                dirty_now = local_frame(
-                    spark, dirty_now_keys, "zoom int, tile_h long"
-                )
-                to_park = local_frame(spark, deferred_keys, "zoom int, tile_h long")
-            else:
-                deferred_n = int(
-                    dirty.where(F.col("zoom") < defer_zoom_below).count()
-                )
-                dirty_now = dirty.where(F.col("zoom") >= defer_zoom_below)
-                to_park = dirty.where(F.col("zoom") < defer_zoom_below)
+            to_park = _keys_frame(
+                spark, ladder.zoom[~undeferred], ladder.tile_h[~undeferred]
+            )
             # the parked write blocks nothing downstream — overlap it
             f_park = pool.submit(
                 timed,
@@ -619,7 +532,7 @@ def compact_planet(
                     to_park.withColumn("gen", F.lit(gen))
                     .coalesce(1)
                     .write.mode("append")
-                    .parquet(ddir)
+                    .parquet(os.path.join(planet_dir, "_deferred_dirty"))
                 ),
             )
 
@@ -627,22 +540,19 @@ def compact_planet(
         #      metadata — needs the content append committed first (the
         #      dirty slice must include the delta's own content rows)
         f_content.result()
-        _recompose_dirty_tiles(
-            spark, planet_dir, dirty_now, config, compiled, gen, steps=steps,
-            n_dirty=n_dirty - deferred_n, dirty_keys=dirty_now_keys,
-            defer_manifest=defer_manifest,
+        wrote = _recompose_dirty_tiles(
+            spark, planet_dir, ladder.zoom[undeferred], ladder.tile_h[undeferred],
+            config, compiled, gen, steps=steps, defer_manifest=defer_manifest,
         )
         f_tree.result()
         f_points.result()
         if defer_zoom_below is not None:
             f_park.result()
     delta_points.unpersist()
-    if dirty_cached is not None:
-        dirty_cached.unpersist()
 
     return _log_summary(
         {
-            "gen": gen,
+            "gen": gen if wrote else None,
             "delta_rows": n_delta,
             "dirty_tiles": n_dirty,
             "deferred_tiles": deferred_n,
@@ -726,28 +636,24 @@ def flush_deferred(
         return 0
     config = config or BuildConfig()
     check_config(planet_dir, config, "flush")
-    pending = (
-        spark.read.parquet(ddir).select("zoom", "tile_h").dropDuplicates(
-            ["zoom", "tile_h"]
-        ).persist()
+    pending = np.unique(
+        tile_keys(*int64_columns(spark.read.parquet(ddir).select("zoom", "tile_h")))
     )
-    n = pending.count()
+    n = len(pending)
     if n == 0:
-        pending.unpersist()
         shutil.rmtree(ddir)
         return 0
     gen = max(generations(planet_dir), default=0) + 1
     compiled = compile_rules(config.manifest)
     t0 = time.time()
-    _recompose_dirty_tiles(
-        spark, planet_dir, pending, config, compiled, gen, n_dirty=n,
+    wrote = _recompose_dirty_tiles(
+        spark, planet_dir, *split_tile_keys(pending), config, compiled, gen,
         defer_manifest=defer_manifest,
     )
-    pending.unpersist()
     shutil.rmtree(ddir)
     _append_log(
         planet_dir,
-        {"gen": gen, "flush": True, "flushed_tiles": n,
+        {"gen": gen if wrote else None, "flush": True, "flushed_tiles": n,
          "wall_sec": round(time.time() - t0, 3)},
     )
     return n

@@ -37,6 +37,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,9 +46,8 @@ from ..manifest import DEFAULT_MANIFEST, Manifest, compile_rules
 from ..operators.compose import (
     compose_points_presorted,
     geometry_chunks,
-    merge_chunks,
-    points_chunks,
     project_geometry,
+    tile_keys,
 )
 from ..operators.content import (
     render_content,
@@ -71,7 +71,7 @@ from ..operators.hilbert_sort import hilbert_sort
 from ..operators.leaves import build_leaves
 from ..operators.rules import include_evals, include_tags
 from ..operators.tree import build_tile_tree
-from ..session import local_frame
+from ..session import int64_columns, local_frame
 from ..sources.ways import synthesize_relations, synthesize_ways
 
 PIPELINE_VERSION = 4  # v4: geom_seq rides content_mp (deterministic ring order)
@@ -198,11 +198,13 @@ def splice_manifest(
     write_lineage(metrics_path, compaction_gen=gen)
 
 
-def timed(steps: dict, name: str, fn) -> None:
-    """Run ``fn`` and record its wall seconds as ``steps[name]``."""
+def timed(steps: dict, name: str, fn):
+    """Run ``fn``, record its wall seconds as ``steps[name]`` and return
+    its result."""
     t = time.time()
-    fn()
+    out = fn()
     steps[name] = round(time.time() - t, 3)
+    return out
 
 
 def input_identity(df: DataFrame) -> list:
@@ -416,8 +418,9 @@ def compose_planet_tiles(
     config: BuildConfig, file_marker: bool = True,
 ) -> DataFrame:
     """Tile payload assembly (A6/P7/DP) on (zoom, tile_h)-clustered point
-    content — points-only: fast path with interior-tile finals; mixed:
-    point chunks + geometry chunks merged in one phase 2. The build
+    content — fast path with interior-tile finals; mixed: the point
+    rows of multi-point tiles become chunks that merge with the geometry
+    chunks in one phase 2. The build
     composes the whole planet, a fold its dirty slice (``file_marker``
     False: in-memory clustered input, see compose_points_presorted)."""
     spark = content.sparkSession
@@ -432,39 +435,32 @@ def compose_planet_tiles(
     )
     # the point finals fast path stays available for every tile with
     # NO multi-point features: demote only the mp tile set to chunks
-    # (key set rides a sparkContext.broadcast inside
-    # compose_points_presorted), merge those with the geometry
-    # chunks. Very way-dense planets (mp tile set beyond the bounded
-    # driver collect below) fall back to all-chunks.
-    mp_keys = content_mp.select("zoom", "tile_h").distinct()
-    n_mp = mp_keys.count()
-    if n_mp <= 200_000:
-        keys = frozenset(
-            (int(r.zoom) << 50) | int(r.tile_h) for r in mp_keys.collect()
-        )
-        # phase-2 width follows the CHUNK count (~one row per mp
-        # tile), not the corpus-shuffle conf: an explicit partition
-        # count blocks AQE coalescing, and 128 Python merge tasks
-        # over a few thousand chunk rows each paid ~4s of pure
-        # worker dispatch at the bench shape (measured; ~4k chunk
-        # rows per task is the sweet spot, conf stays the ceiling
-        # for way-dense planets)
-        return compose_points_presorted(
-            rf,
-            layer_order,
-            merge_partitions=max(
-                8,
-                min(
-                    int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                    n_mp // 4000 + 1,
-                ),
+    # (one collect of sorted int64 tile keys, 8 driver bytes each,
+    # riding a sparkContext.broadcast inside compose_points_presorted),
+    # merge those with the geometry chunks
+    keys = np.sort(
+        tile_keys(*int64_columns(content_mp.select("zoom", "tile_h").distinct()))
+    )
+    # phase-2 width follows the CHUNK count (~one row per mp tile), not
+    # the corpus-shuffle conf: an explicit partition count blocks AQE
+    # coalescing, and 128 Python merge tasks over a few thousand chunk
+    # rows each paid ~4s of pure worker dispatch at the bench shape
+    # (measured; ~4k chunk rows per task is the sweet spot, conf stays
+    # the ceiling for way-dense planets)
+    return compose_points_presorted(
+        rf,
+        layer_order,
+        merge_partitions=max(
+            8,
+            min(
+                int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+                len(keys) // 4000 + 1,
             ),
-            exclude_keys=keys,
-            extra_chunks=gchunks,
-            file_marker=file_marker,
-        )
-    pchunks = points_chunks(rf, file_marker=file_marker)
-    return merge_chunks(pchunks.unionByName(gchunks), layer_order)
+        ),
+        exclude_keys=keys,
+        extra_chunks=gchunks,
+        file_marker=file_marker,
+    )
 
 
 def build_planet(

@@ -9,8 +9,11 @@ generations back into the base (materialize) must change nothing.
 import json
 import os
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from pvt_spark.operators.serve import open_planet
 from pvt_spark.plans.compaction import (
     compact_planet,
     materialize_tiles,
@@ -107,8 +110,6 @@ def test_compaction_equals_full_rebuild(spark, tmp_path):
             assert isinstance(json.load(f)["wall_sec"], float), st
 
     # serve path resolves through the generation view pre-materialize
-    from pvt_spark.operators.serve import open_planet
-
     assert _tile_map(open_planet(spark, inc_dir)["tiles"]) == full_tiles
 
     # major compaction folds generations, payloads unchanged
@@ -248,6 +249,116 @@ def test_compaction_deferred_low_zoom_flush(spark, tmp_path):
     assert _tile_map(spark.read.parquet(inc_dir + "/tiles")) == full_tiles
 
 
+def test_compaction_all_deferred_writes_no_generation(spark, tmp_path):
+    """A fold that defers every dirty key recomposes nothing: it writes
+    no tiles_delta generation (an empty one cannot be read back), logs
+    ``gen: None``, keeps serving the base tiles, and the flush then
+    equals a cold rebuild."""
+    from pvt_spark.plans.compaction import flush_deferred
+
+    cfg = BuildConfig()
+    p0 = synthesize_pages(spark, 60, seed=1, partitions=1)
+    d1 = synthesize_pages(spark, 30, seed=2, partitions=1, start=60)
+    planet = str(tmp_path / "inc")
+    build_planet(spark, p0, planet, cfg)
+    base = _tile_map(read_tiles(spark, planet))
+
+    s = compact_planet(spark, planet, d1, cfg, defer_zoom_below=14)
+    assert s["gen"] is None and s["deferred_tiles"] == s["dirty_tiles"] > 0
+    assert not os.path.exists(os.path.join(planet, "tiles_delta"))
+    assert _tile_map(read_tiles(spark, planet)) == base
+    assert _tile_map(open_planet(spark, planet)["tiles"]) == base
+
+    assert flush_deferred(spark, planet, cfg) == s["dirty_tiles"]
+    full = str(tmp_path / "full")
+    build_planet(spark, p0.unionByName(d1), full, cfg)
+    full_tiles = _tile_map(spark.read.parquet(full + "/tiles"))
+    assert _tile_map(read_tiles(spark, planet)) == full_tiles != base
+
+
+def test_flush_without_point_content_writes_no_generation(spark, tmp_path):
+    """Deferred keys at zooms the rules render no point content at (the
+    default manifest renders nothing below z4) flush to no generation:
+    ``gen: None`` in the log, every reader still opens the planet, and
+    the tiles equal a cold rebuild."""
+    from pvt_spark.plans.compaction import flush_deferred
+
+    cfg = BuildConfig()
+    p0 = synthesize_pages(spark, 60, seed=11, partitions=1)
+    d1 = synthesize_pages(spark, 30, seed=12, partitions=1, start=60)
+    planet = str(tmp_path / "inc")
+    build_planet(spark, p0, planet, cfg)
+    s = compact_planet(spark, planet, d1, cfg, defer_zoom_below=4)
+    assert s["gen"] == 1 and s["deferred_tiles"] > 0
+
+    assert flush_deferred(spark, planet, cfg) == s["deferred_tiles"]
+    assert os.listdir(os.path.join(planet, "tiles_delta")) == ["gen=1"]
+    with open(os.path.join(planet, "_compaction.json")) as f:
+        last = json.load(f)[-1]
+    assert last["flush"] and last["gen"] is None
+    full = str(tmp_path / "full")
+    build_planet(spark, p0.unionByName(d1), full, cfg)
+    full_tiles = _tile_map(spark.read.parquet(full + "/tiles"))
+    assert _tile_map(read_tiles(spark, planet)) == full_tiles
+    assert _tile_map(open_planet(spark, planet)["tiles"]) == full_tiles
+    assert materialize_tiles(spark, planet, cfg) == 1
+    assert _tile_map(spark.read.parquet(planet + "/tiles")) == full_tiles
+
+
+def _points_in_leaves(leaf_ids, leaf_zoom, rng):
+    """1-3 random points (biased-signed h rows) inside each leaf tile."""
+    shift = 2 * (32 - leaf_zoom)
+    leaf = np.repeat(np.asarray(leaf_ids, np.uint64), rng.integers(1, 4, len(leaf_ids)))
+    u = (leaf << np.uint64(shift)) | rng.integers(0, 1 << shift, len(leaf), np.uint64)
+    return [(int(h),) for h in (u ^ np.uint64(1 << 63)).view(np.int64)]
+
+
+@pytest.mark.parametrize("leaf_zoom,seed", [(10, 0), (12, 1), (12, 2)])
+def test_tree_delta_splice_equals_rebuild(spark, leaf_zoom, seed):
+    """The numpy tree splice of a delta equals rebuilding the tree from
+    the merged leaf set, for deltas that mix points in existing leaves,
+    new leaves under existing ancestors, and brand-new subtrees; the
+    ladder is exactly the dirty set the Spark derivation computes."""
+    from pvt_spark.operators.leaves import build_leaves
+    from pvt_spark.operators.tree import build_tile_tree
+    from pvt_spark.plans.compaction import _LEAF_COLS, _ladder, _tree_delta_splice
+    from pvt_spark.session import int64_columns
+    from pvt_spark.streaming.incremental import dirty_tiles_for_points
+
+    rng = np.random.default_rng(seed)
+    n_leaves = 4 ** leaf_zoom
+    # old leaves: a few clusters in the first half of the curve
+    bases = rng.integers(0, n_leaves // 2 - 4096, size=6)
+    old = np.unique(np.concatenate([b + rng.integers(0, 4096, 60) for b in bases]))
+    # new leaves under existing ancestors: siblings of old leaves
+    sib = np.setdiff1d((old[::3] & ~15) | rng.integers(0, 16, len(old[::3])), old)
+    # new subtrees: the last quarter of the curve holds no old leaf
+    far = rng.integers(3 * n_leaves // 4, n_leaves, size=40)
+    delta = np.concatenate([rng.choice(old, 25), sib, far])
+    assert len(sib) and not np.isin(far, old).any()
+
+    schema = "h long"
+    old_pts = spark.createDataFrame(_points_in_leaves(old, leaf_zoom, rng), schema)
+    delta_pts = spark.createDataFrame(_points_in_leaves(delta, leaf_zoom, rng), schema)
+    old_tree = build_tile_tree(build_leaves(old_pts, leaf_zoom), leaf_zoom)
+
+    leaf_agg = build_leaves(delta_pts, leaf_zoom).select(*_LEAF_COLS)
+    leaves = dict(zip(_LEAF_COLS, int64_columns(leaf_agg)))
+    ladder = _ladder(leaves["leaf_h"], leaf_zoom)
+    keys = list(zip(ladder.zoom.tolist(), ladder.tile_h.tolist()))
+    assert keys == sorted(
+        (r.zoom, r.tile_h)
+        for r in dirty_tiles_for_points(delta_pts, leaf_zoom).collect()
+    )
+
+    got = _tree_delta_splice(spark, old_tree, leaves, ladder, leaf_zoom)
+    want = build_tile_tree(
+        build_leaves(old_pts.unionByName(delta_pts), leaf_zoom), leaf_zoom
+    )
+    assert _rows(got) == _rows(want)
+    assert got.columns == old_tree.columns
+
+
 def test_dirty_content_pushes_range_predicates(spark, tmp_path):
     """The coarse per-zoom tile_h ranges must reach the parquet scan as
     pushed filters (row-group skipping for spatially clustered deltas);
@@ -259,10 +370,9 @@ def test_dirty_content_pushes_range_predicates(spark, tmp_path):
     planet = str(tmp_path / "p")
     build_planet(spark, p0, planet, cfg)
 
-    dirty = spark.createDataFrame(
-        [(12, 100), (12, 200), (10, 50)], "zoom int, tile_h long"
+    df = _dirty_content(
+        spark, planet + "/content", np.array([12, 12, 10]), np.array([100, 200, 50])
     )
-    df = _dirty_content(spark, planet + "/content", dirty)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "GreaterThanOrEqual(tile_h" in plan, plan[:2000]
     assert "LessThanOrEqual(tile_h" in plan
@@ -296,11 +406,8 @@ def test_dirty_content_interval_pruning(spark, tmp_path):
     path = str(tmp_path / "content")
     content.write.partitionBy("zoom").parquet(path)
     # two tight clusters far apart
-    dirty = spark.createDataFrame(
-        [(12, h) for h in list(range(100, 110)) + list(range(9000, 9010))],
-        "zoom int, tile_h long",
-    )
-    got = _dirty_content(spark, path, dirty)
+    hs = np.r_[100:110, 9000:9010]
+    got = _dirty_content(spark, path, np.full(len(hs), 12), hs)
     plan = got._jdf.queryExecution().executedPlan().toString()
     # the pushed filter carries BOTH interval bounds, not one world range
     assert "9000" in plan and "109" in plan, plan[:1500]

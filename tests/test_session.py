@@ -40,6 +40,20 @@ def test_local_frame_matches_create_dataframe(spark, rows):
     assert again.collect() == want.collect()
 
 
+def test_local_frame_from_columns(spark):
+    """A dict of column arrays builds the same frame as its rows; a
+    value outside a narrower field type raises instead of wrapping."""
+    import numpy as np
+
+    cols = {"tile_h": np.array([7, 2**40], np.int64), "zoom": np.array([12, 0])}
+    ddl = "zoom int, tile_h long"
+    got = local_frame(spark, cols, ddl)
+    assert got.collect() == local_frame(spark, [(12, 7), (0, 2**40)], ddl).collect()
+    assert local_frame(spark, {"zoom": [], "tile_h": []}, ddl).count() == 0
+    with pytest.raises(Exception, match="not in range"):
+        local_frame(spark, {"zoom": np.array([2**40]), "tile_h": [0]}, ddl)
+
+
 def test_local_frame_plans_a_local_table_scan(spark):
     plan = (
         local_frame(spark, ROWS, SCHEMA)
