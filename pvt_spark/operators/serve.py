@@ -7,8 +7,8 @@ descent has two forms here:
 
 - **Served path.** The ``tiles`` frame ``open_planet`` returns carries a
   serving index built once from the parquet footers of ``tiles/zoom=Z``
-  and of every ``tiles_delta/gen=G/zoom=Z``: the ``tile_h`` min/max of
-  each row group. A lookup reads, in the calling process and with
+  and of every committed ``tiles_delta/gen=G/zoom=Z``: the ``tile_h``
+  min/max of each row group. A lookup reads, in the calling process and with
   pyarrow only, the ``tile_h`` column of the row groups whose range
   covers the tile, newest generation first, and the full row from the
   first one that holds it. The answer comes back as a driver-local
@@ -102,12 +102,12 @@ def _zoom_files(root: str):
 
 
 def _index_planet(planet_dir: str) -> dict:
-    """zoom -> _RowGroups over the base tiles and every generation."""
-    from ..plans.pipeline import generations
+    """zoom -> _RowGroups over the base tiles and every committed
+    generation."""
+    from ..plans.pipeline import gen_path, generations
 
     sources = [(0, os.path.join(planet_dir, "tiles"))] + [
-        (g, os.path.join(planet_dir, "tiles_delta", f"gen={g}"))
-        for g in generations(planet_dir)
+        (g, gen_path(planet_dir, "tiles", g)) for g in generations(planet_dir, "tiles")
     ]
     entries: dict = {}
     for gen, root in sources:
@@ -168,33 +168,27 @@ def features_in_tile(
 
 
 def open_planet(spark: SparkSession, planet_dir: str) -> dict[str, DataFrame]:
-    """Open a built planet's stage tables (the loadPlanet analog).
+    """Open a built planet's stage tables (the loadPlanet analog): every
+    one of ``points_sorted``, ``tile_tree``, ``content`` and ``tiles``
+    whose directory exists; a table that exists but cannot be read
+    raises.
 
-    ``tiles`` is the Spark view of the tiles: the plain base scan, or,
-    when un-materialized ``tiles_delta`` generations exist, the
-    latest-generation-wins view of ``read_tiles`` (plans/compaction), so
-    a compacted planet never serves stale payloads. It also carries the
-    serving index ``tile_lookup`` answers from, built here from the
-    footers of exactly the files that view reads (local planets only).
-    Both describe the planet as opened: reopen it after a fold or a
-    materialize.
+    Each is its ``read_table`` view (plans/pipeline): ``tiles`` and
+    ``tile_tree`` resolve their committed compaction generations
+    latest-generation-wins, so a compacted planet never serves stale
+    rows. ``tiles`` also carries the serving index ``tile_lookup``
+    answers from, built here from the footers of exactly the files that
+    view reads. Both describe the planet as opened: reopen it after a
+    fold or a materialize.
     """
-    out = {}
-    for name in ["points_sorted", "leaves", "tile_tree", "content", "tiles"]:
-        try:
-            if name == "tiles" and os.path.isdir(
-                os.path.join(planet_dir, "tiles_delta")
-            ):
-                from ..plans.compaction import read_tiles
+    from ..plans.pipeline import read_table
 
-                out[name] = read_tiles(spark, planet_dir)
-            else:
-                out[name] = spark.read.parquet(f"{planet_dir}/{name}")
-        except Exception:
-            pass
-    # pyarrow reads local paths only: a planet on a remote filesystem
-    # keeps the predicate path
-    if "tiles" in out and os.path.isdir(os.path.join(planet_dir, "tiles")):
+    out = {
+        name: read_table(spark, planet_dir, name)
+        for name in ("points_sorted", "tile_tree", "content", "tiles")
+        if os.path.isdir(os.path.join(planet_dir, name))
+    }
+    if "tiles" in out:
         _SERVED[out["tiles"]] = _ServingIndex(
             spark, out["tiles"].schema, _index_planet(planet_dir)
         )

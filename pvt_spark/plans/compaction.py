@@ -11,16 +11,24 @@ shape. This module maintains the build incrementally, log-structured:
   (both derivations are purely per-feature, so appends compose —
   feature ids are content-derived ``xxhash64(url, mention_idx)`` and
   identical between a delta build and a full rebuild).
+- **tiles, tile tree and tile manifest are generation logs**: a fold
+  takes one generation number N for the planet and writes only the
+  rows it changes, each table's under ``<table>_delta/gen=N``; no base
+  table is rewritten. Readers (``pipeline.read_table``: ``read_tiles``,
+  ``open_planet``, the fold's own read of the old tree) resolve the
+  base plus the committed generations (those with a ``_SUCCESS``
+  marker) latest-generation-wins per (zoom, tile_h), and
+  ``pipeline.materialize`` folds a log back into its base
+  (``materialize_tiles``, ``resolve_manifest``).
 - **the tile tree is spliced, not rebuilt**: the delta's leaf
-  aggregate is collected once and its even-zoom ancestor ladder
-  updates the tree associatively (counts sum, child masks OR, h
-  extents widen, leaf counts grow by the new leaves beneath), so the
+  aggregate is collected once, the tree rows at its even-zoom ancestor
+  ladder are read, and the ladder updates them associatively (counts
+  sum, child masks OR, h extents widen, leaf counts grow by the new
+  leaves beneath); the ladder rows are the tree's generation, so the
   expensive leaves-from-points aggregation runs on the delta only.
 - **tile payloads recompose for DIRTY tiles only** — each delta leaf
-  plus its even-zoom ancestor ladder. Recomposed tiles land in a new
-  ``tiles_delta/gen=N`` generation; ``read_tiles`` resolves
-  latest-generation-wins per (zoom, tile_h). Work scales with the
-  dirty-tile content, not the planet.
+  plus its even-zoom ancestor ladder — and so do their manifest rows.
+  Work scales with the dirty-tile content, not the planet.
 
 Scale note: every tile-key set of a fold is int64 numpy columns on the
 driver — the delta leaf aggregate (``leaf_h``, ``n_count``, ``h_min``,
@@ -28,11 +36,11 @@ driver — the delta leaf aggregate (``leaf_h``, ``n_count``, ``h_min``,
 bytes per key, the same order as the dirty-set broadcast every fold
 pays. The ladder, the tree-splice aggregation, the defer split and the
 per-zoom interval cover are vectorized over them. The exact
-dirty-content restriction is a broadcast semi-join, fronted by a
-per-zoom ``tile_h`` interval cover that pushes down to parquet
-row-group stats — content is written tile_h-sorted within zoom
-partitions, so most of the planet's row groups are skipped before the
-join runs.
+restriction to the dirty keys (content, old tree rows) is a broadcast
+semi-join, fronted by a per-zoom ``tile_h`` interval cover that pushes
+down to parquet row-group stats — content is written tile_h-sorted
+within zoom partitions, so most of the planet's row groups are skipped
+before the join runs.
 
 Equivalence contract (tested): base build + N compactions produces
 md5-identical tile payloads, an identical tree, and an identical
@@ -48,12 +56,12 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..manifest import compile_rules
 from ..operators.compose import split_tile_keys, tile_keys
-from ..operators.content import tile_manifest
+from ..operators.content import tile_manifest, zoom_metrics_from_manifest
 from ..operators.leaves import build_leaves
 from ..session import int64_columns, local_frame
 from .pipeline import (
@@ -61,12 +69,15 @@ from .pipeline import (
     atomic_json_write,
     check_config,
     compose_planet_tiles,
+    gen_path,
     generations,
     manifest_input,
+    materialize,
+    next_generation,
     point_content,
     read_json,
+    read_table,
     sorted_points,
-    splice_manifest,
     swap_write,
     timed,
     write_lineage,
@@ -77,11 +88,6 @@ def _append_log(planet_dir: str, record: dict) -> None:
     """Append one record to the planet's ``_compaction.json`` log."""
     log_path = os.path.join(planet_dir, "_compaction.json")
     atomic_json_write(log_path, read_json(log_path, []) + [record])
-
-
-def _entity_counts(cols) -> list[str]:
-    # leaf_count is derived (1 per leaf row), not an entity count
-    return [c for c in cols if c.endswith("_count") and c != "leaf_count"]
 
 
 _KEYS_DDL = "zoom int, tile_h long"
@@ -118,40 +124,37 @@ def _ladder(leaf_h: np.ndarray, leaf_zoom: int) -> Ladder:
 
 def _tree_delta_splice(
     spark: SparkSession,
-    old_tree: DataFrame,
+    tree: DataFrame,
     leaves: dict,
     ladder: Ladder,
     leaf_zoom: int,
 ) -> DataFrame:
     """Associative DELTA update of the tile tree for an append-only page
-    delta: counts sum, child masks OR, h extents widen, and each
-    interior tile's leaf_count grows by the number of brand-new leaves
-    beneath it. Exactly equal to rebuilding the rollup from the merged
-    leaf set (all updates are integer sums / min / max / bit_or —
-    order-independent), but the work is O(delta ladder) + two scans of
-    the old tree instead of a leaf-set shuffle + an explode aggregate
-    over EVERY leaf per fold.
+    delta, as the tree rows of the ladder keys: counts sum, child masks
+    OR, h extents widen, and each interior tile's leaf_count grows by
+    the number of brand-new leaves beneath it. Overlaid on ``tree`` (see
+    ``pipeline.overlay``) they equal rebuilding the rollup from the
+    merged leaf set (all updates are integer sums / min / max / bit_or —
+    order-independent), but the work is O(delta ladder): one read of
+    ``tree`` at the ladder keys instead of a leaf-set shuffle + an
+    explode aggregate over EVERY leaf per fold.
 
     ``leaves`` holds the delta's ``build_leaves`` columns as int64
     arrays; ``ladder`` is their ancestor ladder (the fold's dirty set),
     aggregated here with numpy.
     """
     leaf_h = leaves["leaf_h"]
-    exist = tile_keys(
-        *int64_columns(
-            old_tree.join(
-                F.broadcast(_keys_frame(spark, ladder.zoom, ladder.tile_h)),
-                ["zoom", "tile_h"],
-                "left_semi",
-            ).select("zoom", "tile_h")
-        )
-    )
+    keys = tile_keys(ladder.zoom, ladder.tile_h)
+    cols = tree.columns
+    old_rows = _rows_at_keys(tree, ladder.zoom, ladder.tile_h).select(*cols)
+    old = dict(zip(cols, int64_columns(old_rows)))
+    at = np.searchsorted(keys, tile_keys(old["zoom"], old["tile_h"]))
     n_z = leaf_zoom // 2 + 1
     shift = 2 * (leaf_zoom - np.arange(leaf_zoom, -1, -2, dtype=np.int64))[:, None]
     # per-(zoom, leaf) entries: the bit of the z+2 child holding the
     # leaf (none at the leaf level), and whether the leaf is new
     bit = np.where(shift > 0, 1 << ((leaf_h >> np.maximum(shift - 4, 0)) & 15), 0)
-    is_new = ~np.isin(tile_keys(leaf_zoom, leaf_h), exist)
+    is_new = ~np.isin(tile_keys(leaf_zoom, leaf_h), keys[at])
 
     def reduce(ufunc, per_entry):
         return ufunc.reduceat(per_entry.ravel()[ladder.order], ladder.starts)
@@ -159,63 +162,19 @@ def _tree_delta_splice(
     def tiled(a):
         return np.broadcast_to(a, (n_z, len(leaf_h)))
 
-    d = {
-        "zoom": ladder.zoom,
-        "tile_h": ladder.tile_h,
-        "d_mask": reduce(np.bitwise_or, bit),
-        "d_n": reduce(np.add, tiled(leaves["n_count"])),
-        "d_leaf": reduce(np.add, tiled(is_new.astype(np.int64))),
-        "d_hmin": reduce(np.minimum, tiled(leaves["h_min"])),
-        "d_hmax": reduce(np.maximum, tiled(leaves["h_max"])),
-    }
-    old = np.isin(tile_keys(ladder.zoom, ladder.tile_h), exist)
-    count_cols = _entity_counts(old_tree.columns)
-    dschema = (
-        "zoom int, tile_h long, d_mask int, d_n long, d_leaf long, "
-        "d_hmin long, d_hmax long"
-    )
-    merged = old_tree.join(
-        F.broadcast(local_frame(spark, {k: v[old] for k, v in d.items()}, dschema)),
-        ["zoom", "tile_h"],
-        "left",
-    ).select(
-        "zoom",
-        "tile_h",
-        F.col("child_mask")
-        .bitwiseOR(F.coalesce(F.col("d_mask"), F.lit(0)))
-        .cast("int")
-        .alias("child_mask"),
-        *[
-            (
-                F.col(c) + F.coalesce(F.col("d_n"), F.lit(0))
-                if c == "n_count"
-                else F.col(c)
-            ).alias(c)
-            for c in count_cols
-        ],
-        (F.col("leaf_count") + F.coalesce(F.col("d_leaf"), F.lit(0))).alias(
-            "leaf_count"
-        ),
-        F.least(
-            F.col("h_min"), F.coalesce(F.col("d_hmin"), F.col("h_min"))
-        ).alias("h_min"),
-        F.greatest(
-            F.col("h_max"), F.coalesce(F.col("d_hmax"), F.col("h_max"))
-        ).alias("h_max"),
-    )
-    fresh = local_frame(spark, {k: v[~old] for k, v in d.items()}, dschema).select(
-        "zoom",
-        "tile_h",
-        F.col("d_mask").cast("int").alias("child_mask"),
-        *[
-            (F.col("d_n") if c == "n_count" else F.lit(0).cast("long")).alias(c)
-            for c in count_cols
-        ],
-        F.col("d_leaf").alias("leaf_count"),
-        F.col("d_hmin").alias("h_min"),
-        F.col("d_hmax").alias("h_max"),
-    )
-    return merged.unionByName(fresh).select(*old_tree.columns)
+    # a key without an old row starts empty: zero counts, no extent
+    out = {c: np.zeros(len(keys), np.int64) for c in cols}
+    out["h_min"][:] = np.iinfo(np.int64).max
+    out["h_max"][:] = np.iinfo(np.int64).min
+    for c, v in old.items():
+        out[c][at] = v
+    out["zoom"], out["tile_h"] = ladder.zoom, ladder.tile_h
+    out["child_mask"] |= reduce(np.bitwise_or, bit)
+    out["n_count"] += reduce(np.add, tiled(leaves["n_count"]))
+    out["leaf_count"] += reduce(np.add, tiled(is_new.astype(np.int64)))
+    out["h_min"] = np.minimum(out["h_min"], reduce(np.minimum, tiled(leaves["h_min"])))
+    out["h_max"] = np.maximum(out["h_max"], reduce(np.maximum, tiled(leaves["h_max"])))
+    return local_frame(spark, out, tree.schema)
 
 
 def _merge_intervals(hs, max_intervals: int) -> list[tuple[int, int]]:
@@ -234,14 +193,14 @@ def _merge_intervals(hs, max_intervals: int) -> list[tuple[int, int]]:
     ]
 
 
-def _dirty_content(
-    spark: SparkSession,
-    content_path: str,
+def _rows_at_keys(
+    df: DataFrame,
     zoom: np.ndarray,
     tile_h: np.ndarray,
     max_intervals: int = 32,
 ) -> DataFrame:
-    """Content rows restricted to the dirty (zoom, tile_h) keys, with a
+    """The rows of a (zoom, tile_h)-keyed table at the given keys (the
+    dirty content slice, the old tree rows of a splice), with a
     row-group-skipping coarse predicate in front of the exact broadcast
     semi-join.
 
@@ -260,11 +219,12 @@ def _dirty_content(
             rng = q if rng is None else (rng | q)
         p = (F.col("zoom") == z) & rng
         coarse = p if coarse is None else (coarse | p)
-    content = spark.read.parquet(content_path)
     if coarse is not None:
-        content = content.where(coarse)
-    return content.join(
-        F.broadcast(_keys_frame(spark, zoom, tile_h)), ["zoom", "tile_h"], "left_semi"
+        df = df.where(coarse)
+    return df.join(
+        F.broadcast(_keys_frame(df.sparkSession, zoom, tile_h)),
+        ["zoom", "tile_h"],
+        "left_semi",
     )
 
 
@@ -277,38 +237,37 @@ def _recompose_dirty_tiles(
     compiled,
     gen: int,
     steps: dict | None = None,
-    defer_manifest: bool = False,
 ) -> bool:
     """Re-cluster the dirty keys' (old + delta) content in memory (hash
     partition + sort — the compose contract, without the parquet round
     trip the tmp-dir layout paid), run the normal phase-1/phase-2
     compose (mixed planets re-merge the dirty slice of the unchanged
-    content_mp stage as geometry chunks), write the result as
-    generation ``gen``, and splice the manifest/metrics for exactly the
-    keys passed. The gen write and the manifest/metrics splice are
-    independent consumers of the materialized dirty cache and run as
-    concurrent jobs. Per-step walls land in ``steps`` (overlapping).
+    content_mp stage as geometry chunks), and write the recomposed tiles
+    and the keys' manifest rows as generation ``gen`` of the ``tiles``
+    and ``tile_manifest`` logs. The two writes are independent consumers
+    of the materialized dirty cache and run as concurrent jobs. Per-step
+    walls land in ``steps`` (overlapping).
 
     Returns whether generation ``gen`` was written: keys without point
     content (all deferred, or zooms the rules render no points at) write
-    none — their tiles cannot have changed, and an empty generation has
-    no files to read back."""
+    none — their tiles and counts cannot have changed, and an empty
+    generation has no files to read back."""
     if steps is None:
         steps = {}
     if not len(zoom):
         return False
     mixed = os.path.isdir(os.path.join(planet_dir, "content_mp"))
-    content_path = os.path.join(planet_dir, "content")
-    delta_dir = os.path.join(planet_dir, "tiles_delta")
     dirty = _keys_frame(spark, zoom, tile_h)
-    dirty_all = _dirty_content(spark, content_path, zoom, tile_h)
+    dirty_all = _rows_at_keys(
+        spark.read.parquet(os.path.join(planet_dir, "content")), zoom, tile_h
+    )
     # Cluster the dirty slice IN MEMORY instead of round-tripping it
     # through a parquet tmp dir: hash-partition by (zoom, tile_h) +
     # sort-within gives compose_points_presorted exactly the contract it
     # needs (a tile's rows in ONE partition, contiguous), without the
     # range-boundary sampling pass, the parquet write, or the read-back.
     # The count materializes the cache ONCE so the two concurrent
-    # consumers below (gen write, manifest splice) both read it instead
+    # consumers below (tile and manifest writes) both read it instead
     # of racing to recompute the scan+shuffle.
     # cluster width follows the DIRTY TILE count (~500 tiles per python
     # phase-1 task), not the corpus conf: an explicit conf-width
@@ -340,34 +299,20 @@ def _recompose_dirty_tiles(
         )
 
         def _gen_write() -> None:
-            (
-                recomposed.write.mode("overwrite")
-                .partitionBy("zoom")
-                .parquet(os.path.join(delta_dir, f"gen={gen}"))
+            recomposed.write.mode("overwrite").partitionBy("zoom").parquet(
+                gen_path(planet_dir, "tiles", gen)
             )
 
-        # manifest splice + zoom metrics recompute (both tile-bounded).
-        # The spliced manifest is persisted so the metrics rollup reads
-        # the cache instead of re-scanning the just-written parquet.
-        # ``defer_manifest`` (streaming drains): the splice is the last
-        # per-fold O(planet-tiles) term — instead, the fold appends its
-        # delta-bounded per-tile counts (one row per dirty key, stamped
-        # with the generation) to ``_manifest_delta`` and
-        # ``resolve_manifest`` folds the log into the base table ONCE at
-        # drain end (latest-generation-wins, the tiles_delta discipline;
-        # base manifest + zoom metrics serve stale until then, the same
-        # staleness contract _deferred_dirty tiles already have).
+        # the keys' new per-tile counts (one row per dirty key with
+        # content); resolve_manifest folds them into the base manifest
+        # and rewrites the zoom metrics
         def _manifest_metrics() -> None:
-            new_counts = tile_manifest(manifest_input(dirty_sorted, mp_dirty))
-            if defer_manifest:
-                (
-                    new_counts.withColumn("gen", F.lit(gen))
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(os.path.join(planet_dir, "_manifest_delta"))
-                )
-                return
-            splice_manifest(spark, planet_dir, F.broadcast(dirty), new_counts, gen)
+            (
+                tile_manifest(manifest_input(dirty_sorted, mp_dirty))
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(gen_path(planet_dir, "tile_manifest", gen))
+            )
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_gen = pool.submit(timed, steps, "recompose", _gen_write)
@@ -392,17 +337,21 @@ def compact_planet(
 ) -> dict:
     """Fold a delta page batch into an existing planet build.
 
-    ``defer_manifest`` (streaming drains): per-fold manifest/metrics
-    maintenance appends delta-bounded count rows to ``_manifest_delta``
-    instead of splicing the planet-sized manifest table; call
-    ``resolve_manifest`` when the drain ends (run_incremental_build does
-    this) — until then the base manifest and zoom metrics serve their
-    pre-drain state, the same staleness contract as _deferred_dirty.
+    Every table the fold changes by key gets one generation ``gen``: the
+    spliced tree rows of the dirty ladder in ``tile_tree_delta``, the
+    recomposed tiles in ``tiles_delta`` and their per-tile counts in
+    ``tile_manifest_delta``; no base table is rewritten. Unless
+    ``defer_manifest`` (streaming drains), ``resolve_manifest`` then
+    folds the manifest log so the base manifest and zoom metrics are
+    current on return; with it, they serve their pre-drain state until
+    ``resolve_manifest`` runs (run_incremental_build calls it when the
+    drain ends), the same staleness contract as _deferred_dirty.
 
     Returns a summary dict (generation, dirty tile count, delta rows).
     A delta with no geo points writes nothing and logs ``gen: None``; so
     does the recompose when no dirty tile left after the deferral holds
-    point content (no ``tiles_delta`` generation is written).
+    point content (no ``tiles_delta`` generation is written, only the
+    tree's).
     ``stream_batch_id`` (the streaming exactly-once marker) is written
     INTO this compaction's log record in the same json write — atomic
     with the fold, so a crash can never leave a folded-but-unmarked
@@ -434,7 +383,7 @@ def compact_planet(
         steps[name] = round(now - _last[0], 3)
         _last[0] = now
 
-    gen = max(generations(planet_dir), default=0) + 1
+    gen = next_generation(planet_dir)
 
     # 1. delta points (same fused extract+featureize+sort kernel as the
     #    points_sorted stage), persisted — three derivations read it,
@@ -443,6 +392,10 @@ def compact_planet(
     n_delta = delta_points.count()
 
     def _log_summary(summary: dict) -> dict:
+        if not defer_manifest:
+            timed(
+                steps, "manifest_metrics", lambda: resolve_manifest(spark, planet_dir)
+            )
         summary["wall_sec"] = round(time.time() - t0, 3)
         summary["steps"] = steps
         if stream_batch_id is not None:
@@ -479,12 +432,13 @@ def compact_planet(
     # (concurrent steps overlap, so they no longer sum to the fold wall).
     # 3. tree: delta-splice the rollup (counts sum, masks OR, extents
     #    widen — exact) so per-fold tree work is O(delta ladder), not a
-    #    leaf-set shuffle + explode rollup over every leaf
+    #    leaf-set shuffle + explode rollup over every leaf; the ladder
+    #    rows are the tree's generation
     def _tree_task() -> None:
-        tree_path = os.path.join(planet_dir, "tile_tree")
-        old_tree = spark.read.parquet(tree_path)
-        swap_write(_tree_delta_splice(spark, old_tree, leaves, ladder, lz), tree_path)
-        write_lineage(tree_path, compaction_gen=gen)
+        tree = read_table(spark, planet_dir, "tile_tree")
+        _tree_delta_splice(spark, tree, leaves, ladder, lz).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(gen_path(planet_dir, "tile_tree", gen))
 
     # 4. content: append the delta's rule-pyramid rows (purely
     #    per-feature -> append-composable)
@@ -536,13 +490,13 @@ def compact_planet(
                 ),
             )
 
-        # 5+6. recompose the (non-deferred) dirty tiles and splice
-        #      metadata — needs the content append committed first (the
+        # 5+6. recompose the (non-deferred) dirty tiles and log their
+        #      manifest rows — needs the content append committed first (the
         #      dirty slice must include the delta's own content rows)
         f_content.result()
         wrote = _recompose_dirty_tiles(
             spark, planet_dir, ladder.zoom[undeferred], ladder.tile_h[undeferred],
-            config, compiled, gen, steps=steps, defer_manifest=defer_manifest,
+            config, compiled, gen, steps=steps,
         )
         f_tree.result()
         f_points.result()
@@ -560,19 +514,10 @@ def compact_planet(
     )
 
 
-def _latest_wins(df: DataFrame, gen_col: str) -> DataFrame:
-    """Each (zoom, tile_h)'s row of the highest ``gen_col``, which drops."""
-    w = Window.partitionBy("zoom", "tile_h").orderBy(F.col(gen_col).desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop(gen_col, "_rn")
-    )
-
-
 def read_tiles(spark: SparkSession, planet_dir: str) -> DataFrame:
     """Serving view over base tiles + compaction generations:
-    latest-generation-wins per (zoom, tile_h).
+    latest-generation-wins per (zoom, tile_h) (``pipeline.read_table``
+    for ``tiles``).
 
     Tile-lookup predicates (serve.py's pushed h-range filters) apply
     to every generation's scan BEFORE the per-tile window runs, so a
@@ -583,43 +528,30 @@ def read_tiles(spark: SparkSession, planet_dir: str) -> DataFrame:
     With ``defer_zoom_below`` compaction, low-zoom overview tiles serve
     their pre-deferral payloads until ``flush_deferred`` runs.
     """
-    out = spark.read.parquet(os.path.join(planet_dir, "tiles")).withColumn(
-        "_gen", F.lit(0)
-    )
-    for g in generations(planet_dir):
-        out = out.unionByName(
-            spark.read.parquet(
-                os.path.join(planet_dir, "tiles_delta", f"gen={g}")
-            ).withColumn("_gen", F.lit(g))
+    return read_table(spark, planet_dir, "tiles")
+
+
+def resolve_manifest(spark: SparkSession, planet_dir: str) -> int:
+    """Fold the ``tile_manifest_delta`` generations into the base
+    tile_manifest — latest-generation-wins per (zoom, tile_h), the
+    discipline of every logged table — and recompute zoom_metrics from
+    the resolved table. O(planet tiles) once per call: once per fold
+    without ``defer_manifest``, once per drain with it. Returns the
+    number of log rows folded (0 = nothing to do). Idempotent: a crash
+    before the log removal re-folds the same rows to the same result
+    (each key's latest generation is deterministic)."""
+    gens = generations(planet_dir, "tile_manifest")
+    n = materialize(spark, planet_dir, "tile_manifest")
+    if gens:
+        # the per-zoom rollup is ~a dozen rows: collect it, write it back
+        # as a driver-local frame
+        metrics = zoom_metrics_from_manifest(
+            spark.read.parquet(os.path.join(planet_dir, "tile_manifest"))
         )
-    return _latest_wins(out, "_gen")
-
-
-def resolve_manifest(
-    spark: SparkSession, planet_dir: str
-) -> int:
-    """Fold the ``_manifest_delta`` log (written by defer_manifest folds)
-    into the base tile_manifest — latest-generation-wins per
-    (zoom, tile_h), exactly the tiles_delta discipline — and recompute
-    zoom_metrics from the resolved table. O(planet tiles) ONCE per
-    drain instead of once per fold. Returns the number of delta rows
-    folded (0 = nothing to do). Idempotent: a crash before the log
-    removal re-folds the same rows to the same result (each key's
-    latest generation is deterministic)."""
-    ddir = os.path.join(planet_dir, "_manifest_delta")
-    if not os.path.isdir(ddir):
-        return 0
-    deltas = spark.read.parquet(ddir)
-    n = deltas.count()
-    if n == 0:
-        shutil.rmtree(ddir)
-        return 0
-    splice_manifest(
-        spark, planet_dir, deltas.select("zoom", "tile_h").distinct(),
-        _latest_wins(deltas, "gen"), -1,
-    )
-    shutil.rmtree(ddir)
-    return int(n)
+        metrics_path = os.path.join(planet_dir, "zoom_metrics")
+        swap_write(local_frame(spark, metrics.collect(), metrics.schema), metrics_path)
+        write_lineage(metrics_path, compaction_gen=gens[-1])
+    return n
 
 
 def flush_deferred(
@@ -630,32 +562,31 @@ def flush_deferred(
     ``compact_planet(..., defer_zoom_below=z)``) into a new tile
     generation; returns the number of flushed tiles. One flush pays the
     low-zoom recompose ONCE for every batch deferred since the last
-    flush."""
+    flush. ``defer_manifest`` as in ``compact_planet``."""
     ddir = os.path.join(planet_dir, "_deferred_dirty")
-    if not os.path.isdir(ddir):
-        return 0
-    config = config or BuildConfig()
-    check_config(planet_dir, config, "flush")
-    pending = np.unique(
-        tile_keys(*int64_columns(spark.read.parquet(ddir).select("zoom", "tile_h")))
-    )
-    n = len(pending)
-    if n == 0:
+    n = 0
+    if os.path.isdir(ddir):
+        config = config or BuildConfig()
+        check_config(planet_dir, config, "flush")
+        pending = np.unique(
+            tile_keys(*int64_columns(spark.read.parquet(ddir).select("zoom", "tile_h")))
+        )
+        n = len(pending)
+        if n:
+            gen = next_generation(planet_dir)
+            t0 = time.time()
+            wrote = _recompose_dirty_tiles(
+                spark, planet_dir, *split_tile_keys(pending), config,
+                compile_rules(config.manifest), gen,
+            )
+            _append_log(
+                planet_dir,
+                {"gen": gen if wrote else None, "flush": True, "flushed_tiles": n,
+                 "wall_sec": round(time.time() - t0, 3)},
+            )
         shutil.rmtree(ddir)
-        return 0
-    gen = max(generations(planet_dir), default=0) + 1
-    compiled = compile_rules(config.manifest)
-    t0 = time.time()
-    wrote = _recompose_dirty_tiles(
-        spark, planet_dir, *split_tile_keys(pending), config, compiled, gen,
-        defer_manifest=defer_manifest,
-    )
-    shutil.rmtree(ddir)
-    _append_log(
-        planet_dir,
-        {"gen": gen if wrote else None, "flush": True, "flushed_tiles": n,
-         "wall_sec": round(time.time() - t0, 3)},
-    )
+    if not defer_manifest:
+        resolve_manifest(spark, planet_dir)
     return n
 
 
@@ -664,17 +595,14 @@ def materialize_tiles(
     planet_dir: str,
     config: BuildConfig | None = None,
 ) -> int:
-    """Fold all compaction generations into the base tiles dir (the
-    LSM 'major compaction'); returns the number of folded generations.
-    Flushes any deferred low-zoom dirty set first so the materialized
-    base is exact."""
-    flush_deferred(spark, planet_dir, config)
-    gens = generations(planet_dir)
-    if not gens:
-        return 0
-    resolved = read_tiles(spark, planet_dir)
-    tiles_path = os.path.join(planet_dir, "tiles")
-    swap_write(resolved, tiles_path, partition_by="zoom")
-    write_lineage(tiles_path, compaction_gen=gens[-1])
-    shutil.rmtree(os.path.join(planet_dir, "tiles_delta"))
-    return len(gens)
+    """Fold every logged table's generations into its base (the LSM
+    'major compaction': ``tiles`` and ``tile_tree`` here, the manifest
+    and zoom metrics through ``resolve_manifest``); returns the number
+    of folded tile generations. Flushes any deferred low-zoom dirty set
+    first so the materialized base is exact."""
+    flush_deferred(spark, planet_dir, config, defer_manifest=True)
+    n = len(generations(planet_dir, "tiles"))
+    materialize(spark, planet_dir, "tiles", partition_by="zoom")
+    materialize(spark, planet_dir, "tile_tree")
+    resolve_manifest(spark, planet_dir)
+    return n

@@ -38,7 +38,7 @@ from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.geo import grid_x, grid_y
@@ -101,6 +101,15 @@ def atomic_json_write(path: str, obj) -> None:
     os.replace(tmp, path)
 
 
+def _parquet_files(root: str):
+    """(path relative to ``root``, path) of every parquet file under it."""
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                fp = os.path.join(dirpath, fn)
+                yield os.path.relpath(fp, root), fp
+
+
 def write_lineage(stage_dir: str, **fields) -> None:
     """Merge ``fields`` into a stage's ``_lineage.json`` with its row
     count per parquet file, read from footers only (driver-side metadata,
@@ -116,19 +125,14 @@ def write_lineage(stage_dir: str, **fields) -> None:
     lin = read_json(lpath, {})
     prev = lin.get("partitions") or {}
     counts: dict[str, int] = {}
-    for root, _dirs, files in os.walk(stage_dir):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            fp = os.path.join(root, fn)
-            rel = os.path.relpath(fp, stage_dir)
-            if rel in prev:
-                counts[rel] = prev[rel]
-                continue
-            try:
-                counts[rel] = pq.ParquetFile(fp).metadata.num_rows
-            except Exception:
-                pass
+    for rel, fp in _parquet_files(stage_dir):
+        if rel in prev:
+            counts[rel] = prev[rel]
+            continue
+        try:
+            counts[rel] = pq.ParquetFile(fp).metadata.num_rows
+        except Exception:
+            pass
     lin.update(fields, row_count=int(sum(counts.values())), partitions=counts)
     atomic_json_write(lpath, lin)
 
@@ -151,14 +155,104 @@ def swap_write(df: DataFrame, path: str, partition_by: str | None = None) -> Non
     os.rename(tmp, path)
 
 
-def generations(planet_dir: str) -> list[int]:
-    """Committed ``tiles_delta/gen=N`` tile generations, ascending."""
-    delta_dir = os.path.join(planet_dir, "tiles_delta")
-    if not os.path.isdir(delta_dir):
+# ---------------------------------------------------------------------------
+# Generation logs: a fold never rewrites a base table. The rows it changes
+# in a (zoom, tile_h)-keyed table land in ``<table>_delta/gen=N``; readers
+# resolve the base plus the committed generations latest-wins per key,
+# and ``materialize`` folds a log back into its base
+# ---------------------------------------------------------------------------
+
+# the tables a fold changes by key; every fold or flush takes ONE
+# generation number for all of them
+LOGGED_TABLES = ("tiles", "tile_tree", "tile_manifest")
+
+
+def gen_path(planet_dir: str, table: str, gen: int) -> str:
+    return os.path.join(planet_dir, f"{table}_delta", f"gen={gen}")
+
+
+def _gen_dirs(planet_dir: str, table: str) -> list[int]:
+    """The numbers of every ``gen=N`` dir of ``table``'s log."""
+    log = os.path.join(planet_dir, f"{table}_delta")
+    if not os.path.isdir(log):
         return []
+    return [int(d[len("gen="):]) for d in os.listdir(log) if d.startswith("gen=")]
+
+
+def generations(planet_dir: str, table: str) -> list[int]:
+    """Committed generations of ``table``'s log, ascending: the
+    ``gen=N`` dirs whose write committed (Spark's ``_SUCCESS`` marker).
+    An interrupted write leaves none, so no reader sees its files."""
     return sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(delta_dir) if d.startswith("gen=")
+        g
+        for g in _gen_dirs(planet_dir, table)
+        if os.path.exists(os.path.join(gen_path(planet_dir, table, g), "_SUCCESS"))
     )
+
+
+def next_generation(planet_dir: str) -> int:
+    """One past the highest ``gen=`` dir of any table's log, committed
+    or not: a fold that logs only the tree still uses up its number, and
+    an interrupted write's number is never reused."""
+    return 1 + max((g for t in LOGGED_TABLES for g in _gen_dirs(planet_dir, t)), default=0)
+
+
+def overlay(base: DataFrame, rows: DataFrame) -> DataFrame:
+    """``base`` with the rows of ``rows``' (zoom, tile_h) keys replaced by
+    ``rows`` (``base``'s columns of them): a broadcast anti-join, so the
+    base is not shuffled."""
+    keys = F.broadcast(rows.select("zoom", "tile_h"))
+    return base.join(keys, ["zoom", "tile_h"], "left_anti").unionByName(
+        rows.select(*base.columns)
+    )
+
+
+def read_table(spark: SparkSession, planet_dir: str, table: str) -> DataFrame:
+    """A planet table as of its newest committed generation: per
+    (zoom, tile_h) the row of the highest generation wins, the base
+    table being generation 0. A table without a log is its base scan.
+
+    A generation holds one row per key (every writer writes a key once),
+    so only two or more generations need the per-key window. Key
+    predicates above the view (serve.py's tile lookups) push down to
+    every scan: through the union, the anti-join's left side and the
+    window."""
+    base = spark.read.parquet(os.path.join(planet_dir, table))
+    gens = generations(planet_dir, table)
+    if not gens:
+        return base
+    log = None
+    for g in gens:
+        rows = spark.read.schema(base.schema).parquet(gen_path(planet_dir, table, g))
+        rows = rows.withColumn("_gen", F.lit(g))
+        log = rows if log is None else log.unionByName(rows)
+    if len(gens) > 1:
+        newest = Window.partitionBy("zoom", "tile_h").orderBy(F.col("_gen").desc())
+        log = log.withColumn("_rn", F.row_number().over(newest)).where(F.col("_rn") == 1)
+    return overlay(base, log)
+
+
+def materialize(
+    spark: SparkSession, planet_dir: str, table: str, partition_by: str | None = None
+) -> int:
+    """Fold ``table``'s committed generations into its base (the LSM
+    'major compaction'), stamp the base's lineage with the newest one
+    and drop the log, uncommitted leftovers included. Returns the number
+    of log rows folded, read from parquet footers (0: nothing to do)."""
+    import pyarrow.parquet as pq
+
+    gens = generations(planet_dir, table)
+    n = sum(
+        pq.read_metadata(fp).num_rows
+        for g in gens
+        for _, fp in _parquet_files(gen_path(planet_dir, table, g))
+    )
+    if gens:
+        path = os.path.join(planet_dir, table)
+        swap_write(read_table(spark, planet_dir, table), path, partition_by)
+        write_lineage(path, compaction_gen=gens[-1])
+    shutil.rmtree(os.path.join(planet_dir, f"{table}_delta"), ignore_errors=True)
+    return n
 
 
 def check_config(planet_dir: str, config: BuildConfig, what: str) -> None:
@@ -170,40 +264,12 @@ def check_config(planet_dir: str, config: BuildConfig, what: str) -> None:
         raise ValueError(f"{what} config fingerprint does not match the base build")
 
 
-def splice_manifest(
-    spark: SparkSession, planet_dir: str, drop_keys: DataFrame,
-    new_rows: DataFrame, gen: int,
-) -> None:
-    """Replace the tile_manifest rows of ``drop_keys`` by ``new_rows``,
-    recompute zoom_metrics from the result, swap-write both and stamp
-    their lineage with compaction generation ``gen``."""
-    man_path = os.path.join(planet_dir, "tile_manifest")
-    old_man = spark.read.parquet(man_path)
-    spliced = (
-        old_man.join(drop_keys, ["zoom", "tile_h"], "left_anti")
-        .unionByName(new_rows.select(*old_man.columns))
-        .persist()
-    )
-    # per-zoom rollup is ~a dozen rows: collect it off the cached splice
-    # BEFORE the swap (so no plan ever re-reads the replaced path), then
-    # write it back as a literal frame — one manifest scan serves both
-    # tables instead of write + re-read + re-agg
-    metrics = zoom_metrics_from_manifest(spliced)
-    metrics_rows = metrics.collect()
-    swap_write(spliced, man_path)
-    write_lineage(man_path, compaction_gen=gen)
-    metrics_path = os.path.join(planet_dir, "zoom_metrics")
-    swap_write(local_frame(spark, metrics_rows, metrics.schema), metrics_path)
-    spliced.unpersist()
-    write_lineage(metrics_path, compaction_gen=gen)
-
-
 def timed(steps: dict, name: str, fn):
-    """Run ``fn``, record its wall seconds as ``steps[name]`` and return
-    its result."""
+    """Run ``fn``, add its wall seconds to ``steps[name]`` and return its
+    result."""
     t = time.time()
     out = fn()
-    steps[name] = round(time.time() - t, 3)
+    steps[name] = round(steps.get(name, 0.0) + time.time() - t, 3)
     return out
 
 

@@ -313,9 +313,9 @@ def run_incremental_build(
         applied = {r["stream_batch_id"] for r in log if "stream_batch_id" in r}
         if batch_id in applied:
             return  # crash-replay of an already-folded batch
-        # manifest maintenance defers to a delta log during the drain
-        # (the splice was the last per-fold O(planet-tiles) term) and
-        # resolves once after awaitTermination below
+        # each fold logs its manifest rows; folding the log into the
+        # base manifest (O(planet tiles)) runs once, after
+        # awaitTermination below
         compact_planet(
             spark, planet_dir, batch_df, config,
             defer_zoom_below=defer_zoom_below,
@@ -346,7 +346,7 @@ def run_incremental_build(
     )
     if await_termination:
         q.awaitTermination()
-        # fold the per-batch manifest delta log into the base table once
+        # fold the drain's tile_manifest generations into the base once
         # (latest-generation-wins). A crash before this point leaves the
         # log in place; the next drain's resolve folds it — idempotent.
         resolve_manifest(spark, planet_dir)

@@ -19,7 +19,7 @@ from pvt_spark.plans.compaction import (
     materialize_tiles,
     read_tiles,
 )
-from pvt_spark.plans.pipeline import BuildConfig, build_planet
+from pvt_spark.plans.pipeline import BuildConfig, build_planet, overlay, read_table
 from pvt_spark.sources.pages import synthesize_pages
 
 
@@ -79,9 +79,8 @@ def test_compaction_equals_full_rebuild(spark, tmp_path):
     )
     assert 0 < n_recomposed < len(full_tiles)
 
-    assert _rows(spark.read.parquet(inc_dir + "/tile_tree")) == _rows(
-        spark.read.parquet(full_dir + "/tile_tree")
-    )
+    full_tree = _rows(spark.read.parquet(full_dir + "/tile_tree"))
+    assert _rows(read_table(spark, inc_dir, "tile_tree")) == full_tree
     assert _rows(spark.read.parquet(inc_dir + "/tile_manifest")) == _rows(
         spark.read.parquet(full_dir + "/tile_manifest")
     )
@@ -110,11 +109,16 @@ def test_compaction_equals_full_rebuild(spark, tmp_path):
             assert isinstance(json.load(f)["wall_sec"], float), st
 
     # serve path resolves through the generation view pre-materialize
-    assert _tile_map(open_planet(spark, inc_dir)["tiles"]) == full_tiles
+    opened = open_planet(spark, inc_dir)
+    assert sorted(opened) == ["content", "points_sorted", "tile_tree", "tiles"]
+    assert _tile_map(opened["tiles"]) == full_tiles
+    assert _rows(opened["tile_tree"]) == full_tree
 
     # major compaction folds generations, payloads unchanged
     assert materialize_tiles(spark, inc_dir) == 2
     assert _tile_map(spark.read.parquet(inc_dir + "/tiles")) == full_tiles
+    assert _rows(spark.read.parquet(inc_dir + "/tile_tree")) == full_tree
+    assert not any(d.endswith("_delta") for d in os.listdir(inc_dir))
     assert materialize_tiles(spark, inc_dir) == 0
 
 
@@ -185,7 +189,7 @@ def test_compaction_mixed_planet_point_delta(spark, tmp_path):
 
     full_tiles = _tile_map(spark.read.parquet(full_dir + "/tiles"))
     assert _tile_map(read_tiles(spark, inc_dir)) == full_tiles and full_tiles
-    assert _rows(spark.read.parquet(inc_dir + "/tile_tree")) == _rows(
+    assert _rows(read_table(spark, inc_dir, "tile_tree")) == _rows(
         spark.read.parquet(full_dir + "/tile_tree")
     )
     assert _rows(spark.read.parquet(inc_dir + "/tile_manifest")) == _rows(
@@ -305,6 +309,127 @@ def test_flush_without_point_content_writes_no_generation(spark, tmp_path):
     assert _tile_map(spark.read.parquet(planet + "/tiles")) == full_tiles
 
 
+def _files(planet, tables):
+    """(table, relative path) -> (size, mtime_ns) of every file under the
+    given tables' directories."""
+    out = {}
+    for t in tables:
+        root = os.path.join(planet, t)
+        for dirpath, _dirs, names in os.walk(root):
+            for n in names:
+                st = os.stat(os.path.join(dirpath, n))
+                out[t, os.path.relpath(os.path.join(dirpath, n), root)] = (
+                    st.st_size, st.st_mtime_ns,
+                )
+    return out
+
+
+@pytest.mark.parametrize("mixed", [False, True])
+def test_deferred_manifest_fold_rewrites_no_base_table(spark, tmp_path, mixed):
+    """A defer_manifest fold writes only generation logs: every file of
+    the tiles, tile_tree, tile_manifest and zoom_metrics base tables
+    keeps its name, size and mtime, and each logged table gets one
+    committed generation."""
+    cfg = BuildConfig(synth_ways=20, synth_relations=3) if mixed else BuildConfig()
+    planet = str(tmp_path / "p")
+    build_planet(spark, synthesize_pages(spark, 80, seed=21, partitions=1), planet, cfg)
+    bases = ["tiles", "tile_tree", "tile_manifest", "zoom_metrics"]
+    before = _files(planet, bases)
+    assert before
+
+    s = compact_planet(
+        spark, planet, synthesize_pages(spark, 30, seed=22, partitions=1, start=80),
+        cfg, defer_manifest=True,
+    )
+    assert s["gen"] == 1 and s["dirty_tiles"] > 0
+    assert _files(planet, bases) == before
+    for t in ("tiles", "tile_tree", "tile_manifest"):
+        assert os.path.exists(os.path.join(planet, f"{t}_delta", "gen=1", "_SUCCESS")), t
+
+
+def test_uncommitted_generation_is_invisible(spark, tmp_path):
+    """An interrupted generation write (files under ``_temporary``, or a
+    gen dir without ``_SUCCESS``) is invisible to read_tiles, to both
+    lookup paths of open_planet and to the tree reader; the next fold
+    takes a fresh number and, with materialize_tiles, equals a cold
+    rebuild."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from pvt_spark.operators.serve import tile_lookup
+    from pvt_spark.tile import Tile
+
+    cfg = BuildConfig()
+    p0 = synthesize_pages(spark, 60, seed=1, partitions=1)
+    d1 = synthesize_pages(spark, 30, seed=2, partitions=1, start=60)
+    d2 = synthesize_pages(spark, 30, seed=3, partitions=1, start=90)
+    planet = str(tmp_path / "inc")
+    build_planet(spark, p0, planet, cfg)
+    assert compact_planet(spark, planet, d1, cfg)["gen"] == 1
+
+    def lookups(tiles, keys):
+        out = []
+        for z, h in keys:
+            t = Tile.from_zh(z, h)
+            out.append(tile_lookup(tiles, z, t.x, t.y).collect())
+        return out
+
+    keys = sorted(_tile_map(read_tiles(spark, planet)))[::7]
+    opened = open_planet(spark, planet)
+    want = (
+        _tile_map(read_tiles(spark, planet)),
+        _tile_map(opened["tiles"]),
+        lookups(opened["tiles"], keys),
+        lookups(read_tiles(spark, planet), keys),
+        _rows(read_table(spark, planet, "tile_tree")),
+    )
+
+    # what a crash mid-write leaves: task output under _temporary, and a
+    # gen dir holding data but no _SUCCESS marker
+    src = next(
+        os.path.join(dp, n)
+        for dp, _d, ns in os.walk(os.path.join(planet, "tiles_delta", "gen=1"))
+        for n in ns if n.endswith(".parquet")
+    )
+    tmp = os.path.join(planet, "tiles_delta", "gen=2", "_temporary", "0")
+    os.makedirs(tmp)
+    shutil.copy(src, os.path.join(tmp, "part.parquet"))
+    tree_gen = os.path.join(planet, "tile_tree_delta", "gen=2")
+    os.makedirs(tree_gen)
+    rows = read_table(spark, planet, "tile_tree").limit(3).toArrow()
+    i = rows.schema.get_field_index("n_count")
+    rows = rows.set_column(i, "n_count", pc.multiply(rows.column(i), 1000))
+    pq.write_table(rows, os.path.join(tree_gen, "part-0.parquet"))
+
+    opened = open_planet(spark, planet)
+    got = (
+        _tile_map(read_tiles(spark, planet)),
+        _tile_map(opened["tiles"]),
+        lookups(opened["tiles"], keys),
+        lookups(read_tiles(spark, planet), keys),
+        _rows(read_table(spark, planet, "tile_tree")),
+    )
+    assert got == want
+
+    assert compact_planet(spark, planet, d2, cfg)["gen"] == 3
+    full = str(tmp_path / "full")
+    build_planet(spark, p0.unionByName(d1).unionByName(d2), full, cfg)
+    full_tiles = _tile_map(spark.read.parquet(full + "/tiles"))
+    full_tree = _rows(spark.read.parquet(full + "/tile_tree"))
+    assert _tile_map(read_tiles(spark, planet)) == full_tiles
+    assert _rows(read_table(spark, planet, "tile_tree")) == full_tree
+    assert materialize_tiles(spark, planet, cfg) == 2
+    assert _tile_map(spark.read.parquet(planet + "/tiles")) == full_tiles
+    assert _rows(spark.read.parquet(planet + "/tile_tree")) == full_tree
+    for t in ("tile_manifest", "zoom_metrics"):
+        assert _rows(spark.read.parquet(f"{planet}/{t}")) == _rows(
+            spark.read.parquet(f"{full}/{t}")
+        ), t
+    assert not any(d.endswith("_delta") for d in os.listdir(planet))
+
+
 def _points_in_leaves(leaf_ids, leaf_zoom, rng):
     """1-3 random points (biased-signed h rows) inside each leaf tile."""
     shift = 2 * (32 - leaf_zoom)
@@ -355,7 +480,10 @@ def test_tree_delta_splice_equals_rebuild(spark, leaf_zoom, seed):
     want = build_tile_tree(
         build_leaves(old_pts.unionByName(delta_pts), leaf_zoom), leaf_zoom
     )
-    assert _rows(got) == _rows(want)
+    # the splice is the ladder keys' rows; overlaid on the old tree (the
+    # tree reader's shape) it is the rebuilt tree
+    assert {(r.zoom, r.tile_h) for r in got.collect()} == set(keys)
+    assert _rows(overlay(old_tree, got)) == _rows(want)
     assert got.columns == old_tree.columns
 
 
@@ -363,15 +491,17 @@ def test_dirty_content_pushes_range_predicates(spark, tmp_path):
     """The coarse per-zoom tile_h ranges must reach the parquet scan as
     pushed filters (row-group skipping for spatially clustered deltas);
     the exact dirty-key restriction rides a broadcast semi-join above."""
-    from pvt_spark.plans.compaction import _dirty_content
+    from pvt_spark.plans.compaction import _rows_at_keys
 
     cfg = BuildConfig()
     p0 = synthesize_pages(spark, 60, seed=44, partitions=1)
     planet = str(tmp_path / "p")
     build_planet(spark, p0, planet, cfg)
 
-    df = _dirty_content(
-        spark, planet + "/content", np.array([12, 12, 10]), np.array([100, 200, 50])
+    df = _rows_at_keys(
+        spark.read.parquet(planet + "/content"),
+        np.array([12, 12, 10]),
+        np.array([100, 200, 50]),
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "GreaterThanOrEqual(tile_h" in plan, plan[:2000]
@@ -398,7 +528,7 @@ def test_merge_intervals_unit():
 def test_dirty_content_interval_pruning(spark, tmp_path):
     """Clustered dirt produces a multi-interval pushed predicate; the
     semi-join result is exactly the dirty keys' rows either way."""
-    from pvt_spark.plans.compaction import _dirty_content
+    from pvt_spark.plans.compaction import _rows_at_keys
 
     content = spark.range(10_000).selectExpr(
         "cast(12 as int) as zoom", "id as tile_h", "id as feature_id"
@@ -407,7 +537,7 @@ def test_dirty_content_interval_pruning(spark, tmp_path):
     content.write.partitionBy("zoom").parquet(path)
     # two tight clusters far apart
     hs = np.r_[100:110, 9000:9010]
-    got = _dirty_content(spark, path, np.full(len(hs), 12), hs)
+    got = _rows_at_keys(spark.read.parquet(path), np.full(len(hs), 12), hs)
     plan = got._jdf.queryExecution().executedPlan().toString()
     # the pushed filter carries BOTH interval bounds, not one world range
     assert "9000" in plan and "109" in plan, plan[:1500]
@@ -433,18 +563,20 @@ def test_resolve_manifest_latest_wins_and_idempotent(spark, tmp_path):
     spark.createDataFrame(
         [(12, 1)], "zoom int, tile_count long"
     ).write.parquet(os.path.join(planet, "zoom_metrics"))
-    ddir = os.path.join(planet, "_manifest_delta")
-    rows = [
-        (12, 1, 6, 6, 1),          # updates base key at gen 1
-        (12, 1, 8, 8, 2),          # ... superseded by gen 2
-        (12, 1, 8, 8, 2),          # crash-replay duplicate (identical)
-        (12, 5, 2, 2, 2),          # brand-new key
-    ]
-    spark.createDataFrame(
-        rows,
-        "zoom int, tile_h long, feature_count long, distinct_features long,"
-        " gen int",
-    ).write.mode("append").parquet(ddir)
+    ddir = os.path.join(planet, "tile_manifest_delta")
+    rows = {
+        1: [(12, 1, 6, 6)],        # updates base key at gen 1
+        2: [
+            (12, 1, 8, 8),         # ... superseded by gen 2
+            (12, 1, 8, 8),         # crash-replay duplicate (identical)
+            (12, 5, 2, 2),         # brand-new key
+        ],
+    }
+    for gen, gen_rows in rows.items():
+        spark.createDataFrame(
+            gen_rows,
+            "zoom int, tile_h long, feature_count long, distinct_features long",
+        ).write.parquet(os.path.join(ddir, f"gen={gen}"))
     n = resolve_manifest(spark, planet)
     assert n == 4
     got = {

@@ -196,6 +196,25 @@ def test_streaming_dirty_tile_log(spark, tmp_path):
     assert got2 == oracle(d2) and got2
 
 
+def _table_rows(df):
+    """A table's rows as a set of tuples, ``zoom`` first."""
+    cols = ["zoom"] + sorted(c for c in df.columns if c != "zoom")
+    return {tuple(r) for r in df.select(*cols).collect()}
+
+
+def _drained_tables(spark, planet):
+    """The tree (through its reader), manifest and zoom metrics of a
+    drained planet, as row sets."""
+    import os
+
+    from pvt_spark.plans.pipeline import read_table
+
+    return {
+        t: _table_rows(spark.read.parquet(os.path.join(planet, t)))
+        for t in ("tile_manifest", "zoom_metrics")
+    } | {"tile_tree": _table_rows(read_table(spark, planet, "tile_tree"))}
+
+
 def test_run_incremental_build(spark, tmp_path):
     """Streamed micro-batches maintain the planet: bootstrap on the
     first batch, dirty-tile compaction on later ones — end state
@@ -245,6 +264,10 @@ def test_run_incremental_build(spark, tmp_path):
     assert tiles_md5(read_tiles(spark, planet)) == tiles_md5(
         spark.read.parquet(full + "/tiles")
     )
+    # the drained tree (through its generation reader), manifest and
+    # zoom metrics equal the cold rebuild's
+    for table, got in _drained_tables(spark, planet).items():
+        assert got == _table_rows(spark.read.parquet(f"{full}/{table}")), table
 
 
 def test_run_incremental_build_deferred_flush(spark, tmp_path):
@@ -298,3 +321,6 @@ def test_run_incremental_build_deferred_flush(spark, tmp_path):
     # flush covered batches 1-2; batch 3's low zooms still deferred
     hi = {k: v for k, v in want.items() if k[0] >= 8}
     assert {k: v for k, v in got.items() if k[0] >= 8} == hi
+    for table, rows in _drained_tables(spark, planet).items():
+        cold = _table_rows(spark.read.parquet(f"{full}/{table}"))
+        assert {r for r in rows if r[0] >= 8} == {r for r in cold if r[0] >= 8}, table
