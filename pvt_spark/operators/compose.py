@@ -23,6 +23,12 @@ Spark design (north rule: explicit salting for hot tiles):
            are contiguous in the sorted partition): global h-order
            restore, first-seen interning (A6), emit the payload.
 
+Shuffle widths: both keyed shuffles (and the point fast path's phase
+2) are ``repartition(<keys>)`` with no partition count, so AQE sizes
+each from its bytes (coalescing hash partitions keeps a tile in one
+partition); the hot-tile salt, not the width, is what spreads a dense
+tile's work.
+
 Why mapInPandas and not groupBy().applyInPandas: with millions of
 small tiles the per-group UDF dispatch dominates (measured 146s of a
 162s build at 14k groups); batch-level pandas groupby removes the
@@ -41,6 +47,7 @@ from pyspark.sql import functions as F
 
 from .. import hilbert as hb
 from ..functions.pvt_codec import MAGIC, VERSION, encode_tile_arrays
+from ..session import persist
 from ..tile import tile_project
 from .simplify import DEFAULT_TOLERANCE, simplify_many
 
@@ -432,7 +439,6 @@ def geometry_chunks(
     render_features: DataFrame,
     salt_threshold: int = 100_000,
     tolerance: float = DEFAULT_TOLERANCE,
-    partitions: int | None = None,
     projected: bool = False,
 ) -> DataFrame:
     """Phase 0 + 1 of the generic compose: salted, projected, simplified
@@ -444,9 +450,6 @@ def geometry_chunks(
     share one format, so a mixed node/way/relation build merges them in
     ONE phase 2 (``compose_points_presorted(extra_chunks=...)``).
     """
-    spark = render_features.sparkSession
-    partitions = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
     # phase 0: hot-tile salt factors (map-side-combined count, tiny result)
     counts = render_features.groupBy("zoom", "tile_h").agg(F.count(F.lit(1)).alias("cnt"))
     hot = counts.where(F.col("cnt") > salt_threshold).select(
@@ -465,22 +468,16 @@ def geometry_chunks(
     sort_cols = ["zoom", "tile_h", "salt", "layer", "h", "feature_id"]
     if "geom_seq" in salted.columns:
         sort_cols.append("geom_seq")
-    part1 = salted.repartition(
-        partitions, "zoom", "tile_h", "salt"
-    ).sortWithinPartitions(*sort_cols)
+    part1 = salted.repartition("zoom", "tile_h", "salt").sortWithinPartitions(*sort_cols)
     return part1.mapInPandas(
         lambda it: _phase1_stream(it, tolerance, projected), CHUNK_SCHEMA
     )
 
 
-def merge_chunks(
-    chunks: DataFrame, layer_order: list[str], partitions: int | None = None
-) -> DataFrame:
+def merge_chunks(chunks: DataFrame, layer_order: list[str]) -> DataFrame:
     """Phase 2: shuffle chunk rows by (zoom, tile_h) and merge into final
     tile payloads. Input chunks may come from any phase-1 producer."""
-    spark = chunks.sparkSession
-    partitions = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    part2 = chunks.repartition(partitions, "zoom", "tile_h").sortWithinPartitions(
+    part2 = chunks.repartition("zoom", "tile_h").sortWithinPartitions(
         "zoom", "tile_h", "layer", "salt"
     )
     return part2.mapInPandas(lambda it: _phase2_stream(it, layer_order), TILE_SCHEMA)
@@ -491,7 +488,6 @@ def compose_tiles(
     layer_order: list[str],
     salt_threshold: int = 100_000,
     tolerance: float = DEFAULT_TOLERANCE,
-    partitions: int | None = None,
 ) -> DataFrame:
     """render_features(zoom, tile_h, feature_id, h, layer, out_tags,
     geom_x array<long>, geom_y array<long>) -> tiles table.
@@ -499,9 +495,7 @@ def compose_tiles(
     ``layer`` must already be exploded (one row per feature x layer).
     """
     return merge_chunks(
-        geometry_chunks(render_features, salt_threshold, tolerance, partitions),
-        layer_order,
-        partitions,
+        geometry_chunks(render_features, salt_threshold, tolerance), layer_order
     )
 
 
@@ -819,7 +813,6 @@ def compose_points_presorted(
     render_features: DataFrame,
     layer_order: list[str],
     tolerance: float = DEFAULT_TOLERANCE,
-    merge_partitions: int | None = None,
     exclude_keys=None,
     extra_chunks: DataFrame | None = None,
     file_marker: bool = True,
@@ -843,7 +836,6 @@ def compose_points_presorted(
     every other tile keeps the finals fast path.
     """
     spark = render_features.sparkSession
-    merge_partitions = merge_partitions or 8
     # demotion key set rides a broadcast variable, not the task closure
     bc_exclude = (
         spark.sparkContext.broadcast(exclude_keys) if exclude_keys is not None else None
@@ -855,10 +847,14 @@ def compose_points_presorted(
     # as a file boundary, so the payloads are unchanged.
     marker = F.xxhash64(F.input_file_name()) if file_marker else F.lit(0)
     with_file = render_features.withColumn("_file", marker)
-    ph1 = with_file.mapInPandas(
-        lambda it: _phase1_points_stream(it, tolerance, bc_exclude),
-        UNIFIED_SCHEMA,
-    ).persist()
+    # finals and partials both read phase 1: cached, released with the
+    # enclosing held_caches block (the tiles write)
+    ph1 = persist(
+        with_file.mapInPandas(
+            lambda it: _phase1_points_stream(it, tolerance, bc_exclude),
+            UNIFIED_SCHEMA,
+        )
+    )
     finals = ph1.where(F.col("final")).select(*_TILE_COLS)
     partials = ph1.where(~F.col("final")).select(
         "zoom", "tile_h", F.lit(0).alias("salt"), "layer", "n_features", "chunk"
@@ -866,7 +862,7 @@ def compose_points_presorted(
     if extra_chunks is not None:
         partials = partials.unionByName(extra_chunks)
     merged = (
-        partials.repartition(merge_partitions, "zoom", "tile_h")
+        partials.repartition("zoom", "tile_h")
         .sortWithinPartitions("zoom", "tile_h", "layer", "salt")
         .mapInPandas(lambda it: _phase2_stream(it, layer_order), TILE_SCHEMA)
     )

@@ -17,34 +17,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..session import persist
+
 
 def hilbert_sort(
-    df: DataFrame,
-    h_col: str = "h",
-    num_partitions: int | None = None,
-    persist_input: bool = True,
+    df: DataFrame, h_col: str = "h", num_partitions: int | None = None
 ) -> DataFrame:
     """Range-partition + sort by the (biased signed) Hilbert key.
 
     ``repartitionByRange`` executes its child an EXTRA time to sample
-    range boundaries; when the input is an expensive computed chain
-    (extraction/geotag kernels), persist it first so the sampling pass
-    reads the cache instead of recomputing (~2x stage speedup measured).
+    range boundaries; the input is an expensive computed chain
+    (extraction/geotag kernels), so it is persisted first and the
+    sampling pass reads the cache instead of recomputing (~2x stage
+    speedup measured). The cache is released with the enclosing
+    ``session.held_caches`` block (the stage write, the fold).
     """
-    if persist_input:
-        df = df.persist()
+    df = persist(df)
     if num_partitions:
         out = df.repartitionByRange(num_partitions, h_col)
     else:
         out = df.repartitionByRange(h_col)
     return out.sortWithinPartitions(h_col)
-
-
-def write_sorted(df: DataFrame, path: str, h_col: str = "h", num_partitions: int | None = None) -> None:
-    """Persist in Hilbert order (Iceberg-style sorted snapshot).
-
-    Parquet row groups inherit the sort, so min/max column stats on h
-    play the role of the reference's tree descent (J7 partition
-    pruning) on read.
-    """
-    hilbert_sort(df, h_col, num_partitions).write.mode("overwrite").parquet(path)

@@ -63,7 +63,7 @@ from ..manifest import compile_rules
 from ..operators.compose import split_tile_keys, tile_keys
 from ..operators.content import tile_manifest, zoom_metrics_from_manifest
 from ..operators.leaves import build_leaves
-from ..session import int64_columns, local_frame
+from ..session import held_caches, int64_columns, local_frame, persist
 from .pipeline import (
     BuildConfig,
     atomic_json_write,
@@ -228,6 +228,7 @@ def _rows_at_keys(
     )
 
 
+@held_caches()
 def _recompose_dirty_tiles(
     spark: SparkSession,
     planet_dir: str,
@@ -266,66 +267,58 @@ def _recompose_dirty_tiles(
     # sort-within gives compose_points_presorted exactly the contract it
     # needs (a tile's rows in ONE partition, contiguous), without the
     # range-boundary sampling pass, the parquet write, or the read-back.
-    # The count materializes the cache ONCE so the two concurrent
-    # consumers below (tile and manifest writes) both read it instead
-    # of racing to recompute the scan+shuffle.
-    # cluster width follows the DIRTY TILE count (~500 tiles per python
-    # phase-1 task), not the corpus conf: an explicit conf-width
-    # repartition spread a few thousand dirty tiles over 128 python
-    # tasks and wrote hundreds of near-empty gen files per fold
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    n_parts = max(8, min(conf_parts, len(zoom) // 500 + 1))
-    dirty_sorted = (
-        dirty_all.repartition(n_parts, "zoom", "tile_h")
-        .sortWithinPartitions("zoom", "tile_h")
-        .persist()
+    # No partition count: AQE coalesces the shuffle from the dirty
+    # slice's bytes (a persisted plan may coalesce, see get_spark), so a
+    # few thousand dirty tiles run as a few tasks and write a few files
+    # per zoom. The count materializes the cache ONCE so the two
+    # concurrent consumers below (tile and manifest writes) both read it
+    # instead of racing to recompute the scan+shuffle.
+    dirty_sorted = persist(
+        dirty_all.repartition("zoom", "tile_h").sortWithinPartitions("zoom", "tile_h")
     )
     if not timed(steps, "dirty_cluster", dirty_sorted.count):
         # no point content at any key: multi-point content alone never
         # changes under a page delta, so every such tile is unchanged
-        dirty_sorted.unpersist()
         return False
     mp_dirty = None
-    try:
-        if mixed:
-            # same merge shape as build_planet's mixed compose, restricted
-            # to the dirty keys: the mp tile subset demotes from finals to
-            # chunks and merges with its (unchanged) geometry chunks
-            mp_dirty = spark.read.parquet(
-                os.path.join(planet_dir, "content_mp")
-            ).join(F.broadcast(dirty), ["zoom", "tile_h"], "left_semi").persist()
-        recomposed = compose_planet_tiles(
-            dirty_sorted, mp_dirty, compiled, config, file_marker=False
+    if mixed:
+        # same merge shape as build_planet's mixed compose, restricted
+        # to the dirty keys: the mp tile subset demotes from finals to
+        # chunks and merges with its (unchanged) geometry chunks
+        mp_dirty = persist(
+            spark.read.parquet(os.path.join(planet_dir, "content_mp")).join(
+                F.broadcast(dirty), ["zoom", "tile_h"], "left_semi"
+            )
+        )
+    recomposed = compose_planet_tiles(
+        dirty_sorted, mp_dirty, compiled, config, file_marker=False
+    )
+
+    def _gen_write() -> None:
+        recomposed.write.mode("overwrite").partitionBy("zoom").parquet(
+            gen_path(planet_dir, "tiles", gen)
         )
 
-        def _gen_write() -> None:
-            recomposed.write.mode("overwrite").partitionBy("zoom").parquet(
-                gen_path(planet_dir, "tiles", gen)
-            )
+    # the keys' new per-tile counts (one row per dirty key with
+    # content); resolve_manifest folds them into the base manifest
+    # and rewrites the zoom metrics
+    def _manifest_metrics() -> None:
+        (
+            tile_manifest(manifest_input(dirty_sorted, mp_dirty))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(gen_path(planet_dir, "tile_manifest", gen))
+        )
 
-        # the keys' new per-tile counts (one row per dirty key with
-        # content); resolve_manifest folds them into the base manifest
-        # and rewrites the zoom metrics
-        def _manifest_metrics() -> None:
-            (
-                tile_manifest(manifest_input(dirty_sorted, mp_dirty))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(gen_path(planet_dir, "tile_manifest", gen))
-            )
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_gen = pool.submit(timed, steps, "recompose", _gen_write)
-            f_man = pool.submit(timed, steps, "manifest_metrics", _manifest_metrics)
-            f_gen.result()
-            f_man.result()
-    finally:
-        if mp_dirty is not None:
-            mp_dirty.unpersist()
-        dirty_sorted.unpersist()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_gen = pool.submit(timed, steps, "recompose", _gen_write)
+        f_man = pool.submit(timed, steps, "manifest_metrics", _manifest_metrics)
+        f_gen.result()
+        f_man.result()
     return True
 
 
+@held_caches()
 def compact_planet(
     spark: SparkSession,
     planet_dir: str,
@@ -376,20 +369,7 @@ def compact_planet(
     compiled = compile_rules(config.manifest)
     t0 = time.time()
     steps: dict[str, float] = {}
-    _last = [t0]
-
-    def _mark(name: str) -> None:
-        now = time.time()
-        steps[name] = round(now - _last[0], 3)
-        _last[0] = now
-
     gen = next_generation(planet_dir)
-
-    # 1. delta points (same fused extract+featureize+sort kernel as the
-    #    points_sorted stage), persisted — three derivations read it,
-    #    and delta batches are micro-batch sized by design
-    delta_points = sorted_points(delta_pages, config).persist()
-    n_delta = delta_points.count()
 
     def _log_summary(summary: dict) -> dict:
         if not defer_manifest:
@@ -403,23 +383,26 @@ def compact_planet(
         _append_log(planet_dir, summary)
         return summary
 
-    if n_delta == 0:
+    # 1. delta points (same fused extract+featureize+sort kernel as the
+    #    points_sorted stage), persisted — three derivations read it,
+    #    and delta batches are micro-batch sized by design. ONE Arrow
+    #    collect of the delta leaf aggregate materializes it and feeds
+    #    the row count, the dirty set (2. each leaf's even-zoom ancestor
+    #    ladder) and the tree splice
+    lz = config.leaf_zoom
+    delta_points = persist(sorted_points(delta_pages, config))
+    leaf_agg = build_leaves(delta_points, lz).select(*_LEAF_COLS)
+    leaves = dict(
+        zip(_LEAF_COLS, timed(steps, "delta_points", lambda: int64_columns(leaf_agg)))
+    )
+    if not len(leaves["leaf_h"]):
         # no geo mention in the delta: nothing is dirty, so the fold
         # writes no generation (an empty one has no files to read back)
-        delta_points.unpersist()
-        _mark("delta_points")
         return _log_summary(
             {"gen": None, "delta_rows": 0, "dirty_tiles": 0, "deferred_tiles": 0}
         )
-    # ONE Arrow collect of the delta leaf aggregate feeds both the dirty
-    # set (2. each leaf's even-zoom ancestor ladder) and the tree splice
-    lz = config.leaf_zoom
-    leaf_agg = build_leaves(delta_points, lz).select(*_LEAF_COLS)
-    leaves = dict(zip(_LEAF_COLS, int64_columns(leaf_agg)))
-    _mark("delta_points")
-    ladder = _ladder(leaves["leaf_h"], lz)
+    ladder = timed(steps, "dirty_set", lambda: _ladder(leaves["leaf_h"], lz))
     n_dirty = len(ladder.zoom)
-    _mark("dirty_set")
 
     # Steps 3-7 below are a dependency DAG, not a chain: the tree
     # splice, the content append, and the points append each depend only
@@ -502,12 +485,10 @@ def compact_planet(
         f_points.result()
         if defer_zoom_below is not None:
             f_park.result()
-    delta_points.unpersist()
-
     return _log_summary(
         {
             "gen": gen if wrote else None,
-            "delta_rows": n_delta,
+            "delta_rows": int(leaves["n_count"].sum()),
             "dirty_tiles": n_dirty,
             "deferred_tiles": deferred_n,
         }

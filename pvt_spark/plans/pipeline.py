@@ -71,7 +71,7 @@ from ..operators.hilbert_sort import hilbert_sort
 from ..operators.leaves import build_leaves
 from ..operators.rules import include_evals, include_tags
 from ..operators.tree import build_tile_tree
-from ..session import int64_columns, local_frame
+from ..session import held_caches, int64_columns, local_frame
 from ..sources.ways import synthesize_relations, synthesize_ways
 
 PIPELINE_VERSION = 4  # v4: geom_seq rides content_mp (deterministic ring order)
@@ -286,7 +286,6 @@ def input_identity(df: DataFrame) -> list:
 @dataclass
 class BuildConfig:
     leaf_zoom: int = 12
-    sort_partitions: int | None = None
     salt_threshold: int = 20_000
     tags_from_url: bool = True  # synthesize feature tags from page urls
     # mixed-build mode: derive this many ways/relations from the points
@@ -353,11 +352,14 @@ class Stage:
         if self.is_complete():
             return spark.read.parquet(self.path)
         t0 = time.time()
-        df = compute()
-        if writer is None:
-            df.write.mode("overwrite").parquet(self.path)
-        else:
-            writer(df, self.path)
+        # caches the compute persists (session.persist) live until the
+        # write has run
+        with held_caches():
+            df = compute()
+            if writer is None:
+                df.write.mode("overwrite").parquet(self.path)
+            else:
+                writer(df, self.path)
         out = spark.read.parquet(self.path)
         # the overwrite removed any old sidecar; this one commits the data
         write_lineage(
@@ -453,10 +455,7 @@ def _mp_rf(spark, content_mp: DataFrame, compiled, config: BuildConfig) -> DataF
 def sorted_points(pages: DataFrame, config: BuildConfig) -> DataFrame:
     """extract + geotag + feature ids + global Hilbert sort (O1) — one
     shuffle, h order: the points_sorted stage and a fold's delta points."""
-    return hilbert_sort(
-        _featureize(pages_to_points(pages), config.tags_from_url),
-        num_partitions=config.sort_partitions,
-    )
+    return hilbert_sort(_featureize(pages_to_points(pages), config.tags_from_url))
 
 
 def point_content(points: DataFrame, config: BuildConfig, compiled) -> DataFrame:
@@ -507,24 +506,8 @@ def compose_planet_tiles(
     keys = np.sort(
         tile_keys(*int64_columns(content_mp.select("zoom", "tile_h").distinct()))
     )
-    # phase-2 width follows the CHUNK count (~one row per mp tile), not
-    # the corpus-shuffle conf: an explicit partition count blocks AQE
-    # coalescing, and 128 Python merge tasks over a few thousand chunk
-    # rows each paid ~4s of pure worker dispatch at the bench shape
-    # (measured; ~4k chunk rows per task is the sweet spot, conf stays
-    # the ceiling for way-dense planets)
     return compose_points_presorted(
-        rf,
-        layer_order,
-        merge_partitions=max(
-            8,
-            min(
-                int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                len(keys) // 4000 + 1,
-            ),
-        ),
-        exclude_keys=keys,
-        extra_chunks=gchunks,
+        rf, layer_order, exclude_keys=keys, extra_chunks=gchunks,
         file_marker=file_marker,
     )
 

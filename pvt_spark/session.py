@@ -8,6 +8,8 @@ batches for the vectorized UDF kernels).
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +46,12 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "524288")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+        # every keyed shuffle of tile assembly and the fold is a plain
+        # repartition(<keys>) that AQE coalesces from its bytes; this
+        # lets it coalesce a shuffle inside or over a persisted plan too
+        # (the fold's dirty cluster, the range sorts of a cached input),
+        # which otherwise keeps the full conf width
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.driver.memory", os.environ.get("PVT_DRIVER_MEM", "8g"))
         # Throughput GC: G1's concurrent refinement/marking threads
         # contend with task threads in allocation-heavy shuffle stages —
@@ -127,3 +135,33 @@ def drop_local_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
+
+
+_held = threading.local()
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, released when the innermost ``held_caches``
+    block open on this thread exits (outside one, releasing it is the
+    caller's job). Operators whose cache outlives their return — the
+    Hilbert sort's input, compose phase 1 — persist through this, so the
+    stage or fold that writes their output frees them after the write."""
+    df = df.persist()
+    frames = getattr(_held, "frames", None)
+    if frames is not None:
+        frames.append(df)
+    return df
+
+
+@contextmanager
+def held_caches():
+    """When the block (or a call of the function it decorates) exits,
+    unpersist every frame ``persist`` cached on this thread inside it."""
+    outer = getattr(_held, "frames", None)
+    _held.frames = []
+    try:
+        yield
+    finally:
+        frames, _held.frames = _held.frames, outer
+        for df in frames:
+            df.unpersist()

@@ -13,7 +13,7 @@ from pvt_spark.sources.pages import synthesize_pages
 def test_build_planet_end_to_end(spark, tmp_path):
     planet = str(tmp_path / "planet")
     pages = synthesize_pages(spark, 300, seed=42, partitions=4)
-    out = build_planet(spark, pages, planet, BuildConfig(leaf_zoom=12, sort_partitions=4))
+    out = build_planet(spark, pages, planet, BuildConfig(leaf_zoom=12))
 
     n_points = out["points"].count()
     assert n_points > 100
@@ -59,7 +59,7 @@ def test_build_planet_end_to_end(spark, tmp_path):
 def test_build_resume_skips_completed_stages(spark, tmp_path):
     planet = str(tmp_path / "planet")
     pages = synthesize_pages(spark, 120, seed=7, partitions=2)
-    cfg = BuildConfig(leaf_zoom=10, sort_partitions=2)
+    cfg = BuildConfig(leaf_zoom=10)
     first = build_planet(spark, pages, planet, cfg)
     mtime = os.path.getmtime(os.path.join(planet, "points_sorted", "_lineage.json"))
     again = build_planet(spark, pages, planet, cfg)
@@ -67,7 +67,7 @@ def test_build_resume_skips_completed_stages(spark, tmp_path):
     assert again["points"].count() == first["points"].count()
 
     # changing config fingerprint forces recompute
-    cfg2 = BuildConfig(leaf_zoom=12, sort_partitions=2)
+    cfg2 = BuildConfig(leaf_zoom=12)
     build_planet(spark, pages, planet, cfg2)
     assert os.path.getmtime(os.path.join(planet, "points_sorted", "_lineage.json")) > mtime
 
@@ -92,7 +92,7 @@ def test_build_recomputes_when_pages_input_changes(spark, tmp_path):
     every upstream stage's key: rewriting the pages parquet with other
     rows recomputes points_sorted and everything downstream, and the
     tiles equal a fresh build over the new pages."""
-    cfg = BuildConfig(leaf_zoom=10, sort_partitions=2)
+    cfg = BuildConfig(leaf_zoom=10)
     pages_path = str(tmp_path / "pages")
     planet = str(tmp_path / "planet")
     synthesize_pages(spark, 120, seed=7, partitions=2).write.parquet(pages_path)
@@ -122,7 +122,7 @@ def test_build_recomputes_stage_with_torn_lineage(spark, tmp_path):
     recomputes (and commits a whole sidecar); other stages resume."""
     planet = str(tmp_path / "planet")
     pages = synthesize_pages(spark, 120, seed=7, partitions=2)
-    cfg = BuildConfig(leaf_zoom=10, sort_partitions=2)
+    cfg = BuildConfig(leaf_zoom=10)
     build_planet(spark, pages, planet, cfg)
     lin = os.path.join(planet, "tile_tree", "_lineage.json")
     with open(lin) as f:
@@ -143,7 +143,7 @@ def test_build_recomputes_stage_with_data_but_no_lineage(spark, tmp_path):
     the data alone does not count as committed, so the stage recomputes."""
     planet = str(tmp_path / "planet")
     pages = synthesize_pages(spark, 120, seed=7, partitions=2)
-    cfg = BuildConfig(leaf_zoom=10, sort_partitions=2)
+    cfg = BuildConfig(leaf_zoom=10)
     first = build_planet(spark, pages, planet, cfg)
     n_points = first["points_sorted"].count()
     lin = os.path.join(planet, "points_sorted", "_lineage.json")

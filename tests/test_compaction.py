@@ -600,3 +600,42 @@ def test_resolve_manifest_latest_wins_and_idempotent(spark, tmp_path):
     assert mets == {12: (3, 17), 10: (1, 3)}
     assert not os.path.isdir(ddir)
     assert resolve_manifest(spark, planet) == 0  # idempotent no-op
+
+
+def _persistent_rdds(spark):
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_build_and_fold_release_their_caches(spark, tmp_path):
+    """build_planet and compact_planet unpersist every cache they create
+    (the Hilbert sort's input, compose phase 1, the fold's delta points
+    and dirty cluster) once the writes reading them ran, so a session
+    folding batch after batch holds no more cached RDDs than before."""
+    cfg = BuildConfig()
+    planet = str(tmp_path / "p")
+    before = _persistent_rdds(spark)
+    build_planet(spark, synthesize_pages(spark, 60, seed=1, partitions=2), planet, cfg)
+    assert _persistent_rdds(spark) == before
+    for i in range(2):
+        delta = synthesize_pages(spark, 20, seed=2 + i, partitions=1, start=60 + 20 * i)
+        assert compact_planet(spark, planet, delta, cfg)["gen"] is not None
+        assert _persistent_rdds(spark) == before
+
+
+def test_fold_generation_files_follow_its_bytes(spark, tmp_path):
+    """The dirty cluster and the phase-2 merge carry no partition count:
+    AQE coalesces each from its bytes (the persisted dirty cluster
+    included), so a small fold writes at most one phase-1 file and one
+    phase-2 file per zoom to its tiles generation."""
+    cfg = BuildConfig()
+    planet = str(tmp_path / "p")
+    build_planet(spark, synthesize_pages(spark, 150, seed=1, partitions=2), planet, cfg)
+    delta = synthesize_pages(spark, 50, seed=2, partitions=1, start=150)
+    assert compact_planet(spark, planet, delta, cfg)["gen"] == 1
+    gen_dir = os.path.join(planet, "tiles_delta", "gen=1")
+    per_zoom = {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(gen_dir, d)))
+        for d in os.listdir(gen_dir)
+        if d.startswith("zoom=")
+    }
+    assert per_zoom and max(per_zoom.values()) <= 2, per_zoom

@@ -180,3 +180,29 @@ def test_default_build_assembles_rings_and_point_mode_opts_out(spark):
         assert rf_pt.count() == rf_pt.select("feature_id").distinct().count()
         leaves = out_pt["leaves"]
         assert leaves.agg(F.sum("r_count")).first()[0] == rf_pt.count()
+
+
+def test_mixed_compose_merge_is_coalesced(spark):
+    """The mixed compose's phase-2 merge is a plain repartition(zoom,
+    tile_h): AQE reads it coalesced instead of at a fixed width."""
+    import re
+
+    from pvt_spark.manifest import compile_rules
+    from pvt_spark.plans.pipeline import compose_planet_tiles
+
+    with tempfile.TemporaryDirectory() as tmp:
+        cfg = BuildConfig(synth_ways=25)
+        pages = synthesize_pages(spark, 300, seed=3)
+        out = build_planet(spark, pages, os.path.join(tmp, "planet"), cfg)
+        tiles = compose_planet_tiles(
+            out["content"], out["content_mp"], compile_rules(cfg.manifest), cfg
+        )
+        assert tiles.collect()
+        plan = tiles._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert re.search(
+        r"AQEShuffleRead coalesced\n\s*\+- ShuffleQueryStage \d+\n\s*"
+        r"\+- Exchange hashpartitioning\(zoom#\d+, tile_h#\d+L, \d+\), "
+        r"REPARTITION_BY_COL",
+        plan,
+    ), plan

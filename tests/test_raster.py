@@ -17,7 +17,7 @@ from pvt_spark.sources.pages import synthesize_pages
 def test_payload_raster_equals_feature_raster(spark, tmp_path):
     planet = str(tmp_path / "planet")
     pages = synthesize_pages(spark, 400, seed=42, partitions=4)
-    out = build_planet(spark, pages, planet, BuildConfig(leaf_zoom=12, sort_partitions=4))
+    out = build_planet(spark, pages, planet, BuildConfig(leaf_zoom=12))
 
     a = rasterize_payloads(out["tiles"])
     rf = out["content"].select(
