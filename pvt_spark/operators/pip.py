@@ -1,19 +1,25 @@
-"""NEW-J9: point-in-polygon join against broadcast admin polygons.
+"""NEW-J9: point-in-polygon join with exact even-odd containment.
 
-The reference approximates spatial containment by Hilbert-tile
-membership (J5/J7); the north rule requires true PIP. Strategy:
+After one Hilbert sort, a tile at any zoom is a contiguous range of the
+points' z32 ``h``, so pruning is integer range arithmetic. Both
+strategies share one cover and one join:
 
-  1. driver-side: compute each polygon's covering tile set at a coarse
-     zoom (bbox cover — polygons are small relative to the planet);
-  2. broadcast the exploded (tile_h, polygon) table; equi-join points
-     on their tile at that zoom — this is the pruning step, same role
-     as the reference's tree descent;
+  1. cover (``polygon_cover``): each polygon is covered at its own zoom,
+     the finest even zoom at which the outer ring's bbox spans at most
+     ``COVER_SPAN`` tiles per axis (never coarser than the key zoom
+     ``cover_zoom``). The covered tiles become merged z32 ``h`` intervals,
+     split at key-zoom tile boundaries: rows (admin_id, cover_tile,
+     h_lo, h_hi) with ``cover_tile`` the key-zoom tile;
+  2. join: points tag their key-zoom tile (native SQL) and equi-join the
+     cover on it, with ``h BETWEEN h_lo AND h_hi`` in the join condition.
+     It stays a plain equi-join, so AQE's skew join splits a hot key
+     tile (dense city), and no per-zoom column is added;
   3. exact even-odd ray-cast on the candidate pairs, vectorized numpy
-     inside a pandas UDF (no shapely dependency).
+     (no shapely dependency).
 
-Skew: a hot tile (dense city) only inflates candidate pairs of ONE
-join key; AQE skew-join splits it because this is a plain equi-join,
-not a groupBy — which is exactly why the PIP is structured join-first.
+``strategy="broadcast"`` covers on the driver and ray-casts in a pandas
+UDF against broadcast rings; ``strategy="partitioned"`` keeps polygons a
+DataFrame end to end (see ``point_in_polygon_join_partitioned``).
 """
 
 from __future__ import annotations
@@ -25,62 +31,102 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructType
 
 from .. import hilbert as hb
-from ..functions.geo import zoom_h
+from ..functions.geo import tile_xy, zoom_h
 from ..session import local_frame
 
+# a polygon is covered at the finest even zoom at which its outer ring's
+# bbox spans at most this many tiles per axis: at most COVER_SPAN**2
+# tiles, merged into O(COVER_SPAN) h intervals, for any polygon that
+# fits in that many key tiles (a wider one is covered at the key zoom)
+COVER_SPAN = 8
 
-def polygon_cover_tiles(rings: list, cover_zoom: int) -> list[int]:
-    """Tile ids (Hilbert, at cover_zoom) covering the polygon — SCANLINE
-    cover, not bbox: per tile row, the polygon's x-extent inside that
-    row band is bounded by the x-extent of its edges clipped to the
-    band (the interior is bounded by the boundary), so a diagonal
+COVER_DDL = "admin_id long, cover_tile long, h_lo long, h_hi long"
+
+
+def _cover_tiles_lonlat(lons: np.ndarray, lats: np.ndarray, zoom: int) -> np.ndarray:
+    """Sorted Hilbert ids of the zoom-``zoom`` tiles a ring's interior can
+    touch (SCANLINE cover, not bbox): per tile row, the interior's
+    longitude extent is bounded by that of the ring's edges clipped to
+    the row (the interior is bounded by the boundary), so a diagonal
     country covers ~O(perimeter) tiles instead of O(bbox area).
-    Conservative (false positives removed by the ray-cast).
+
+    Edges are straight in lon/lat, as ``_ray_cast`` reads them, and
+    curve in Mercator grid space, so each row is clipped in latitude:
+    its band edges go through the inverse Mercator, each edge is
+    interpolated linearly in latitude, and the band and the x-extent are
+    widened outward by 2 dm7 (the inverse truncates to whole dm7) before
+    flooring to tiles. Conservative: false positives are removed by the
+    ray-cast.
     """
-    outer = rings[0]
-    lons = np.array([p[0] for p in outer], dtype=np.int64)
-    lats = np.array([p[1] for p in outer], dtype=np.int64)
-    return _cover_tiles_lonlat(lons, lats, cover_zoom)
-
-
-def _cover_tiles_lonlat(
-    lons: np.ndarray, lats: np.ndarray, cover_zoom: int
-) -> list[int]:
-    """Scanline cover core over the outer ring's dm7 coordinate arrays."""
-    x, y = hb.lonlat_to_xy(lons, lats)
-    xf = x.astype(np.float64)
-    yf = y.astype(np.float64)
-    x0, y0 = xf[:-1], yf[:-1]
-    x1, y1 = xf[1:], yf[1:]
-    shift = 32 - cover_zoom
-    band = float(1 << shift)
-    ty0, ty1 = int(y.min()) >> shift, int(y.max()) >> shift
-    n = 1 << cover_zoom
-    txs, tys = [], []
-    elo = np.minimum(y0, y1)
-    ehi = np.maximum(y0, y1)
+    lon = np.asarray(lons, np.float64)
+    lat = np.asarray(lats, np.float64)
+    _, y = hb.lonlat_to_xy(lon, lat)
+    shift = 32 - zoom
+    rows = np.arange(int(y.min()) >> shift, (int(y.max()) >> shift) + 1)
+    # grid y grows southward: row r spans latitudes edge[r + 1]..edge[r].
+    # The outermost rows also hold the points the Mercator clamp puts there
+    edge = hb.project_mercator_to_lonlat(0.0, np.r_[rows, rows[-1] + 1] / 2.0**zoom)[1]
+    north = np.where(rows == 0, np.inf, edge[:-1] + 2.0)
+    south = np.where(rows == (1 << zoom) - 1, -np.inf, edge[1:] - 2.0)
+    a0, a1 = lat[:-1], lat[1:]
+    b0, b1 = lon[:-1], lon[1:]
+    elo = np.minimum(a0, a1)
+    ehi = np.maximum(a0, a1)
+    flat = a0 == a1
     with np.errstate(divide="ignore", invalid="ignore"):
-        slope = (x1 - x0) / (y1 - y0)
-    horiz = y0 == y1
-    for ty in range(max(ty0, 0), min(ty1, n - 1) + 1):
-        yb0, yb1 = ty * band, (ty + 1) * band
-        hit = (ehi >= yb0) & (elo <= yb1)
-        if not hit.any():
-            continue
-        ca = np.clip(np.full(len(y0), yb0), elo, ehi)[hit]
-        cb = np.clip(np.full(len(y0), yb1), elo, ehi)[hit]
+        slope = (b1 - b0) / (a1 - a0)
+    bmin = np.minimum(b0, b1)
+    bmax = np.maximum(b0, b1)
+    txs, tys = [], []
+    for ty, s, n in zip(rows.tolist(), south, north):
+        hit = (ehi >= s) & (elo <= n)
+        f, o, k = flat[hit], a0[hit], slope[hit]
         with np.errstate(invalid="ignore"):
-            xa = np.where(horiz[hit], np.minimum(x0, x1)[hit], x0[hit] + slope[hit] * (ca - y0[hit]))
-            xb = np.where(horiz[hit], np.maximum(x0, x1)[hit], x0[hit] + slope[hit] * (cb - y0[hit]))
-        xmin = min(xa.min(), xb.min())
-        xmax = max(xa.max(), xb.max())
-        for tx in range(max(int(xmin) >> shift, 0), min(int(xmax) >> shift, n - 1) + 1):
-            txs.append(tx)
-            tys.append(ty)
-    if not txs:
-        return []
-    hs = hb.xy2h(np.array(txs, np.uint64), np.array(tys, np.uint64), cover_zoom)
-    return sorted(set(int(v) for v in hs))
+            la = np.where(f, bmin[hit], b0[hit] + k * (np.clip(s, elo[hit], ehi[hit]) - o))
+            lb = np.where(f, bmax[hit], b0[hit] + k * (np.clip(n, elo[hit], ehi[hit]) - o))
+        x, _ = hb.lonlat_to_xy(
+            np.array([min(la.min(), lb.min()) - 2.0, max(la.max(), lb.max()) + 2.0]), np.zeros(2)
+        )
+        tx = np.arange(int(x[0]) >> shift, (int(x[1]) >> shift) + 1)
+        txs.append(tx)
+        tys.append(np.full(len(tx), ty))
+    return np.unique(hb.xy2h(np.concatenate(txs), np.concatenate(tys), zoom))
+
+
+def _polygon_zoom(x: np.ndarray, y: np.ndarray, key_zoom: int) -> int:
+    """The finest even zoom, not coarser than ``key_zoom``, at which the
+    grid bbox of (x, y) spans at most ``COVER_SPAN`` tiles per axis
+    (``key_zoom`` itself when it already spans more)."""
+    lo = (int(x.min()), int(y.min()))
+    hi = (int(x.max()), int(y.max()))
+    zoom = key_zoom
+    for z in range(key_zoom + 2 - key_zoom % 2, 33, 2):
+        s = 32 - z
+        if max((b >> s) - (a >> s) + 1 for a, b in zip(lo, hi)) > COVER_SPAN:
+            break
+        zoom = z
+    return zoom
+
+
+def polygon_cover(lons: np.ndarray, lats: np.ndarray, key_zoom: int):
+    """The cover of one polygon from its outer ring's dm7 coordinates:
+    int64 arrays (cover_tile, h_lo, h_hi), one row per merged run of
+    consecutive cover tiles inside one key-zoom tile ``cover_tile``;
+    ``[h_lo, h_hi]`` is the run's closed range of biased-signed z32 h
+    (the bounds of ``functions.geo.zoom_h_range``)."""
+    if len(lons) < 2:  # a ring without an edge has no interior
+        return (np.zeros(0, np.int64),) * 3
+    x, y = hb.lonlat_to_xy(lons, lats)
+    zoom = _polygon_zoom(x, y, key_zoom)
+    tiles = _cover_tiles_lonlat(lons, lats, zoom)
+    key = tiles >> np.uint64(2 * (zoom - key_zoom))
+    brk = np.flatnonzero((np.diff(tiles) != 1) | (np.diff(key) != 0)) + 1
+    first = np.r_[0, brk]
+    last = np.r_[brk, len(tiles)] - 1
+    s = np.uint64(2 * (32 - zoom))
+    h_lo = hb.h_to_signed(tiles[first] << s)
+    h_hi = hb.h_to_signed((tiles[last] << s) | ((np.uint64(1) << s) - np.uint64(1)))
+    return key[first].astype(np.int64), h_lo, h_hi
 
 
 def _ray_cast(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -121,42 +167,57 @@ def _ray_cast(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     return inside
 
 
+def _cover_columns(outer_rings, key_zoom: int) -> dict:
+    """Covers of a batch of outer rings ((lons, lats) dm7 pairs) as int64
+    columns: ``poly`` (the ring's position in the batch), then
+    cover_tile, h_lo and h_hi."""
+    parts = [polygon_cover(lons, lats, key_zoom) for lons, lats in outer_rings]
+    cols = {"poly": np.repeat(np.arange(len(parts)), [len(p[0]) for p in parts])}
+    for i, name in enumerate(("cover_tile", "h_lo", "h_hi")):
+        cols[name] = np.concatenate([p[i] for p in parts] or [np.zeros(0, np.int64)])
+    return cols
+
+
+def _candidates(points: DataFrame, cover: DataFrame, cover_zoom: int) -> DataFrame:
+    """Points x cover rows: an equi-join on the key-zoom tile whose h
+    range check the optimizer pushes into the join condition. Columns:
+    the points', then the cover's past its key and range."""
+    pts = points.withColumn("cover_tile", zoom_h(F.col("h"), cover_zoom))
+    return (
+        pts.join(cover, "cover_tile")
+        .where(F.col("h").between(F.col("h_lo"), F.col("h_hi")))
+        .drop("cover_tile", "h_lo", "h_hi")
+    )
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
     cover_zoom: int = 8,
     how: str = "inner",
     strategy: str = "broadcast",
-    n_salt: int = 16,
 ) -> DataFrame:
     """points(..., lon_dm7, lat_dm7, h) x polygons(admin_id, ..., rings) ->
     matched pairs with exact containment.
 
+    rings is array<array<struct<lon_dm7,lat_dm7>>> with the outer ring
+    first and holes after (the even-odd rule handles holes for free).
+    ``cover_zoom`` is the key zoom of the equi-join; each polygon's
+    cover zoom is chosen from its extent (``_polygon_zoom``).
     ``strategy="broadcast"`` (default): polygons must be broadcast-sized
-    (admin boundaries usually are); rings is
-    array<array<struct<lon_dm7,lat_dm7>>> with outer ring first, holes
-    after (even-odd rule handles holes for free).
-    ``strategy="partitioned"``: no size ceiling — polygons stay a
-    DataFrame end-to-end (see point_in_polygon_join_partitioned).
+    (admin boundaries usually are); they are covered on the driver and
+    the cover joins as a broadcast hash join with the h range in its
+    condition. ``strategy="partitioned"``: no size ceiling — polygons
+    stay a DataFrame end-to-end (see point_in_polygon_join_partitioned).
     """
     if strategy == "partitioned":
         return point_in_polygon_join_partitioned(
-            points, polygons, cover_zoom=cover_zoom, n_salt=n_salt, how=how
+            points, polygons, cover_zoom=cover_zoom, how=how
         )
     if strategy != "broadcast":
         raise ValueError(f"unsupported strategy={strategy}")
     spark = points.sparkSession
     polys = polygons.collect()
-    cover_rows = []
-    for r in polys:
-        rings = [[(p["lon_dm7"], p["lat_dm7"]) for p in ring] for ring in r["rings"]]
-        for t in polygon_cover_tiles(rings, cover_zoom):
-            cover_rows.append((r["admin_id"], t))
-    cover = local_frame(spark, cover_rows, "admin_id long, cover_tile long")
-
-    pts = points.withColumn("cover_tile", zoom_h(F.col("h"), cover_zoom))
-    cand = pts.join(F.broadcast(cover), "cover_tile")
-
     # ship ring geometry via a broadcast variable: ONE torrent-style
     # transfer per executor, not a copy serialized into every task
     # closure (at many-MB ring sets the closure copy dominates task
@@ -168,6 +229,12 @@ def point_in_polygon_join(
         ]
         for r in polys
     }
+    cols = _cover_columns(
+        [(rings[0][:, 0], rings[0][:, 1]) for rings in ring_map.values()], cover_zoom
+    )
+    cols["admin_id"] = np.array(list(ring_map), np.int64)[cols.pop("poly")]
+    cover = local_frame(spark, cols, COVER_DDL)
+    cand = _candidates(points, F.broadcast(cover), cover_zoom)
     bc_rings = spark.sparkContext.broadcast(ring_map)
 
     @F.pandas_udf(BooleanType())
@@ -186,19 +253,41 @@ def point_in_polygon_join(
         return pd.Series(out)
 
     matched = cand.where(contains(F.col("admin_id"), F.col("lon_dm7"), F.col("lat_dm7")))
-    out = matched.drop("cover_tile")
     if how == "inner":
-        return out.join(
+        return matched.join(
             F.broadcast(polygons.drop("rings")), "admin_id"
         )
     raise ValueError(f"unsupported how={how}")
+
+
+def _ring_columns(polygons: DataFrame, cover_zoom: int) -> DataFrame:
+    """One row per polygon: admin_id, ring coordinates as long arrays and
+    ``n_groups``, the number of ray-cast groups its candidates split
+    into: the key-zoom tiles its outer ring's bbox spans, at most
+    ``spark.sql.shuffle.partitions``. Native SQL on the polygon row."""
+    width = int(polygons.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    outer = F.col("rings")[0]
+    x0, y0 = tile_xy(F.array_min(outer["lon_dm7"]), F.array_max(outer["lat_dm7"]), cover_zoom)
+    x1, y1 = tile_xy(F.array_max(outer["lon_dm7"]), F.array_min(outer["lat_dm7"]), cover_zoom)
+    return polygons.select(
+        "admin_id",
+        F.expr("transform(rings, r -> transform(r, p -> cast(p.lon_dm7 as long)))").alias("rings_x"),
+        F.expr("transform(rings, r -> transform(r, p -> cast(p.lat_dm7 as long)))").alias("rings_y"),
+        F.least((x1 - x0 + 1) * (y1 - y0 + 1), F.lit(width)).cast("int").alias("n_groups"),
+    )
+
+
+def _group_rings(ring_cols: DataFrame) -> DataFrame:
+    """The ring rows the cogroup ships: one per (polygon, group)."""
+    return ring_cols.withColumn(
+        "_grp", F.explode(F.sequence(F.lit(0), F.col("n_groups") - 1))
+    ).drop("n_groups")
 
 
 def point_in_polygon_join_partitioned(
     points: DataFrame,
     polygons: DataFrame,
     cover_zoom: int = 8,
-    n_salt: int = 16,
     how: str = "inner",
 ) -> DataFrame:
     """PIP with NO broadcast ceiling: polygons stay a DataFrame end to
@@ -209,57 +298,46 @@ def point_in_polygon_join_partitioned(
     Plan (the reference's tile-membership join shape,
     src/hilbert/leaf.rs:214-290, at polygon-relation scale):
 
-    1. distributed scanline cover: ``mapInPandas`` over the polygons
-       table emits (admin_id, cover_tile) pairs — each task covers its
-       own polygons, O(perimeter) tiles per polygon;
-    2. points tag their cover-zoom tile (native SQL) and equi-join the
-       cover pairs — a plain shuffle hash join, so AQE's skew-join
-       splits hot tiles (dense cities) automatically;
-    3. exact ray-cast via ``cogroup``: candidates and rings shuffle on
-       (admin_id, salt) — ring geometry travels ONCE per salt bucket
-       (n_salt copies per polygon, bounded), never once per candidate
-       row, and a hot polygon's candidates split across n_salt groups
-       instead of landing on one task.
+    1. distributed cover: ``mapInPandas`` over the polygons table emits
+       each polygon's h-interval cover rows (``polygon_cover``), carrying
+       the polygon's group count ``n_groups`` (``_ring_columns``);
+    2. points tag their key-zoom tile (native SQL) and equi-join the
+       cover rows with the h range in the join condition — a plain
+       shuffle join, so AQE's skew join splits hot tiles (dense cities);
+    3. exact ray-cast via ``cogroup`` on (admin_id, group): a candidate's
+       group is a hash of its coordinates mod ``n_groups``, and each
+       polygon's rings ship once per group. A polygon inside one key
+       tile ships its rings once; a polygon spanning k key tiles splits
+       its candidates over min(k, shuffle partitions) tasks. Both sides
+       read the same ``n_groups`` column, so they agree by construction.
     """
-    ring_cols = polygons.select(
-        "admin_id",
-        F.expr("transform(rings, r -> transform(r, p -> cast(p.lon_dm7 as long)))").alias("rings_x"),
-        F.expr("transform(rings, r -> transform(r, p -> cast(p.lat_dm7 as long)))").alias("rings_y"),
-    )
+    ring_cols = _ring_columns(polygons, cover_zoom)
 
     def cover_rows(batches):
         for pdf in batches:
-            out_a: list[int] = []
-            out_t: list[int] = []
-            for aid, rx, ry in zip(pdf["admin_id"], pdf["rings_x"], pdf["rings_y"]):
-                lons = np.asarray(rx[0], dtype=np.int64)
-                lats = np.asarray(ry[0], dtype=np.int64)
-                for t in _cover_tiles_lonlat(lons, lats, cover_zoom):
-                    out_a.append(aid)
-                    out_t.append(t)
+            cols = _cover_columns(
+                [
+                    (np.asarray(rx[0], np.int64), np.asarray(ry[0], np.int64))
+                    for rx, ry in zip(pdf["rings_x"], pdf["rings_y"])
+                ],
+                cover_zoom,
+            )
+            poly = cols.pop("poly")
             yield pd.DataFrame(
                 {
-                    "admin_id": pd.array(out_a, dtype="int64"),
-                    "cover_tile": pd.array(out_t, dtype="int64"),
+                    "admin_id": pdf["admin_id"].to_numpy(np.int64)[poly],
+                    **cols,
+                    "n_groups": pdf["n_groups"].to_numpy(np.int32)[poly],
                 }
             )
 
-    cover = ring_cols.mapInPandas(cover_rows, "admin_id long, cover_tile long")
+    cover = ring_cols.mapInPandas(cover_rows, COVER_DDL + ", n_groups int")
+    cand = _candidates(points, cover, cover_zoom).withColumn(
+        "_grp",
+        F.pmod(F.xxhash64(F.col("lon_dm7"), F.col("lat_dm7")), F.col("n_groups")).cast("int"),
+    ).drop("n_groups")
 
-    pts = points.withColumn("cover_tile", zoom_h(F.col("h"), cover_zoom))
-    cand = pts.join(cover, "cover_tile").withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col("lon_dm7"), F.col("lat_dm7")), F.lit(n_salt)).cast(
-            "int"
-        ),
-    )
-    rings_salted = ring_cols.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-    )
-
-    out_fields = [
-        f for f in cand.schema.fields if f.name not in ("_salt", "cover_tile")
-    ]
+    out_fields = [f for f in cand.schema.fields if f.name != "_grp"]
     out_schema = StructType(out_fields)
     out_cols = [f.name for f in out_fields]
 
@@ -278,8 +356,8 @@ def point_in_polygon_join_partitioned(
         return left.loc[acc, out_cols]
 
     matched = (
-        cand.groupby("admin_id", "_salt")
-        .cogroup(rings_salted.groupby("admin_id", "_salt"))
+        cand.groupby("admin_id", "_grp")
+        .cogroup(_group_rings(ring_cols).groupby("admin_id", "_grp"))
         .applyInPandas(raycast_group, out_schema)
     )
     if how == "inner":

@@ -525,12 +525,14 @@ def resolve_manifest(spark: SparkSession, planet_dir: str) -> int:
     n = materialize(spark, planet_dir, "tile_manifest")
     if gens:
         # the per-zoom rollup is ~a dozen rows: collect it, write it back
-        # as a driver-local frame
+        # as a driver-local frame in one file
         metrics = zoom_metrics_from_manifest(
             spark.read.parquet(os.path.join(planet_dir, "tile_manifest"))
         )
         metrics_path = os.path.join(planet_dir, "zoom_metrics")
-        swap_write(local_frame(spark, metrics.collect(), metrics.schema), metrics_path)
+        swap_write(
+            local_frame(spark, metrics.collect(), metrics.schema).coalesce(1), metrics_path
+        )
         write_lineage(metrics_path, compaction_gen=gens[-1])
     return n
 

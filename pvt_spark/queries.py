@@ -459,17 +459,17 @@ def q13_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q34_pip_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEW-J9 beyond the broadcast contract: the SAME containment as q13
     through point_in_polygon_join_partitioned — polygons stay a
-    DataFrame (distributed scanline cover, shuffle equi-join on cover
-    tile, salted-cogroup ray-cast; no collect(), no driver loop), so
+    DataFrame (distributed h-interval cover, shuffle equi-join on the
+    key tile with the h range in its condition, cogroup ray-cast in
+    groups sized from each polygon's extent; no collect(), no driver
+    loop), so
     the polygon side has no broadcast ceiling. Oracle: identical SQL
     to q13 — both paths must produce the same pairs."""
     from .operators.pip import point_in_polygon_join
 
     pts, polys = _q13_inputs(spark, sf_dir)
     return _q13_aggregate(
-        point_in_polygon_join(
-            pts, polys, cover_zoom=6, strategy="partitioned", n_salt=4
-        )
+        point_in_polygon_join(pts, polys, cover_zoom=6, strategy="partitioned")
     )
 
 
@@ -2141,9 +2141,7 @@ def q41_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts, polys = _q13_inputs(spark, sf_dir)
     pts = pts.withColumn("value", F.expr("(feature_id * 48271) % 1000"))
-    matched = point_in_polygon_join(
-        pts, polys, cover_zoom=6, strategy="partitioned", n_salt=4
-    )
+    matched = point_in_polygon_join(pts, polys, cover_zoom=6, strategy="partitioned")
     return (
         matched.groupBy(F.col("admin_id").alias("n_nationkey"), "n_name")
         .agg(

@@ -639,3 +639,19 @@ def test_fold_generation_files_follow_its_bytes(spark, tmp_path):
         if d.startswith("zoom=")
     }
     assert per_zoom and max(per_zoom.values()) <= 2, per_zoom
+
+
+def test_resolve_manifest_writes_zoom_metrics_as_one_file(spark, tmp_path):
+    """zoom_metrics is a per-zoom rollup of about a dozen rows:
+    resolve_manifest writes it back as one parquet file, not one per
+    slice of the default parallelism."""
+    from pvt_spark.plans.compaction import resolve_manifest
+
+    cfg = BuildConfig()
+    planet = str(tmp_path / "p")
+    build_planet(spark, synthesize_pages(spark, 60, seed=1, partitions=2), planet, cfg)
+    delta = synthesize_pages(spark, 20, seed=2, partitions=1, start=60)
+    assert compact_planet(spark, planet, delta, cfg, defer_manifest=True)["gen"] == 1
+    assert resolve_manifest(spark, planet) > 0
+    files = os.listdir(os.path.join(planet, "zoom_metrics"))
+    assert sum(f.endswith(".parquet") for f in files) == 1, files

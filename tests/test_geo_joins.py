@@ -63,7 +63,7 @@ def test_pip_polygon_with_hole(spark):
 
 def test_pip_partitioned_matches_broadcast(spark):
     """The no-ceiling path (polygons stay a DataFrame; cover via
-    mapInPandas; ray-cast via salted cogroup) returns exactly the
+    mapInPandas; ray-cast via cogroup) returns exactly the
     broadcast path's pairs — donut hole, disjoint rect, jagged star,
     3k random points."""
     from pvt_spark.operators.pip import point_in_polygon_join_partitioned
@@ -94,7 +94,7 @@ def test_pip_partitioned_matches_broadcast(spark):
         lat = rng.randint(-2000000, 12000000, 3000).astype(np.int64)
         pts = _points(spark, list(zip(lon.tolist(), lat.tolist())))
         a = point_in_polygon_join(pts, polys, cover_zoom=6)
-        b = point_in_polygon_join_partitioned(pts, polys, cover_zoom=6, n_salt=4)
+        b = point_in_polygon_join_partitioned(pts, polys, cover_zoom=6)
         ra = sorted((r.feature_id, r.admin_id) for r in a.collect())
         rb = sorted((r.feature_id, r.admin_id) for r in b.collect())
         assert ra == rb and len(ra) > 100
@@ -111,6 +111,13 @@ def test_pip_partitioned_matches_broadcast(spark):
         plan = b._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapCoGroupsInPandas" in plan
         assert "BroadcastNestedLoopJoin" not in plan
+        # the broadcast path keeps the h range on its hash join
+        plan = a._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert any(
+            "BroadcastHashJoin" in line and "h_lo" in line and "h_hi" in line
+            for line in plan.splitlines()
+        ), plan
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
