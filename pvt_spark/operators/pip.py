@@ -28,16 +28,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructType
+from pyspark.sql.types import BooleanType
 
 from .. import hilbert as hb
-from ..functions.geo import tile_xy, zoom_h
+from ..functions.geo import zoom_h
 from ..session import local_frame
 
 # a polygon is covered at the finest even zoom at which its outer ring's
 # bbox spans at most this many tiles per axis: at most COVER_SPAN**2
 # tiles, merged into O(COVER_SPAN) h intervals, for any polygon that
-# fits in that many key tiles (a wider one is covered at the key zoom)
+# fits in that many key tiles (a wider one is covered at the key zoom).
+# 8 is the knee on the benchmark's polygons: 4 gives 1.3-2.5x the
+# candidates, 16 up to twice the cover rows for at most 14% fewer
 COVER_SPAN = 8
 
 COVER_DDL = "admin_id long, cover_tile long, h_lo long, h_hi long"
@@ -180,8 +182,10 @@ def _cover_columns(outer_rings, key_zoom: int) -> dict:
 
 def _candidates(points: DataFrame, cover: DataFrame, cover_zoom: int) -> DataFrame:
     """Points x cover rows: an equi-join on the key-zoom tile whose h
-    range check the optimizer pushes into the join condition. Columns:
-    the points', then the cover's past its key and range."""
+    range check the optimizer pushes into the join condition. A cover
+    can hold several runs in one key tile, and a point matches each of
+    them before the range check keeps at most one. Columns: the
+    points', then the cover's past its key and range."""
     pts = points.withColumn("cover_tile", zoom_h(F.col("h"), cover_zoom))
     return (
         pts.join(cover, "cover_tile")
@@ -260,28 +264,14 @@ def point_in_polygon_join(
     raise ValueError(f"unsupported how={how}")
 
 
-def _ring_columns(polygons: DataFrame, cover_zoom: int) -> DataFrame:
-    """One row per polygon: admin_id, ring coordinates as long arrays and
-    ``n_groups``, the number of ray-cast groups its candidates split
-    into: the key-zoom tiles its outer ring's bbox spans, at most
-    ``spark.sql.shuffle.partitions``. Native SQL on the polygon row."""
-    width = int(polygons.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    outer = F.col("rings")[0]
-    x0, y0 = tile_xy(F.array_min(outer["lon_dm7"]), F.array_max(outer["lat_dm7"]), cover_zoom)
-    x1, y1 = tile_xy(F.array_max(outer["lon_dm7"]), F.array_min(outer["lat_dm7"]), cover_zoom)
+def _ring_columns(polygons: DataFrame) -> DataFrame:
+    """One row per polygon: admin_id and its ring coordinates as long
+    arrays (native SQL on the polygon row)."""
     return polygons.select(
         "admin_id",
         F.expr("transform(rings, r -> transform(r, p -> cast(p.lon_dm7 as long)))").alias("rings_x"),
         F.expr("transform(rings, r -> transform(r, p -> cast(p.lat_dm7 as long)))").alias("rings_y"),
-        F.least((x1 - x0 + 1) * (y1 - y0 + 1), F.lit(width)).cast("int").alias("n_groups"),
     )
-
-
-def _group_rings(ring_cols: DataFrame) -> DataFrame:
-    """The ring rows the cogroup ships: one per (polygon, group)."""
-    return ring_cols.withColumn(
-        "_grp", F.explode(F.sequence(F.lit(0), F.col("n_groups") - 1))
-    ).drop("n_groups")
 
 
 def point_in_polygon_join_partitioned(
@@ -299,19 +289,19 @@ def point_in_polygon_join_partitioned(
     src/hilbert/leaf.rs:214-290, at polygon-relation scale):
 
     1. distributed cover: ``mapInPandas`` over the polygons table emits
-       each polygon's h-interval cover rows (``polygon_cover``), carrying
-       the polygon's group count ``n_groups`` (``_ring_columns``);
+       each polygon's h-interval cover rows (``polygon_cover``);
     2. points tag their key-zoom tile (native SQL) and equi-join the
        cover rows with the h range in the join condition — a plain
        shuffle join, so AQE's skew join splits hot tiles (dense cities);
-    3. exact ray-cast via ``cogroup`` on (admin_id, group): a candidate's
-       group is a hash of its coordinates mod ``n_groups``, and each
-       polygon's rings ship once per group. A polygon inside one key
-       tile ships its rings once; a polygon spanning k key tiles splits
-       its candidates over min(k, shuffle partitions) tasks. Both sides
-       read the same ``n_groups`` column, so they agree by construction.
+    3. exact ray-cast via ``cogroup`` on admin_id: each polygon's rings
+       ship once, and all of its candidates are ray-cast in one task.
+       The cogroup does not split a hot polygon; the finer cover keeps
+       its candidates few, and many polygons still spread over the
+       shuffle's tasks. Splitting a polygon's candidates over more
+       tasks ships its rings once per split, which on the measured
+       workloads cost more than it saved.
     """
-    ring_cols = _ring_columns(polygons, cover_zoom)
+    ring_cols = _ring_columns(polygons)
 
     def cover_rows(batches):
         for pdf in batches:
@@ -323,23 +313,11 @@ def point_in_polygon_join_partitioned(
                 cover_zoom,
             )
             poly = cols.pop("poly")
-            yield pd.DataFrame(
-                {
-                    "admin_id": pdf["admin_id"].to_numpy(np.int64)[poly],
-                    **cols,
-                    "n_groups": pdf["n_groups"].to_numpy(np.int32)[poly],
-                }
-            )
+            yield pd.DataFrame({"admin_id": pdf["admin_id"].to_numpy(np.int64)[poly], **cols})
 
-    cover = ring_cols.mapInPandas(cover_rows, COVER_DDL + ", n_groups int")
-    cand = _candidates(points, cover, cover_zoom).withColumn(
-        "_grp",
-        F.pmod(F.xxhash64(F.col("lon_dm7"), F.col("lat_dm7")), F.col("n_groups")).cast("int"),
-    ).drop("n_groups")
-
-    out_fields = [f for f in cand.schema.fields if f.name != "_grp"]
-    out_schema = StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
+    cover = ring_cols.mapInPandas(cover_rows, COVER_DDL)
+    cand = _candidates(points, cover, cover_zoom)
+    out_cols = cand.columns
 
     def raycast_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
@@ -356,9 +334,9 @@ def point_in_polygon_join_partitioned(
         return left.loc[acc, out_cols]
 
     matched = (
-        cand.groupby("admin_id", "_grp")
-        .cogroup(_group_rings(ring_cols).groupby("admin_id", "_grp"))
-        .applyInPandas(raycast_group, out_schema)
+        cand.groupby("admin_id")
+        .cogroup(ring_cols.groupby("admin_id"))
+        .applyInPandas(raycast_group, cand.schema)
     )
     if how == "inner":
         # attribute join stays a plain equi-join: AQE broadcasts it when

@@ -1,7 +1,6 @@
 """PIP cover and join machinery: the interval cover holds every point the
-ray-cast puts inside, both strategies return exactly the brute-force
-pairs, and the partitioned path sizes its ray-cast groups from each
-polygon's extent."""
+ray-cast puts inside, and both strategies return exactly the brute-force
+pairs."""
 
 import numpy as np
 import pytest
@@ -9,9 +8,7 @@ import pytest
 from pvt_spark import hilbert as hb
 from pvt_spark.operators.pip import (
     _cover_tiles_lonlat,
-    _group_rings,
     _ray_cast,
-    _ring_columns,
     point_in_polygon_join,
 )
 
@@ -139,23 +136,3 @@ def test_pip_strategies_match_brute_force(spark, seed):
         assert len(got) == len(set(got)), strategy
         assert set(got) == want, (strategy, len(set(got) ^ want))
 
-
-def test_ring_groups_follow_the_key_tiles_a_polygon_spans(spark):
-    """A polygon inside one key tile ships one ring row to the cogroup; a
-    polygon whose bbox spans k key tiles ships min(k, shuffle partitions)."""
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    polys = [(a, n, [_dm7(r) for r in rings]) for a, n, rings in _random_polygons(11)]
-    shipped = {
-        r.admin_id: r["count"]
-        for r in _group_rings(_ring_columns(spark.createDataFrame(polys, POLY_DDL), KEY_ZOOM))
-        .groupBy("admin_id")
-        .count()
-        .collect()
-    }
-    spans = {}
-    for aid, _, rings in polys:
-        x, y = hb.lonlat_to_xy(*np.array(rings[0], np.int64).T)
-        tx, ty = x >> (32 - KEY_ZOOM), y >> (32 - KEY_ZOOM)
-        spans[aid] = int(tx.max() - tx.min() + 1) * int(ty.max() - ty.min() + 1)
-    assert shipped == {a: min(k, width) for a, k in spans.items()}
-    assert 1 in spans.values() and max(spans.values()) > width
