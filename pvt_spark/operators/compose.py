@@ -23,11 +23,18 @@ Spark design (north rule: explicit salting for hot tiles):
            are contiguous in the sorted partition): global h-order
            restore, first-seen interning (A6), emit the payload.
 
-Shuffle widths: both keyed shuffles (and the point fast path's phase
-2) are ``repartition(<keys>)`` with no partition count, so AQE sizes
-each from its bytes (coalescing hash partitions keeps a tile in one
-partition); the hot-tile salt, not the width, is what spreads a dense
-tile's work.
+Point fast path (``compose_points``): one range shuffle by (zoom,
+tile_h) + sort clusters the point rows whatever their input layout (the
+content stage, a fold's dirty slice), so each tile is one contiguous
+run of a partition; phase 1 emits FINAL payloads for the tiles interior
+to an Arrow batch and chunks for a batch's first/last tile, which the
+phase 2 above merges.
+
+Shuffle widths: every keyed shuffle (both phases above, the point fast
+path's range shuffle and its phase 2) has no partition count, so AQE
+sizes each from its bytes (coalescing adjacent hash or range partitions
+keeps a tile in one partition); the hot-tile salt, not the width, is
+what spreads a dense tile's work.
 
 Why mapInPandas and not groupBy().applyInPandas: with millions of
 small tiles the per-group UDF dispatch dominates (measured 146s of a
@@ -126,9 +133,9 @@ def project_geometry(df: DataFrame, tolerance: float = DEFAULT_TOLERANCE) -> Dat
     """Replace world-coord geom_x/geom_y (array<long>) with tile-local,
     DP-simplified int16 coordinates, batched per Arrow batch.
 
-    Run this on content rows BEFORE their range-shuffle write: the zoom
-    explode otherwise ships full-resolution coordinates once per pyramid
-    level through the shuffle and the tile-assembly phase then discards
+    Run this on content rows BEFORE they are written: the zoom explode
+    otherwise ships full-resolution coordinates once per pyramid level
+    through the compose shuffle and the tile-assembly phase then discards
     ~90% of the points (a 150-point way keeps ~13 after per-zoom DP).
     Projection + DP depend only on (zoom, tile_h) and the row's own
     coordinates — both fixed per row — so downstream chunks are
@@ -448,7 +455,7 @@ def geometry_chunks(
     geom_x array<long>, geom_y array<long>); ``layer`` already exploded.
     Chunks from this path and the point fast path's boundary chunks
     share one format, so a mixed node/way/relation build merges them in
-    ONE phase 2 (``compose_points_presorted(extra_chunks=...)``).
+    ONE phase 2 (``compose_points(extra_chunks=...)``).
     """
     # phase 0: hot-tile salt factors (map-side-combined count, tiny result)
     counts = render_features.groupBy("zoom", "tile_h").agg(F.count(F.lit(1)).alias("cnt"))
@@ -715,18 +722,17 @@ def _chunk_rows_for_tile(zoom, tile_h, s, e, layer_rank, layers, hs, raw_ids, n_
 
 
 def _phase1_points_stream(batches, tolerance: float, exclude_keys=None):
-    """Stateless per-batch processing with per-file-run boundary chunking.
+    """Stateless per-batch processing with boundary chunking.
 
-    Safety argument: a tile's rows live in exactly ONE content file
-    (range partitioning) and are contiguous within it (sorted write).
-    Read bin-packing can split a big file into segments and interleave
-    them with other files, so for every contiguous same-file run inside
-    a batch, the run's FIRST and LAST tiles are emitted as mergeable
-    chunks (their rows may continue in another run/batch/partition);
-    strictly interior tiles are provably complete -> final payloads.
-    No cross-batch carry state needed — chunks merge in phase 2.
-    Tiles whose key (``tile_keys``) is in the sorted int64 array
-    ``exclude_keys`` are emitted as chunks too.
+    Safety argument: ``compose_points`` range-partitions its input by
+    (zoom, tile_h) and sorts within partitions, so a tile's rows live
+    in ONE partition and are contiguous there; the partition's Arrow
+    batches arrive in order, so only a batch's FIRST and LAST tiles may
+    continue in a neighbouring batch. Those are emitted as mergeable
+    chunks; strictly interior tiles are provably complete -> final
+    payloads. No cross-batch carry state needed — chunks merge in
+    phase 2. Tiles whose key (``tile_keys``) is in the sorted int64
+    array ``exclude_keys`` are emitted as chunks too.
     """
     cols = [
         "zoom", "tile_h", "final", "tile_id", "layer_count", "feature_count",
@@ -798,26 +804,18 @@ def _phase1_points_stream(batches, tolerance: float, exclude_keys=None):
     for pdf in batches:
         if pdf.empty:
             continue
-        rows = []
-        if "_file" in pdf.columns:
-            f = pdf["_file"].to_numpy()
-            starts = [0] + list(1 + np.flatnonzero(f[1:] != f[:-1])) + [len(pdf)]
-            for a, b in zip(starts[:-1], starts[1:]):
-                rows.extend(process_run(pdf.iloc[a:b]))
-        else:
-            rows.extend(process_run(pdf))
-        yield pd.DataFrame(rows, columns=cols)
+        yield pd.DataFrame(process_run(pdf), columns=cols)
 
 
-def compose_points_presorted(
+def compose_points(
     render_features: DataFrame,
     layer_order: list[str],
     tolerance: float = DEFAULT_TOLERANCE,
     exclude_keys=None,
     extra_chunks: DataFrame | None = None,
-    file_marker: bool = True,
 ) -> DataFrame:
-    """Single-point-feature compose over (zoom, tile_h)-clustered input.
+    """Single-point-feature compose over point render-features in any
+    layout.
 
     Input columns (all primitive — nothing per-row crosses Arrow as
     Python objects except the flat kv string array):
@@ -825,10 +823,13 @@ def compose_points_presorted(
       layer_rank int, kv array<string> (sorted k,v pairs interleaved),
       n_tags int, gx long, gy long
 
-    Phase 1 emits FINAL payloads for tiles interior to its partition
-    (range partitioning keeps a tile in one partition, so that is
-    almost all of them) and mergeable chunks only for the first/last
-    tile of each partition; phase 2 merges those few boundary tiles.
+    The input is range-partitioned by (zoom, tile_h) and sorted within
+    partitions here — the one place that clusters point content for
+    tile assembly, so the build's content stage and a fold's dirty
+    slice both pass their rows as they are. Phase 1 then emits FINAL
+    payloads for tiles interior to an Arrow batch (almost all of them)
+    and mergeable chunks only for the first/last tile of each batch;
+    phase 2 merges those few boundary tiles.
 
     Mixed builds: ``exclude_keys`` (sorted int64 ``tile_keys``) demotes
     the listed tiles from finals to chunks so their point rows can merge
@@ -840,17 +841,13 @@ def compose_points_presorted(
     bc_exclude = (
         spark.sparkContext.broadcast(exclude_keys) if exclude_keys is not None else None
     )
-    # equality-only marker: hash the file name to a long (cheap in Arrow).
-    # file_marker=False (in-memory clustered input — no file names, and
-    # input_file_name() rejects multi-source plans): one run per Arrow
-    # batch; a tile split across batches yields mergeable chunks, same
-    # as a file boundary, so the payloads are unchanged.
-    marker = F.xxhash64(F.input_file_name()) if file_marker else F.lit(0)
-    with_file = render_features.withColumn("_file", marker)
+    clustered = render_features.repartitionByRange("zoom", "tile_h").sortWithinPartitions(
+        "zoom", "tile_h"
+    )
     # finals and partials both read phase 1: cached, released with the
     # enclosing held_caches block (the tiles write)
     ph1 = persist(
-        with_file.mapInPandas(
+        clustered.mapInPandas(
             lambda it: _phase1_points_stream(it, tolerance, bc_exclude),
             UNIFIED_SCHEMA,
         )

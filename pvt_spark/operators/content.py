@@ -74,20 +74,17 @@ def tile_h_at_zoom_col(h_col: str, zoom_col: str):
 
 
 def write_content(content: DataFrame, path: str) -> None:
-    """Persist partitioned by zoom, Hilbert-sorted within partitions.
+    """Write partitioned by zoom, tile_h-sorted within each task's file.
 
-    The input is cached first: repartitionByRange's boundary-sampling
-    pass would otherwise re-run the whole rule/explode chain.
+    No shuffle: the sort is task-local, so each file holds a tile_h-
+    sorted run of its zoom and parquet row-group stats stay tight for
+    the fold's per-zoom interval cover (``compaction._rows_at_keys``).
+    Tile assembly does not rely on this layout (``compose_points``
+    clusters its own input).
     """
-    cached = content.persist()
-    (
-        cached.repartitionByRange("zoom", "tile_h")
-        .sortWithinPartitions("zoom", "tile_h")
-        .write.mode("overwrite")
-        .partitionBy("zoom")
-        .parquet(path)
-    )
-    cached.unpersist()
+    content.sortWithinPartitions("zoom", "tile_h").write.mode("overwrite").partitionBy(
+        "zoom"
+    ).parquet(path)
 
 
 def tile_manifest(content: DataFrame) -> DataFrame:

@@ -198,7 +198,6 @@ def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
     cover_zoom: int = 8,
-    how: str = "inner",
     strategy: str = "broadcast",
 ) -> DataFrame:
     """points(..., lon_dm7, lat_dm7, h) x polygons(admin_id, ..., rings) ->
@@ -216,7 +215,7 @@ def point_in_polygon_join(
     """
     if strategy == "partitioned":
         return point_in_polygon_join_partitioned(
-            points, polygons, cover_zoom=cover_zoom, how=how
+            points, polygons, cover_zoom=cover_zoom
         )
     if strategy != "broadcast":
         raise ValueError(f"unsupported strategy={strategy}")
@@ -257,11 +256,7 @@ def point_in_polygon_join(
         return pd.Series(out)
 
     matched = cand.where(contains(F.col("admin_id"), F.col("lon_dm7"), F.col("lat_dm7")))
-    if how == "inner":
-        return matched.join(
-            F.broadcast(polygons.drop("rings")), "admin_id"
-        )
-    raise ValueError(f"unsupported how={how}")
+    return matched.join(F.broadcast(polygons.drop("rings")), "admin_id")
 
 
 def _ring_columns(polygons: DataFrame) -> DataFrame:
@@ -278,7 +273,6 @@ def point_in_polygon_join_partitioned(
     points: DataFrame,
     polygons: DataFrame,
     cover_zoom: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """PIP with NO broadcast ceiling: polygons stay a DataFrame end to
     end — no ``collect()``, no driver loop — so the polygon side scales
@@ -338,8 +332,6 @@ def point_in_polygon_join_partitioned(
         .cogroup(ring_cols.groupby("admin_id"))
         .applyInPandas(raycast_group, cand.schema)
     )
-    if how == "inner":
-        # attribute join stays a plain equi-join: AQE broadcasts it when
-        # the polygon table is small, shuffles it when it is not
-        return matched.join(polygons.drop("rings"), "admin_id")
-    raise ValueError(f"unsupported how={how}")
+    # attribute join stays a plain equi-join: AQE broadcasts it when the
+    # polygon table is small, shuffles it when it is not
+    return matched.join(polygons.drop("rings"), "admin_id")

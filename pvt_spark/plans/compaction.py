@@ -239,15 +239,14 @@ def _recompose_dirty_tiles(
     gen: int,
     steps: dict | None = None,
 ) -> bool:
-    """Re-cluster the dirty keys' (old + delta) content in memory (hash
-    partition + sort — the compose contract, without the parquet round
-    trip the tmp-dir layout paid), run the normal phase-1/phase-2
-    compose (mixed planets re-merge the dirty slice of the unchanged
-    content_mp stage as geometry chunks), and write the recomposed tiles
-    and the keys' manifest rows as generation ``gen`` of the ``tiles``
-    and ``tile_manifest`` logs. The two writes are independent consumers
-    of the materialized dirty cache and run as concurrent jobs. Per-step
-    walls land in ``steps`` (overlapping).
+    """Run the build's compose on the dirty keys' (old + delta) content
+    slice as read (``compose_points`` clusters it; mixed planets re-merge
+    the dirty slice of the unchanged content_mp stage as geometry
+    chunks), and write the recomposed tiles and the keys' manifest rows
+    as generation ``gen`` of the ``tiles`` and ``tile_manifest`` logs.
+    The two writes are independent consumers of the cached dirty slice
+    and run as concurrent jobs. Per-step walls land in ``steps``
+    (overlapping).
 
     Returns whether generation ``gen`` was written: keys without point
     content (all deferred, or zooms the rules render no points at) write
@@ -259,24 +258,15 @@ def _recompose_dirty_tiles(
         return False
     mixed = os.path.isdir(os.path.join(planet_dir, "content_mp"))
     dirty = _keys_frame(spark, zoom, tile_h)
-    dirty_all = _rows_at_keys(
-        spark.read.parquet(os.path.join(planet_dir, "content")), zoom, tile_h
+    # the count materializes the cache ONCE so the two concurrent
+    # consumers below (tile and manifest writes) both read it instead of
+    # racing to recompute the scan + semi-join
+    dirty_content = persist(
+        _rows_at_keys(
+            spark.read.parquet(os.path.join(planet_dir, "content")), zoom, tile_h
+        )
     )
-    # Cluster the dirty slice IN MEMORY instead of round-tripping it
-    # through a parquet tmp dir: hash-partition by (zoom, tile_h) +
-    # sort-within gives compose_points_presorted exactly the contract it
-    # needs (a tile's rows in ONE partition, contiguous), without the
-    # range-boundary sampling pass, the parquet write, or the read-back.
-    # No partition count: AQE coalesces the shuffle from the dirty
-    # slice's bytes (a persisted plan may coalesce, see get_spark), so a
-    # few thousand dirty tiles run as a few tasks and write a few files
-    # per zoom. The count materializes the cache ONCE so the two
-    # concurrent consumers below (tile and manifest writes) both read it
-    # instead of racing to recompute the scan+shuffle.
-    dirty_sorted = persist(
-        dirty_all.repartition("zoom", "tile_h").sortWithinPartitions("zoom", "tile_h")
-    )
-    if not timed(steps, "dirty_cluster", dirty_sorted.count):
+    if not timed(steps, "dirty_cluster", dirty_content.count):
         # no point content at any key: multi-point content alone never
         # changes under a page delta, so every such tile is unchanged
         return False
@@ -290,9 +280,7 @@ def _recompose_dirty_tiles(
                 F.broadcast(dirty), ["zoom", "tile_h"], "left_semi"
             )
         )
-    recomposed = compose_planet_tiles(
-        dirty_sorted, mp_dirty, compiled, config, file_marker=False
-    )
+    recomposed = compose_planet_tiles(dirty_content, mp_dirty, compiled, config)
 
     def _gen_write() -> None:
         recomposed.write.mode("overwrite").partitionBy("zoom").parquet(
@@ -304,7 +292,7 @@ def _recompose_dirty_tiles(
     # and rewrites the zoom metrics
     def _manifest_metrics() -> None:
         (
-            tile_manifest(manifest_input(dirty_sorted, mp_dirty))
+            tile_manifest(manifest_input(dirty_content, mp_dirty))
             .coalesce(1)
             .write.mode("overwrite")
             .parquet(gen_path(planet_dir, "tile_manifest", gen))

@@ -21,8 +21,8 @@ Stage graph (shuffle-minimal; see build_planet docstring):
 
   pages --extract+geotag+featureize+hilbert-sort--> points_sorted
         --leaf agg + 16x rollup--> tile_tree
-        --inline rules + zoom explode + range write--> content
-        --phase1 finals (+ boundary merge)--> tiles
+        --inline rules + zoom explode, task-local sorted write--> content
+        --range cluster + phase1 finals (+ boundary merge)--> tiles
         --counts--> tile_manifest / zoom_metrics
 """
 
@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from ..functions.geo import grid_x, grid_y
 from ..manifest import DEFAULT_MANIFEST, Manifest, compile_rules
 from ..operators.compose import (
-    compose_points_presorted,
+    compose_points,
     geometry_chunks,
     project_geometry,
     tile_keys,
@@ -403,7 +403,7 @@ def _layer_order(config: BuildConfig) -> list[str]:
 
 def _points_rf(spark, content: DataFrame, compiled, config: BuildConfig) -> DataFrame:
     """Point-content rows -> primitive-only render-features for the
-    point fast path (see compose_points_presorted input contract)."""
+    point fast path (see compose_points input contract)."""
     evals_df = include_evals(spark, compiled)
     feats = include_tags(
         content.join(F.broadcast(evals_df), "eval_i", "left"),
@@ -479,20 +479,18 @@ def manifest_input(content: DataFrame, content_mp: DataFrame | None) -> DataFram
 
 
 def compose_planet_tiles(
-    content: DataFrame, content_mp: DataFrame | None, compiled,
-    config: BuildConfig, file_marker: bool = True,
+    content: DataFrame, content_mp: DataFrame | None, compiled, config: BuildConfig
 ) -> DataFrame:
-    """Tile payload assembly (A6/P7/DP) on (zoom, tile_h)-clustered point
-    content — fast path with interior-tile finals; mixed: the point
-    rows of multi-point tiles become chunks that merge with the geometry
-    chunks in one phase 2. The build
-    composes the whole planet, a fold its dirty slice (``file_marker``
-    False: in-memory clustered input, see compose_points_presorted)."""
+    """Tile payload assembly (A6/P7/DP) on point content in any layout
+    (``compose_points`` clusters it) — fast path with interior-tile
+    finals; mixed: the point rows of multi-point tiles become chunks
+    that merge with the geometry chunks in one phase 2. The build
+    composes the whole planet, a fold its dirty slice."""
     spark = content.sparkSession
     layer_order = _layer_order(config)
     rf = _points_rf(spark, content, compiled, config)
     if content_mp is None:
-        return compose_points_presorted(rf, layer_order, file_marker=file_marker)
+        return compose_points(rf, layer_order)
     gchunks = geometry_chunks(
         _mp_rf(spark, content_mp, compiled, config),
         salt_threshold=config.salt_threshold,
@@ -501,15 +499,12 @@ def compose_planet_tiles(
     # the point finals fast path stays available for every tile with
     # NO multi-point features: demote only the mp tile set to chunks
     # (one collect of sorted int64 tile keys, 8 driver bytes each,
-    # riding a sparkContext.broadcast inside compose_points_presorted),
-    # merge those with the geometry chunks
+    # riding a sparkContext.broadcast inside compose_points), merge
+    # those with the geometry chunks
     keys = np.sort(
         tile_keys(*int64_columns(content_mp.select("zoom", "tile_h").distinct()))
     )
-    return compose_points_presorted(
-        rf, layer_order, exclude_keys=keys, extra_chunks=gchunks,
-        file_marker=file_marker,
-    )
+    return compose_points(rf, layer_order, exclude_keys=keys, extra_chunks=gchunks)
 
 
 def build_planet(
@@ -524,9 +519,10 @@ def build_planet(
 
     Stage graph is shuffle-minimal: ONE full-data shuffle (the Hilbert
     range partition, fused with extraction into the points stage); the
-    tree is a 16x-shrinking rollup; content adds one range shuffle of
-    index+attr rows; tile assembly reuses content's clustering (phase 1
-    shuffle-free, phase 2 shuffles only chunk rows).
+    tree is a 16x-shrinking rollup; content is written with no shuffle
+    (a task-local sort per zoom); tile assembly range-clusters the
+    index+attr rows once (``compose_points``: phase 1 emits finals from
+    that shuffle, phase 2 shuffles only chunk rows).
 
     Mixed builds (reference compose.rs:41-349 + leaf.rs:214-380): pass
     ``ways(feature_id, refs array<long>, tags map)`` and/or
@@ -650,16 +646,17 @@ def build_planet(
         )
 
     # 3. rule-filtered pyramid content (F1-F4 + A5), attrs denormalized so
-    #    tile assembly needs no join; written clustered by (zoom, tile_h)
-    #    — point_content, run by the content stage below
+    #    tile assembly needs no join; written by zoom, tile_h-sorted per
+    #    task (write_content) — point_content, run by the content stage
+    #    below
 
     # 3b. multi-point content: rule pyramid over way/relation features
     #     PLUS external leaf rows (U1/F5: a leaf's tile also renders the
     #     ways/relations whose geometry enters it from elsewhere).
     #     Geometry is projected + per-zoom-simplified HERE, before the
-    #     range-shuffle write: the zoom explode would otherwise ship
-    #     full-resolution coordinates once per pyramid level and tile
-    #     assembly would discard ~90% of the points post-shuffle
+    #     write: the zoom explode would otherwise ship full-resolution
+    #     coordinates once per pyramid level through the compose shuffle
+    #     and tile assembly would discard ~90% of the points after it
     def _content_mp() -> DataFrame:
         # geom_seq: deterministic minor key for multi-row features (a
         # relation's rings share feature_id AND h) — carried through to
@@ -681,14 +678,13 @@ def build_planet(
                     seq.alias("geom_seq"),
                 )
             )
-        # widen BEFORE the zoom explode: the explode multiplies each
-        # feature ~13x and the projection UDF runs map-side on the
-        # exploded rows, so parallelism must exist upstream — and the
-        # full-resolution shuffle this costs is one row per FEATURE,
-        # not per (feature, zoom) row
-        feats = feats.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        )
+        # widen to the core count BEFORE the zoom explode: the explode
+        # multiplies each feature ~13x and the projection UDF runs
+        # map-side on the exploded rows, so parallelism must exist
+        # upstream — and the full-resolution shuffle this costs is one
+        # row per FEATURE, not per (feature, zoom) row
+        width = spark.sparkContext.defaultParallelism
+        feats = feats.repartition(width)
         c = render_content(
             feats, config.manifest, compiled,
             carry_cols=["tags", "geom_x", "geom_y", "geom_seq"],
@@ -702,7 +698,11 @@ def build_planet(
             .join(ext_pairs, "feature_id")
             .withColumnRenamed("leaf_h", "tile_h")
         )
-        return project_geometry(c.unionByName(leaf_rows.select(*c.columns)))
+        # the union keeps both sides' partitions: a narrow coalesce
+        # writes it at the same width, one task (and file) per core
+        return project_geometry(c.unionByName(leaf_rows.select(*c.columns))).coalesce(
+            width
+        )
 
     # tree / content / content_mp are INDEPENDENT given their inputs —
     # run them as concurrent Spark jobs (separate driver threads): the
@@ -725,10 +725,6 @@ def build_planet(
             lambda: point_content(points_sorted, config, compiled),
             write_content,
         )
-        # content_mp skips the range-clustered write content gets: serving
-        # never reads it and its one consumer (geometry_chunks) reshuffles
-        # by (zoom, tile_h, salt) anyway — a plain write saves the persist
-        # + boundary-sampling pass + a full sorted shuffle of mp content
         f_mp = (
             pool.submit(
                 stage(
@@ -736,7 +732,6 @@ def build_planet(
                 ).run,
                 spark,
                 _content_mp,
-                lambda df, p: df.write.mode("overwrite").parquet(p),
             )
             if has_mp
             else None
@@ -746,7 +741,7 @@ def build_planet(
         if f_mp is not None:
             content_mp = f_mp.result()
 
-    # 4. tile payload assembly on the pre-clustered content
+    # 4. tile payload assembly (compose_points clusters the content)
     # 5. metrics tables (S11 report analog); zoom metrics derive from the
     #    small tile manifest, not a content re-scan. tiles and manifest
     #    both read only the (already-written) content stages -> concurrent

@@ -46,7 +46,7 @@ def test_mixed_build_end_to_end(spark):
         assert ext.count() > 0
 
         # content_mp stores tile-local DP-simplified int16 geometry
-        # (projected BEFORE the range shuffle — pipeline v3)
+        # (projected BEFORE the write — pipeline v3)
         cmp_ = out["content_mp"]
         dt = dict(cmp_.dtypes)
         assert dt["geom_x"] == "array<smallint>"
