@@ -8,7 +8,7 @@ Prints ONE JSON line:
 
 The headline metric is the end-to-end tile-build wall time over a
 synthetic pages table (pages -> extract -> geotag -> hilbert ->
-leaves/tree -> pyramid content -> salted compose), reported alongside
+leaves/tree -> pyramid content -> compose), reported alongside
 pages/sec and tiles/sec in the "queries" map, plus a subset of the
 oracle queries for plan-regression tracking.
 

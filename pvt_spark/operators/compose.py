@@ -1,4 +1,4 @@
-"""Tile payload assembly — salted two-phase streaming mapInPandas
+"""Tile payload assembly — two-phase streaming mapInPandas
 (A5/A6/P7 + Douglas-Peucker).
 
 Reference equivalent: ``compose_tile``/``build_pvt`` assemble one tile
@@ -6,35 +6,36 @@ at a time from index ranges (src/hilbert/compose.rs:110-349) with
 per-tile string interning (src/tile_attributes.rs:14-80) and tile-local
 projection (src/tile.rs:297-334).
 
-Spark design (north rule: explicit salting for hot tiles):
+Spark design (north rule: hot tiles split on the Hilbert key):
 
-  phase 0  per-(zoom, tile_h) counts -> n_salt = ceil(count/threshold).
-           AQE cannot split one UDF group, so salting is load-bearing:
-           a dense-city tile's projection/DP/serialization cost spreads
-           over n_salt tasks instead of one straggler.
-  phase 1  repartition(zoom, tile_h, salt) + sortWithinPartitions ->
-           ``mapInPandas``: per Arrow batch, ONE vectorized projection
-           (P7) for all rows (per-zoom h2xy of tile ids), DP per
-           feature, then pandas groupby (C-speed) emits a columnar
-           CHUNK per (tile, salt, layer, batch). Chunks are mergeable,
-           so batch boundaries splitting a group are harmless.
+  phase 1  repartitionByRange(zoom, tile_h, h, feature_id) +
+           sortWithinPartitions -> ``mapInPandas`` over pre-projected
+           int16 tile-local rows (``project_geometry``): one lexsort
+           per Arrow batch emits a columnar CHUNK per (tile, layer,
+           batch). A tile is one contiguous run of the key, so
+           the range partitioner's sampled bounds fall inside any tile
+           that holds many rows: a dense-city tile spreads over several
+           tasks, each emitting its own chunks. Chunks are mergeable,
+           so batch and partition boundaries splitting a tile are
+           harmless.
   phase 2  repartition(zoom, tile_h) + sort -> streaming ``mapInPandas``
            with a carry buffer across Arrow batches (a tile's chunks
-           are contiguous in the sorted partition): global h-order
-           restore, first-seen interning (A6), emit the payload.
+           are contiguous in the sorted partition): global (h, id, seq)
+           order restore — chunks merge in any order — first-seen
+           interning (A6), emit the payload.
 
 Point fast path (``compose_points``): one range shuffle by (zoom,
-tile_h) + sort clusters the point rows whatever their input layout (the
-content stage, a fold's dirty slice), so each tile is one contiguous
-run of a partition; phase 1 emits FINAL payloads for the tiles interior
-to an Arrow batch and chunks for a batch's first/last tile, which the
-phase 2 above merges.
+tile_h, h) + sort clusters the point rows whatever their input layout
+(the content stage, a fold's dirty slice), so each tile is one
+contiguous run of one partition, or of adjacent partitions when it is
+hot; phase 1 emits FINAL payloads for the tiles interior to an Arrow
+batch and chunks for a batch's first/last tile, which the phase 2
+above merges.
 
 Shuffle widths: every keyed shuffle (both phases above, the point fast
 path's range shuffle and its phase 2) has no partition count, so AQE
-sizes each from its bytes (coalescing adjacent hash or range partitions
-keeps a tile in one partition); the hot-tile salt, not the width, is
-what spreads a dense tile's work.
+sizes each from its bytes; coalescing adjacent range partitions
+decides whether a hot tile's split survives.
 
 Why mapInPandas and not groupBy().applyInPandas: with millions of
 small tiles the per-group UDF dispatch dominates (measured 146s of a
@@ -59,7 +60,7 @@ from ..tile import tile_project
 from .simplify import DEFAULT_TOLERANCE, simplify_many
 
 CHUNK_SCHEMA = (
-    "zoom int, tile_h long, salt int, layer string, n_features long, chunk binary"
+    "zoom int, tile_h long, layer string, n_features long, chunk binary"
 )
 TILE_SCHEMA = (
     "zoom int, tile_h long, tile_id long, layer_count int, feature_count long, "
@@ -138,9 +139,8 @@ def project_geometry(df: DataFrame, tolerance: float = DEFAULT_TOLERANCE) -> Dat
     through the compose shuffle and the tile-assembly phase then discards
     ~90% of the points (a 150-point way keeps ~13 after per-zoom DP).
     Projection + DP depend only on (zoom, tile_h) and the row's own
-    coordinates — both fixed per row — so downstream chunks are
-    byte-identical to projecting inside phase 1; ``geometry_chunks``
-    consumes the result with ``projected=True``.
+    coordinates — both fixed per row — so it commutes with the compose
+    shuffles; ``geometry_chunks`` consumes its output.
     """
     from pyspark.sql import types as T
 
@@ -166,8 +166,8 @@ def project_geometry(df: DataFrame, tolerance: float = DEFAULT_TOLERANCE) -> Dat
     return df.mapInPandas(_stream, T.StructType(fields))
 
 
-def _phase1_stream(batches, tolerance: float, projected: bool = False):
-    """Feature rows -> mergeable per-(tile, salt, layer) chunks.
+def _phase1_stream(batches):
+    """Projected feature rows -> mergeable per-(tile, layer) chunks.
 
     Vectorized across the whole Arrow batch (same discipline as the
     phase-2 _merge_tiles_batch): ONE lexsort clusters rows by group with
@@ -175,29 +175,19 @@ def _phase1_stream(batches, tolerance: float, projected: bool = False):
     per-group sort_values whose constant dominated at ~1 feature/group
     (external leaf rows land each way in its own leaf tile) — then every
     per-feature column is gathered once and each group's chunk is sliced
-    out of flat arrays. ``projected`` input carries pre-projected int16
-    tile-local coords (see project_geometry) and skips P7 + DP here.
+    out of flat arrays. Geometry arrives as int16 tile-local coords
+    (``project_geometry``), so P7 + DP are already done.
     """
     for pdf in batches:
         if pdf.empty:
             continue
         pdf = pdf.reset_index(drop=True)
         n = len(pdf)
-        if projected:
-            slens = np.fromiter((len(g) for g in pdf["geom_x"]), np.int64, count=n)
-            spx = (
-                np.concatenate([np.asarray(g, np.int16) for g in pdf["geom_x"]])
-                if n else np.empty(0, np.int16)
-            )
-            spy = (
-                np.concatenate([np.asarray(g, np.int16) for g in pdf["geom_y"]])
-                if n else np.empty(0, np.int16)
-            )
-        else:
-            spx, spy, slens = _project_batch(pdf, tolerance)
+        slens = np.fromiter((len(g) for g in pdf["geom_x"]), np.int64, count=n)
+        spx = np.concatenate([np.asarray(g, np.int16) for g in pdf["geom_x"]])
+        spy = np.concatenate([np.asarray(g, np.int16) for g in pdf["geom_y"]])
         zoom = pdf["zoom"].to_numpy(dtype=np.int64)
         tile_h = pdf["tile_h"].to_numpy(dtype=np.int64)
-        salt = pdf["salt"].to_numpy(dtype=np.int64)
         h = pdf["h"].to_numpy(dtype=np.int64)
         fid = pdf["feature_id"].to_numpy(dtype=np.int64)
         # geom_seq: tie-break for multi-row features (relation rings share
@@ -221,13 +211,12 @@ def _phase1_stream(batches, tolerance: float, projected: bool = False):
                 kv_all.append(k)
                 kv_all.append(v)
             kv_off[j + 1] = len(kv_all)
-        order = np.lexsort((seq, fid, h, lcodes, salt, tile_h, zoom))
-        zs, ts, ss, ls = zoom[order], tile_h[order], salt[order], lcodes[order]
+        order = np.lexsort((seq, fid, h, lcodes, tile_h, zoom))
+        zs, ts, ls = zoom[order], tile_h[order], lcodes[order]
         new_grp = np.empty(n, dtype=bool)
         new_grp[0] = True
         new_grp[1:] = (
-            (zs[1:] != zs[:-1]) | (ts[1:] != ts[:-1])
-            | (ss[1:] != ss[:-1]) | (ls[1:] != ls[:-1])
+            (zs[1:] != zs[:-1]) | (ts[1:] != ts[:-1]) | (ls[1:] != ls[:-1])
         )
         bounds = np.append(np.flatnonzero(new_grp), n)
         ids_s, h_s, seq_s = fid[order], h[order], seq[order]
@@ -259,10 +248,8 @@ def _phase1_stream(batches, tolerance: float, projected: bool = False):
                 },
                 protocol=4,
             )
-            rows.append((int(zs[s]), int(ts[s]), int(ss[s]), luniq[ls[s]], e - s, chunk))
-        yield pd.DataFrame(
-            rows, columns=["zoom", "tile_h", "salt", "layer", "n_features", "chunk"]
-        )
+            rows.append((int(zs[s]), int(ts[s]), luniq[ls[s]], e - s, chunk))
+        yield pd.DataFrame(rows, columns=["zoom", "tile_h", "layer", "n_features", "chunk"])
 
 
 def _gather_varlen(order: np.ndarray, lens: np.ndarray, offsets: np.ndarray) -> np.ndarray:
@@ -284,7 +271,7 @@ def _merge_tile_rows(zoom: int, tile_h: int, grp: pd.DataFrame, layer_order: lis
         grp.groupby("layer", sort=False),
         key=lambda kv: (layer_rank.get(kv[0], len(layer_rank)), kv[0]),
     ):
-        chunks = [pickle.loads(c) for c in lg.sort_values("salt")["chunk"]]
+        chunks = [pickle.loads(c) for c in lg["chunk"]]
         ids = np.concatenate([c["ids"] for c in chunks])
         hs = np.concatenate([c["h"] for c in chunks])
         seqs = np.concatenate(
@@ -342,9 +329,9 @@ def _merge_tiles_batch(done: pd.DataFrame, layer_order: list[str]) -> list[tuple
     reference and equivalence-test oracle).
 
     ``done`` holds complete tiles' chunk rows sorted by (zoom, tile_h,
-    layer, salt). All chunks decode up front; per-feature arrays
-    concatenate once; ONE global lexsort restores (tile, layer-order,
-    h, id); var-length kv/pts blocks gather once; payload assembly runs
+    layer), a (tile, layer)'s chunks in any order. All chunks decode up
+    front; per-feature arrays concatenate once; ONE global lexsort
+    restores (tile, layer-order, h, id, seq); var-length kv/pts blocks gather once; payload assembly runs
     through the generalized batched encoder."""
     layer_rank = {name: i for i, name in enumerate(layer_order)}
     chunks = [pickle.loads(c) for c in done["chunk"]]
@@ -442,50 +429,33 @@ def _phase2_stream(batches, layer_order: list[str]):
         )
 
 
-def geometry_chunks(
-    render_features: DataFrame,
-    salt_threshold: int = 100_000,
-    tolerance: float = DEFAULT_TOLERANCE,
-    projected: bool = False,
-) -> DataFrame:
-    """Phase 0 + 1 of the generic compose: salted, projected, simplified
-    mergeable chunks (CHUNK_SCHEMA) for arbitrary line/ring geometry.
+def geometry_chunks(render_features: DataFrame) -> DataFrame:
+    """Phase 1 of the generic compose: mergeable chunks (CHUNK_SCHEMA)
+    for arbitrary line/ring geometry.
 
     render_features(zoom, tile_h, feature_id, h, layer, out_tags,
-    geom_x array<long>, geom_y array<long>); ``layer`` already exploded.
-    Chunks from this path and the point fast path's boundary chunks
-    share one format, so a mixed node/way/relation build merges them in
-    ONE phase 2 (``compose_points(extra_chunks=...)``).
+    geom_x array<short>, geom_y array<short>) as ``project_geometry``
+    emits them; ``layer`` already exploded. The range key runs down to
+    (h, feature_id), so a hot tile splits across tasks wherever its
+    rows' bytes say and each piece chunks on its own. Chunks from this
+    path and the point fast path's boundary chunks share one format, so
+    a mixed node/way/relation build merges them in ONE phase 2
+    (``compose_points(extra_chunks=...)``).
     """
-    # phase 0: hot-tile salt factors (map-side-combined count, tiny result)
-    counts = render_features.groupBy("zoom", "tile_h").agg(F.count(F.lit(1)).alias("cnt"))
-    hot = counts.where(F.col("cnt") > salt_threshold).select(
-        "zoom",
-        "tile_h",
-        F.ceil(F.col("cnt") / F.lit(salt_threshold)).cast("int").alias("n_salt"),
-    )
-    salted = render_features.join(F.broadcast(hot), ["zoom", "tile_h"], "left").withColumn(
-        "salt",
-        F.when(
-            F.col("n_salt").isNotNull(),
-            F.pmod(F.xxhash64("feature_id"), F.col("n_salt")).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-
-    sort_cols = ["zoom", "tile_h", "salt", "layer", "h", "feature_id"]
-    if "geom_seq" in salted.columns:
+    sort_cols = ["zoom", "tile_h", "layer", "h", "feature_id"]
+    if "geom_seq" in render_features.columns:
         sort_cols.append("geom_seq")
-    part1 = salted.repartition("zoom", "tile_h", "salt").sortWithinPartitions(*sort_cols)
-    return part1.mapInPandas(
-        lambda it: _phase1_stream(it, tolerance, projected), CHUNK_SCHEMA
-    )
+    part1 = render_features.repartitionByRange(
+        "zoom", "tile_h", "h", "feature_id"
+    ).sortWithinPartitions(*sort_cols)
+    return part1.mapInPandas(_phase1_stream, CHUNK_SCHEMA)
 
 
 def merge_chunks(chunks: DataFrame, layer_order: list[str]) -> DataFrame:
     """Phase 2: shuffle chunk rows by (zoom, tile_h) and merge into final
     tile payloads. Input chunks may come from any phase-1 producer."""
     part2 = chunks.repartition("zoom", "tile_h").sortWithinPartitions(
-        "zoom", "tile_h", "layer", "salt"
+        "zoom", "tile_h", "layer"
     )
     return part2.mapInPandas(lambda it: _phase2_stream(it, layer_order), TILE_SCHEMA)
 
@@ -493,7 +463,6 @@ def merge_chunks(chunks: DataFrame, layer_order: list[str]) -> DataFrame:
 def compose_tiles(
     render_features: DataFrame,
     layer_order: list[str],
-    salt_threshold: int = 100_000,
     tolerance: float = DEFAULT_TOLERANCE,
 ) -> DataFrame:
     """render_features(zoom, tile_h, feature_id, h, layer, out_tags,
@@ -502,7 +471,7 @@ def compose_tiles(
     ``layer`` must already be exploded (one row per feature x layer).
     """
     return merge_chunks(
-        geometry_chunks(render_features, salt_threshold, tolerance), layer_order
+        geometry_chunks(project_geometry(render_features, tolerance)), layer_order
     )
 
 
@@ -721,16 +690,17 @@ def _chunk_rows_for_tile(zoom, tile_h, s, e, layer_rank, layers, hs, raw_ids, n_
     return rows
 
 
-def _phase1_points_stream(batches, tolerance: float, exclude_keys=None):
+def _phase1_points_stream(batches, exclude_keys=None):
     """Stateless per-batch processing with boundary chunking.
 
-    Safety argument: ``compose_points`` range-partitions its input by
-    (zoom, tile_h) and sorts within partitions, so a tile's rows live
-    in ONE partition and are contiguous there; the partition's Arrow
-    batches arrive in order, so only a batch's FIRST and LAST tiles may
-    continue in a neighbouring batch. Those are emitted as mergeable
-    chunks; strictly interior tiles are provably complete -> final
-    payloads. No cross-batch carry state needed — chunks merge in
+    Safety argument: ``point_phase1`` range-partitions its input by
+    (zoom, tile_h, h) and sorts within partitions, so a tile's rows are
+    one contiguous run of a partition, or of adjacent partitions (a hot
+    tile: the last tile of one, the first of the next); the partition's
+    Arrow batches arrive in order, so only a batch's FIRST and LAST
+    tiles may continue in a neighbouring batch or partition. Those are
+    emitted as mergeable chunks; strictly interior tiles are provably
+    complete -> final payloads. No cross-batch carry state needed — chunks merge in
     phase 2. Tiles whose key (``tile_keys``) is in the sorted int64
     array ``exclude_keys`` are emitted as chunks too.
     """
@@ -807,10 +777,33 @@ def _phase1_points_stream(batches, tolerance: float, exclude_keys=None):
         yield pd.DataFrame(process_run(pdf), columns=cols)
 
 
+def point_phase1(render_features: DataFrame, exclude_keys=None) -> DataFrame:
+    """Phase 1 of the point fast path (UNIFIED_SCHEMA rows: finals and
+    boundary chunks) over point render-features in any layout.
+
+    The input is range-partitioned by (zoom, tile_h, h) and sorted
+    within partitions here — the one place that clusters point content
+    for tile assembly, so the build's content stage and a fold's dirty
+    slice both pass their rows as they are. A hot tile is one long run
+    of the key, so the range bounds split it across tasks; its pieces
+    are batch-boundary tiles and come out as chunks.
+    """
+    spark = render_features.sparkSession
+    # demotion key set rides a broadcast variable, not the task closure
+    bc_exclude = (
+        spark.sparkContext.broadcast(exclude_keys) if exclude_keys is not None else None
+    )
+    clustered = render_features.repartitionByRange(
+        "zoom", "tile_h", "h"
+    ).sortWithinPartitions("zoom", "tile_h")
+    return clustered.mapInPandas(
+        lambda it: _phase1_points_stream(it, bc_exclude), UNIFIED_SCHEMA
+    )
+
+
 def compose_points(
     render_features: DataFrame,
     layer_order: list[str],
-    tolerance: float = DEFAULT_TOLERANCE,
     exclude_keys=None,
     extra_chunks: DataFrame | None = None,
 ) -> DataFrame:
@@ -823,44 +816,24 @@ def compose_points(
       layer_rank int, kv array<string> (sorted k,v pairs interleaved),
       n_tags int, gx long, gy long
 
-    The input is range-partitioned by (zoom, tile_h) and sorted within
-    partitions here — the one place that clusters point content for
-    tile assembly, so the build's content stage and a fold's dirty
-    slice both pass their rows as they are. Phase 1 then emits FINAL
+    Phase 1 (``point_phase1``) clusters the rows and emits FINAL
     payloads for tiles interior to an Arrow batch (almost all of them)
-    and mergeable chunks only for the first/last tile of each batch;
-    phase 2 merges those few boundary tiles.
+    and mergeable chunks only for the first/last tile of each batch —
+    a hot tile split across tasks among them; phase 2 merges those few
+    boundary tiles.
 
     Mixed builds: ``exclude_keys`` (sorted int64 ``tile_keys``) demotes
     the listed tiles from finals to chunks so their point rows can merge
     with ``extra_chunks`` (way/relation geometry chunks) in phase 2 —
     every other tile keeps the finals fast path.
     """
-    spark = render_features.sparkSession
-    # demotion key set rides a broadcast variable, not the task closure
-    bc_exclude = (
-        spark.sparkContext.broadcast(exclude_keys) if exclude_keys is not None else None
-    )
-    clustered = render_features.repartitionByRange("zoom", "tile_h").sortWithinPartitions(
-        "zoom", "tile_h"
-    )
     # finals and partials both read phase 1: cached, released with the
     # enclosing held_caches block (the tiles write)
-    ph1 = persist(
-        clustered.mapInPandas(
-            lambda it: _phase1_points_stream(it, tolerance, bc_exclude),
-            UNIFIED_SCHEMA,
-        )
-    )
+    ph1 = persist(point_phase1(render_features, exclude_keys))
     finals = ph1.where(F.col("final")).select(*_TILE_COLS)
     partials = ph1.where(~F.col("final")).select(
-        "zoom", "tile_h", F.lit(0).alias("salt"), "layer", "n_features", "chunk"
+        "zoom", "tile_h", "layer", "n_features", "chunk"
     )
     if extra_chunks is not None:
         partials = partials.unionByName(extra_chunks)
-    merged = (
-        partials.repartition("zoom", "tile_h")
-        .sortWithinPartitions("zoom", "tile_h", "layer", "salt")
-        .mapInPandas(lambda it: _phase2_stream(it, layer_order), TILE_SCHEMA)
-    )
-    return finals.unionByName(merged)
+    return finals.unionByName(merge_chunks(partials, layer_order))

@@ -34,7 +34,7 @@ import os
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from urllib.parse import unquote, urlparse
 
 import numpy as np
@@ -74,7 +74,7 @@ from ..operators.tree import build_tile_tree
 from ..session import held_caches, int64_columns, local_frame
 from ..sources.ways import synthesize_relations, synthesize_ways
 
-PIPELINE_VERSION = 4  # v4: geom_seq rides content_mp (deterministic ring order)
+PIPELINE_VERSION = 5  # v5: hot tiles split on the (zoom, tile_h, h) range key
 
 # ---------------------------------------------------------------------------
 # Snapshot format, shared by the build and the compaction fold: data is
@@ -286,7 +286,6 @@ def input_identity(df: DataFrame) -> list:
 @dataclass
 class BuildConfig:
     leaf_zoom: int = 12
-    salt_threshold: int = 20_000
     tags_from_url: bool = True  # synthesize feature tags from page urls
     # mixed-build mode: derive this many ways/relations from the points
     # (sources/ways.py) when the caller passes no way/relation tables
@@ -302,19 +301,28 @@ class BuildConfig:
     manifest: Manifest = field(default_factory=lambda: DEFAULT_MANIFEST)
 
     def fingerprint(self) -> str:
+        """Every setting that shapes the built rows: the full rule
+        bodies (sets hash as sorted lists), layers and tag options."""
         m = self.manifest
         return json.dumps(
             {
                 "pipeline": PIPELINE_VERSION,
                 "extractor": EXTRACTOR_VERSION,
                 "leaf_zoom": self.leaf_zoom,
-                "salt_threshold": self.salt_threshold,
+                "tags_from_url": self.tags_from_url,
                 "synth_ways": self.synth_ways,
                 "synth_relations": self.synth_relations,
                 "relation_geometry": self.relation_geometry,
-                "manifest": [m.leaf_zoom, m.layer_order, sorted(m.rules)],
+                "manifest": [
+                    m.leaf_zoom,
+                    m.layer_order,
+                    m.layers,
+                    m.all_tags,
+                    {name: asdict(rule) for name, rule in m.rules.items()},
+                ],
             },
             sort_keys=True,
+            default=sorted,
         )
 
 
@@ -491,11 +499,8 @@ def compose_planet_tiles(
     rf = _points_rf(spark, content, compiled, config)
     if content_mp is None:
         return compose_points(rf, layer_order)
-    gchunks = geometry_chunks(
-        _mp_rf(spark, content_mp, compiled, config),
-        salt_threshold=config.salt_threshold,
-        projected=True,  # content_mp stores tile-local simplified coords
-    )
+    # content_mp stores tile-local simplified coords (project_geometry)
+    gchunks = geometry_chunks(_mp_rf(spark, content_mp, compiled, config))
     # the point finals fast path stays available for every tile with
     # NO multi-point features: demote only the mp tile set to chunks
     # (one collect of sorted int64 tile keys, 8 driver bytes each,

@@ -1338,7 +1338,7 @@ Q27_SQL = _q27_sql()
 
 def q28_tile_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full compose path over supplier-derived tagged grid points: rule
-    filter -> pyramid explode -> salted assembly -> per-tile stats.
+    filter -> pyramid explode -> tile assembly -> per-tile stats.
     Value-pinned: the oracle mirrors the rule winners (Tag > Value > Key
     precedence on these single-tag features), the even-zoom explode and
     the Hilbert tile assignment in SQL (payload bytes excluded)."""
@@ -1379,7 +1379,7 @@ def q28_tile_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array("gx").alias("geom_x"),
         F.array("gy").alias("geom_y"),
     )
-    tiles = compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order, 1000)
+    tiles = compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order)
     return tiles.select(
         "zoom", "tile_h", "layer_count", "feature_count"
     ).orderBy("zoom", "tile_h")
@@ -1540,7 +1540,7 @@ def q30_way_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixed-build compose path, VALUE-ORACLED end-to-end: derive ways
     from customer grid points (Hilbert-ordered refs, ring/line mix per
     src/sort.rs:262-383's ladder), assign way h (J3/A2), resolve
-    geometry (J1), run rules + pyramid + the generic salted compose —
+    geometry (J1), run rules + pyramid + the generic compose —
     per-tile layer/feature stats.
 
     The oracle (``q30_sql``) recomputes every node h with the unrolled
@@ -1576,7 +1576,7 @@ def q30_way_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "geom_x",
         "geom_y",
     )
-    tiles = compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order, 1000)
+    tiles = compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order)
     return tiles.select(
         "zoom", "tile_h", "layer_count", "feature_count"
     ).orderBy("zoom", "tile_h")
@@ -1738,9 +1738,7 @@ def q33_raster_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gx",
         "gy",
     ).persist()
-    tiles = compose_tiles(
-        rf.drop("gx", "gy"), ["no_rule"] + DEFAULT_MANIFEST.layer_order, 1000
-    )
+    tiles = compose_tiles(rf.drop("gx", "gy"), ["no_rule"] + DEFAULT_MANIFEST.layer_order)
     return raster_mismatches(
         rasterize_payloads(tiles), rasterize_features(rf)
     ).orderBy("zoom", "tile_h", "cell")

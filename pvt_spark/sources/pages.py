@@ -9,7 +9,7 @@ partitioning or executor count — required for the byte-identical
 extraction invariant and for resume checks.
 
 Spatial mixture (FIXTURES.md §1): ~80% of geo mentions cluster around a
-few "urban" hot cells (exercises skew salting), ~20% uniform over the
+few "urban" hot cells (exercises hot-tile splitting), ~20% uniform over the
 world bbox; page -> mention multiplicity is 0..3.
 
 This module is test/bench scaffolding — the real engine ingests an

@@ -8,6 +8,7 @@ generations back into the base (materialize) must change nothing.
 
 import json
 import os
+from dataclasses import replace
 
 import numpy as np
 import pytest
@@ -154,6 +155,36 @@ def test_compaction_rejects_config_mismatch(spark, tmp_path):
     other = BuildConfig(leaf_zoom=10)
     with pytest.raises(ValueError, match="fingerprint"):
         compact_planet(spark, planet, d, other)
+    # a rule's body, not only its name, is part of the build's config
+    rules = dict(cfg.manifest.rules, amenity=replace(cfg.manifest.rules["amenity"], minzoom=12))
+    other = BuildConfig(manifest=replace(cfg.manifest, rules=rules))
+    with pytest.raises(ValueError, match="fingerprint"):
+        compact_planet(spark, planet, d, other)
+
+
+def test_fingerprint_covers_rules_layers_and_tag_options():
+    base = BuildConfig()
+    m = base.manifest
+    variants = [
+        replace(base, tags_from_url=False),
+        replace(base, manifest=replace(m, all_tags=not m.all_tags)),
+        replace(base, manifest=replace(m, layers={**m.layers, "Places": []})),
+    ]
+    for name, field_value in [("minzoom", 12), ("maxzoom", 14), ("keys", ["cafe"]),
+                              ("include", {"name"})]:
+        rule = replace(m.rules["amenity"], **{name: field_value})
+        variants.append(
+            replace(base, manifest=replace(m, rules=dict(m.rules, amenity=rule)))
+        )
+    fps = [v.fingerprint() for v in variants]
+    assert base.fingerprint() not in fps and len(set(fps)) == len(fps)
+    # sets hash by content, whatever their iteration order
+    a = replace(m.rules["amenity"], include={"name", "brand", "opening_hours"})
+    b = replace(m.rules["amenity"], include={"opening_hours", "name", "brand"})
+    assert (
+        replace(base, manifest=replace(m, rules=dict(m.rules, amenity=a))).fingerprint()
+        == replace(base, manifest=replace(m, rules=dict(m.rules, amenity=b))).fingerprint()
+    )
 
 
 def test_compaction_mixed_planet_point_delta(spark, tmp_path):

@@ -4,7 +4,7 @@ richness (reference src/hilbert/compose.rs:424-493 pins 8 layers /
 this pins the analog for the deterministic minicruz fixture).
 
 Constants documented in FIXTURES.md §8. Any change to rule evaluation,
-zoom explode, tile assignment, salting, merge ordering, interning or
+zoom explode, tile assignment, hot-tile splitting, merge ordering, interning or
 payload encoding that alters the composed tile breaks this test.
 """
 
@@ -76,7 +76,7 @@ def test_layered_compose_golden(spark):
         "geom_x",
         "geom_y",
     )
-    tiles = compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order, 500)
+    tiles = compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order)
     rows = tiles.collect()
 
     assert len(rows) == GOLDEN_TOTAL_TILES
@@ -179,8 +179,9 @@ def test_batched_final_encoder_byte_identical():
 
 def test_batched_phase2_merge_byte_identical():
     """The vectorized multi-tile chunk merge must match the retained
-    per-tile merge (layer ordering incl. off-manifest names, salt
-    interleave, var-length geometry, payload bytes) on randomized input."""
+    per-tile merge (layer ordering incl. off-manifest names, several
+    chunks per (tile, layer) whose h ranges interleave, var-length
+    geometry, payload bytes) on randomized input."""
     import pickle
 
     import numpy as np
@@ -198,7 +199,7 @@ def test_batched_phase2_merge_byte_identical():
             ["Places", "Roads", "Zeta", "Alpha", "no_rule"], n_layers, replace=False
         )
         for ln in lnames:
-            for salt in range(rng.randint(1, 3)):
+            for _ in range(rng.randint(1, 3)):
                 nf = rng.randint(1, 5)
                 geom_lens = rng.randint(1, 6, nf).astype(np.int64)
                 n_tags = rng.randint(0, 3, nf).astype(np.int64)
@@ -218,11 +219,9 @@ def test_batched_phase2_merge_byte_identical():
                     },
                     protocol=4,
                 )
-                rows.append((zoom, t, salt, ln, nf, chunk))
-    rows.sort(key=lambda r: (r[0], r[1], r[3], r[2]))
-    done = pd.DataFrame(
-        rows, columns=["zoom", "tile_h", "salt", "layer", "n_features", "chunk"]
-    )
+                rows.append((zoom, t, ln, nf, chunk))
+    rows.sort(key=lambda r: (r[0], r[1], r[2]))
+    done = pd.DataFrame(rows, columns=["zoom", "tile_h", "layer", "n_features", "chunk"])
     old = [
         _merge_tile_rows(int(z), int(th), grp, layer_order)
         for (z, th), grp in done.groupby(["zoom", "tile_h"], sort=False)

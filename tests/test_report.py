@@ -45,7 +45,7 @@ def _tiles(spark):
         "geom_x",
         "geom_y",
     )
-    return compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order, 500)
+    return compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order)
 
 
 def test_report_all_leaves_and_include_selection(spark):

@@ -43,9 +43,7 @@ def test_features_in_tile_range_lookup(spark):
 
 def test_info_source_composes_with_boundary_clamp(spark):
     info = info_features(spark, 12, 659, 1593, grandchild_levels=0)
-    tiles = compose_tiles(
-        info, ["tile_boundary", "tile_center", "tile_bearing"], 1000
-    )
+    tiles = compose_tiles(info, ["tile_boundary", "tile_center", "tile_bearing"])
     t = Tile.from_zxy(12, 659, 1593)
     row = tile_lookup(tiles, 12, t.x, t.y).collect()
     assert len(row) == 1
@@ -101,9 +99,7 @@ def test_zero_info_tile_pyramid(spark):
     """Reference src/info.rs test_zero_info_tile analog: the z0 root tile
     with descendant levels composes a non-trivial info pyramid."""
     info = info_features(spark, 0, 0, 0, grandchild_levels=2)
-    tiles = compose_tiles(
-        info, ["tile_boundary", "tile_center", "tile_bearing"], 100000
-    )
+    tiles = compose_tiles(info, ["tile_boundary", "tile_center", "tile_bearing"])
     row = tile_lookup(tiles, 0, 0, 0).collect()
     assert len(row) == 1
     decoded = decode_tile(bytes(row[0].payload))

@@ -1,4 +1,4 @@
-"""Multi-point features through the generic salted compose path:
+"""Multi-point features through the generic compose path:
 way h-assignment -> rules -> content -> compose_tiles (arrays + DP) ->
 payload decode with line/ring geometry round-trip."""
 
@@ -68,7 +68,7 @@ def test_ways_end_to_end_compose(spark):
         "geom_x",
         "geom_y",
     )
-    tiles = compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order, salt_threshold=50)
+    tiles = compose_tiles(rf, ["no_rule"] + DEFAULT_MANIFEST.layer_order)
     rows = tiles.collect()
     assert rows
 
