@@ -6,36 +6,29 @@ at a time from index ranges (src/hilbert/compose.rs:110-349) with
 per-tile string interning (src/tile_attributes.rs:14-80) and tile-local
 projection (src/tile.rs:297-334).
 
-Spark design (north rule: hot tiles split on the Hilbert key):
+Spark design (north rule: hot tiles split on the Hilbert key). Points,
+ways and relation rings take the same two phases:
 
-  phase 1  repartitionByRange(zoom, tile_h, h, feature_id) +
-           sortWithinPartitions -> ``mapInPandas`` over pre-projected
-           int16 tile-local rows (``project_geometry``): one lexsort
-           per Arrow batch emits a columnar CHUNK per (tile, layer,
-           batch). A tile is one contiguous run of the key, so
-           the range partitioner's sampled bounds fall inside any tile
-           that holds many rows: a dense-city tile spreads over several
-           tasks, each emitting its own chunks. Chunks are mergeable,
-           so batch and partition boundaries splitting a tile are
-           harmless.
+  phase 1  repartitionByRange(zoom, tile_h, h) + sortWithinPartitions ->
+           ``mapInPandas``: one lexsort per Arrow batch on (zoom, tile_h,
+           layer, h, feature_id, seq). A row with null ``geom_x`` is a
+           point, projected here from its grid coords; any other row
+           carries int16 tile-local geometry (``project_geometry``). The
+           clustering puts a tile's rows in one contiguous run, so only a
+           batch's first and last tile may continue in a neighbouring
+           batch or partition: those become mergeable chunks, every
+           interior tile a FINAL payload. A tile is one run of the key,
+           so the range bounds fall inside any tile that holds many rows:
+           a hot tile spreads over several tasks, its pieces chunks.
   phase 2  repartition(zoom, tile_h) + sort -> streaming ``mapInPandas``
-           with a carry buffer across Arrow batches (a tile's chunks
-           are contiguous in the sorted partition): global (h, id, seq)
-           order restore — chunks merge in any order — first-seen
-           interning (A6), emit the payload.
+           over the chunks only, with a carry buffer across Arrow batches
+           (a tile's chunks are contiguous in the sorted partition):
+           global (layer, h, id, seq) order restore — chunks merge in any
+           order — first-seen interning (A6), emit the payload.
 
-Point fast path (``compose_points``): one range shuffle by (zoom,
-tile_h, h) + sort clusters the point rows whatever their input layout
-(the content stage, a fold's dirty slice), so each tile is one
-contiguous run of one partition, or of adjacent partitions when it is
-hot; phase 1 emits FINAL payloads for the tiles interior to an Arrow
-batch and chunks for a batch's first/last tile, which the phase 2
-above merges.
-
-Shuffle widths: every keyed shuffle (both phases above, the point fast
-path's range shuffle and its phase 2) has no partition count, so AQE
-sizes each from its bytes; coalescing adjacent range partitions
-decides whether a hot tile's split survives.
+Shuffle widths: neither keyed shuffle has a partition count, so AQE
+sizes each from its bytes; coalescing adjacent range partitions decides
+whether a hot tile's split survives.
 
 Why mapInPandas and not groupBy().applyInPandas: with millions of
 small tiles the per-group UDF dispatch dominates (measured 146s of a
@@ -59,9 +52,6 @@ from ..session import persist
 from ..tile import tile_project
 from .simplify import DEFAULT_TOLERANCE, simplify_many
 
-CHUNK_SCHEMA = (
-    "zoom int, tile_h long, layer string, n_features long, chunk binary"
-)
 TILE_SCHEMA = (
     "zoom int, tile_h long, tile_id long, layer_count int, feature_count long, "
     "payload binary, payload_size int"
@@ -140,7 +130,7 @@ def project_geometry(df: DataFrame, tolerance: float = DEFAULT_TOLERANCE) -> Dat
     ~90% of the points (a 150-point way keeps ~13 after per-zoom DP).
     Projection + DP depend only on (zoom, tile_h) and the row's own
     coordinates — both fixed per row — so it commutes with the compose
-    shuffles; ``geometry_chunks`` consumes its output.
+    shuffles; ``phase1`` reads its int16 output as is.
     """
     from pyspark.sql import types as T
 
@@ -166,90 +156,13 @@ def project_geometry(df: DataFrame, tolerance: float = DEFAULT_TOLERANCE) -> Dat
     return df.mapInPandas(_stream, T.StructType(fields))
 
 
-def _phase1_stream(batches):
-    """Projected feature rows -> mergeable per-(tile, layer) chunks.
-
-    Vectorized across the whole Arrow batch (same discipline as the
-    phase-2 _merge_tiles_batch): ONE lexsort clusters rows by group with
-    (h, feature_id) as minor keys — replacing a pandas groupby + a
-    per-group sort_values whose constant dominated at ~1 feature/group
-    (external leaf rows land each way in its own leaf tile) — then every
-    per-feature column is gathered once and each group's chunk is sliced
-    out of flat arrays. Geometry arrives as int16 tile-local coords
-    (``project_geometry``), so P7 + DP are already done.
-    """
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        pdf = pdf.reset_index(drop=True)
-        n = len(pdf)
-        slens = np.fromiter((len(g) for g in pdf["geom_x"]), np.int64, count=n)
-        spx = np.concatenate([np.asarray(g, np.int16) for g in pdf["geom_x"]])
-        spy = np.concatenate([np.asarray(g, np.int16) for g in pdf["geom_y"]])
-        zoom = pdf["zoom"].to_numpy(dtype=np.int64)
-        tile_h = pdf["tile_h"].to_numpy(dtype=np.int64)
-        h = pdf["h"].to_numpy(dtype=np.int64)
-        fid = pdf["feature_id"].to_numpy(dtype=np.int64)
-        # geom_seq: tie-break for multi-row features (relation rings share
-        # feature_id AND h); absent on single-geometry producers
-        seq = (
-            pdf["geom_seq"].to_numpy(dtype=np.int64)
-            if "geom_seq" in pdf.columns
-            else np.zeros(n, dtype=np.int64)
-        )
-        lcodes, luniq = pd.factorize(pdf["layer"], sort=False)
-        # per-row interleaved tag strings (kv) — the one per-row Python
-        # pass (dict iteration has no vectorized form)
-        kv_all: list[str] = []
-        n_tags = np.empty(n, dtype=np.int64)
-        kv_off = np.empty(n + 1, dtype=np.int64)
-        kv_off[0] = 0
-        for j, tags in enumerate(pdf["out_tags"]):
-            items = sorted(tags.items()) if tags else []
-            n_tags[j] = len(items)
-            for k, v in items:
-                kv_all.append(k)
-                kv_all.append(v)
-            kv_off[j + 1] = len(kv_all)
-        order = np.lexsort((seq, fid, h, lcodes, tile_h, zoom))
-        zs, ts, ls = zoom[order], tile_h[order], lcodes[order]
-        new_grp = np.empty(n, dtype=bool)
-        new_grp[0] = True
-        new_grp[1:] = (
-            (zs[1:] != zs[:-1]) | (ts[1:] != ts[:-1]) | (ls[1:] != ls[:-1])
-        )
-        bounds = np.append(np.flatnonzero(new_grp), n)
-        ids_s, h_s, seq_s = fid[order], h[order], seq[order]
-        nt_s, slens_s = n_tags[order], slens[order]
-        # gather each row's simplified points in sorted-row order, then
-        # interleave x,y once for the whole batch
-        soff = np.concatenate([[0], np.cumsum(slens)])
-        gidx = _gather_varlen(order, slens, soff)
-        pts_all = np.empty(2 * len(gidx), dtype=np.int16)
-        pts_all[0::2] = spx[gidx]
-        pts_all[1::2] = spy[gidx]
-        pt_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(slens_s, out=pt_off[1:])
-        rows = []
-        for gi in range(len(bounds) - 1):
-            s, e = int(bounds[gi]), int(bounds[gi + 1])
-            kv: list[str] = []
-            for r in order[s:e]:
-                kv.extend(kv_all[kv_off[r] : kv_off[r + 1]])
-            chunk = pickle.dumps(
-                {
-                    "ids": ids_s[s:e],
-                    "h": h_s[s:e],
-                    "seq": seq_s[s:e],
-                    "n_tags": nt_s[s:e],
-                    "kv": kv,
-                    "geom_lens": slens_s[s:e],
-                    "pts": pts_all[2 * pt_off[s] : 2 * pt_off[e]],
-                },
-                protocol=4,
-            )
-            rows.append((int(zs[s]), int(ts[s]), luniq[ls[s]], e - s, chunk))
-        yield pd.DataFrame(rows, columns=["zoom", "tile_h", "layer", "n_features", "chunk"])
+def tag_kv(df: DataFrame) -> DataFrame:
+    """Replace the ``out_tags`` map with ``kv`` (its key/value pairs in
+    key order, interleaved) and ``n_tags``: primitive columns, so no
+    per-row dict crosses the Arrow boundary into tile assembly."""
+    tags = F.coalesce(F.col("out_tags"), F.create_map().cast("map<string,string>"))
+    kv = F.flatten(F.transform(F.array_sort(F.map_entries(tags)), lambda e: F.array(e.key, e.value)))
+    return df.withColumns({"kv": kv, "n_tags": F.size(tags)}).drop("out_tags")
 
 
 def _gather_varlen(order: np.ndarray, lens: np.ndarray, offsets: np.ndarray) -> np.ndarray:
@@ -263,20 +176,29 @@ def _gather_varlen(order: np.ndarray, lens: np.ndarray, offsets: np.ndarray) -> 
     return np.arange(total) - np.repeat(cum - new_lens, new_lens) + np.repeat(starts, new_lens)
 
 
+def _layer_keys(names: np.ndarray, layer_order: list[str]) -> np.ndarray:
+    """Per-row int64 key of the payload's layer order: manifest rank,
+    then name for layers beyond the manifest."""
+    codes, uniq = pd.factorize(names)
+    rank = {name: i for i, name in enumerate(layer_order)}
+    by_order = sorted(range(len(uniq)), key=lambda i: (rank.get(uniq[i], len(rank)), uniq[i]))
+    key = np.empty(len(uniq), dtype=np.int64)
+    key[by_order] = np.arange(len(uniq))
+    return key[codes]
+
+
 def _merge_tile_rows(zoom: int, tile_h: int, grp: pd.DataFrame, layer_order: list[str]):
-    layer_rank = {name: i for i, name in enumerate(layer_order)}
+    rank = {name: i for i, name in enumerate(layer_order)}
     layers_out = []
     total_features = 0
     for layer, lg in sorted(
         grp.groupby("layer", sort=False),
-        key=lambda kv: (layer_rank.get(kv[0], len(layer_rank)), kv[0]),
+        key=lambda kv: (rank.get(kv[0], len(rank)), kv[0]),
     ):
         chunks = [pickle.loads(c) for c in lg["chunk"]]
         ids = np.concatenate([c["ids"] for c in chunks])
         hs = np.concatenate([c["h"] for c in chunks])
-        seqs = np.concatenate(
-            [c.get("seq", np.zeros(len(c["ids"]), dtype=np.int64)) for c in chunks]
-        )
+        seqs = np.concatenate([c["seq"] for c in chunks])
         n_tags = np.concatenate([c["n_tags"] for c in chunks])
         geom_lens = np.concatenate([c["geom_lens"] for c in chunks])
         kv_flat = np.concatenate(
@@ -331,9 +253,8 @@ def _merge_tiles_batch(done: pd.DataFrame, layer_order: list[str]) -> list[tuple
     ``done`` holds complete tiles' chunk rows sorted by (zoom, tile_h,
     layer), a (tile, layer)'s chunks in any order. All chunks decode up
     front; per-feature arrays concatenate once; ONE global lexsort
-    restores (tile, layer-order, h, id, seq); var-length kv/pts blocks gather once; payload assembly runs
-    through the generalized batched encoder."""
-    layer_rank = {name: i for i, name in enumerate(layer_order)}
+    restores (tile, layer-order, h, id, seq); var-length kv/pts blocks
+    gather once; payload assembly runs through the batched encoder."""
     chunks = [pickle.loads(c) for c in done["chunk"]]
     cz = done["zoom"].to_numpy(dtype=np.int64)
     cth = done["tile_h"].to_numpy(dtype=np.int64)
@@ -342,20 +263,11 @@ def _merge_tiles_batch(done: pd.DataFrame, layer_order: list[str]) -> list[tuple
     tile_change = np.ones(len(cz), dtype=bool)
     tile_change[1:] = (cz[1:] != cz[:-1]) | (cth[1:] != cth[:-1])
     tile_of_chunk = np.cumsum(tile_change) - 1
-    # layer order key: manifest rank, then name (lexicographic) for
-    # layers beyond the manifest — mirrors _merge_tile_rows' sorted()
-    uniq_names = np.unique(cl)
-    name_key = np.searchsorted(uniq_names, cl)
-    rank_key = np.fromiter(
-        (layer_rank.get(l, len(layer_rank)) for l in cl), np.int64, count=len(cl)
-    )
-    lkey_chunk = rank_key * (len(uniq_names) + 1) + name_key
+    lkey_chunk = _layer_keys(cl, layer_order)
 
     ids = np.concatenate([c["ids"] for c in chunks])
     hs = np.concatenate([c["h"] for c in chunks])
-    seqs = np.concatenate(
-        [c.get("seq", np.zeros(len(c["ids"]), dtype=np.int64)) for c in chunks]
-    )
+    seqs = np.concatenate([c["seq"] for c in chunks])
     n_tags = np.concatenate([c["n_tags"] for c in chunks]).astype(np.int64)
     geom_lens = np.concatenate([c["geom_lens"] for c in chunks]).astype(np.int64)
     kv_flat = (
@@ -394,7 +306,7 @@ def _merge_tiles_batch(done: pd.DataFrame, layer_order: list[str]) -> list[tuple
     slices = list(zip(tb[:-1], tb[1:]))
     rows = _encode_final_tiles(
         slices, zoom_o, th_o, f_lkey[order], f_name[order], fids_o, n_tags_o,
-        kv_flat_o, kv_off_o, pts_o, geom_lens=geom_lens_o,
+        kv_flat_o, kv_off_o, pts_o, geom_lens_o,
     )
     # UNIFIED row -> TILE row (drop the final flag + chunk columns)
     return [(r[0], r[1], r[3], r[4], r[5], r[6], r[7]) for r in rows]
@@ -429,70 +341,26 @@ def _phase2_stream(batches, layer_order: list[str]):
         )
 
 
-def geometry_chunks(render_features: DataFrame) -> DataFrame:
-    """Phase 1 of the generic compose: mergeable chunks (CHUNK_SCHEMA)
-    for arbitrary line/ring geometry.
-
-    render_features(zoom, tile_h, feature_id, h, layer, out_tags,
-    geom_x array<short>, geom_y array<short>) as ``project_geometry``
-    emits them; ``layer`` already exploded. The range key runs down to
-    (h, feature_id), so a hot tile splits across tasks wherever its
-    rows' bytes say and each piece chunks on its own. Chunks from this
-    path and the point fast path's boundary chunks share one format, so
-    a mixed node/way/relation build merges them in ONE phase 2
-    (``compose_points(extra_chunks=...)``).
-    """
-    sort_cols = ["zoom", "tile_h", "layer", "h", "feature_id"]
-    if "geom_seq" in render_features.columns:
-        sort_cols.append("geom_seq")
-    part1 = render_features.repartitionByRange(
-        "zoom", "tile_h", "h", "feature_id"
-    ).sortWithinPartitions(*sort_cols)
-    return part1.mapInPandas(_phase1_stream, CHUNK_SCHEMA)
-
-
-def merge_chunks(chunks: DataFrame, layer_order: list[str]) -> DataFrame:
-    """Phase 2: shuffle chunk rows by (zoom, tile_h) and merge into final
-    tile payloads. Input chunks may come from any phase-1 producer."""
-    part2 = chunks.repartition("zoom", "tile_h").sortWithinPartitions(
-        "zoom", "tile_h", "layer"
-    )
-    return part2.mapInPandas(lambda it: _phase2_stream(it, layer_order), TILE_SCHEMA)
-
-
-def compose_tiles(
-    render_features: DataFrame,
-    layer_order: list[str],
-    tolerance: float = DEFAULT_TOLERANCE,
-) -> DataFrame:
-    """render_features(zoom, tile_h, feature_id, h, layer, out_tags,
-    geom_x array<long>, geom_y array<long>) -> tiles table.
-
-    ``layer`` must already be exploded (one row per feature x layer).
-    """
-    return merge_chunks(
-        geometry_chunks(project_geometry(render_features, tolerance)), layer_order
-    )
-
-
 # ---------------------------------------------------------------------------
-# Point-feature fast path: every column primitive (no per-row lists/dicts
-# cross the Arrow boundary), finals emitted in phase 1
+# Phase 1: every column primitive (no per-row dicts cross the Arrow
+# boundary), finals for the tiles interior to an Arrow batch
 # ---------------------------------------------------------------------------
 
 UNIFIED_SCHEMA = (
     "zoom int, tile_h long, final boolean, tile_id long, layer_count int, "
     "feature_count long, payload binary, payload_size int, "
-    "layer string, n_features long, chunk binary"
+    "layer string, chunk binary"
 )
+_UNIFIED_COLS = [f.split()[0] for f in UNIFIED_SCHEMA.split(", ")]
 
 
-def _encode_tile_slices(zoom, tile_h, s, e, layer_rank, layers, hs, fids, n_tags,
+def _encode_tile_slices(zoom, tile_h, s, e, layer_key, layers, hs, fids, n_tags,
                         kv_flat, kv_off, pts):
-    """Encode one tile from batch-global arrays (rows [s:e), pre-sorted by
-    (layer_rank, h, id))."""
+    """Encode one single-point-feature tile from batch-global arrays (rows
+    [s:e), pre-sorted by (layer_key, h, id)): the per-tile reference of
+    ``_encode_final_tiles``, kept as its test oracle."""
     out_layers = []
-    bounds = [s] + list(s + 1 + np.flatnonzero(layer_rank[s + 1 : e] != layer_rank[s : e - 1])) + [e]
+    bounds = [s] + list(s + 1 + np.flatnonzero(layer_key[s + 1 : e] != layer_key[s : e - 1])) + [e]
     for a, b in zip(bounds[:-1], bounds[1:]):
         out_layers.append(
             {
@@ -510,11 +378,11 @@ def _encode_tile_slices(zoom, tile_h, s, e, layer_rank, layers, hs, fids, n_tags
         if tile_h <= 140_737_488_355_327
         else tile_h % 4_503_599_627_370_495
     )
-    return (zoom, tile_h, True, tile_id, len(out_layers), e - s, payload, len(payload), None, None, None)
+    return (zoom, tile_h, True, tile_id, len(out_layers), e - s, payload, len(payload), None, None)
 
 
-def _encode_final_tiles(tiles, zoom, tile_h, layer_rank, layers, fids, n_tags,
-                        kv_flat, kv_off, pts, geom_lens=None):
+def _encode_final_tiles(tiles, zoom, tile_h, layer_key, layers, fids, n_tags,
+                        kv_flat, kv_off, pts, geom_lens):
     """Encode MANY final tiles in one vectorized pass (byte-identical to
     per-tile ``encode_tile_arrays``, same v2 layout).
 
@@ -526,11 +394,9 @@ def _encode_final_tiles(tiles, zoom, tile_h, layer_rank, layers, fids, n_tags,
     The remaining per-tile loop only joins precomputed byte slices.
 
     tiles: list of (s, e) global row slices, each a complete final tile;
-    other args are the run-level arrays of ``process_run``.
-    ``geom_lens=None`` means single-point features (the fast path);
-    otherwise it carries per-feature point counts and ``pts`` is the
-    correspondingly var-length interleaved coordinate buffer (the
-    batched phase-2 merge path).
+    the other args are per-row arrays sorted by (tile, layer_key, h, id,
+    seq). ``geom_lens`` holds each row's point count and ``pts`` the
+    matching var-length interleaved coordinate buffer.
     """
     if not tiles:
         return []
@@ -543,8 +409,8 @@ def _encode_final_tiles(tiles, zoom, tile_h, layer_rank, layers, fids, n_tags,
     row_idx = np.arange(total) - np.repeat(cum - lens, lens) + np.repeat(S, lens)
     tile_of_row = np.repeat(np.arange(len(S)), lens)
 
-    # --- layer segments (runs of equal layer_rank within a tile)
-    lr = layer_rank[row_idx]
+    # --- layer segments (runs of equal layer_key within a tile)
+    lr = layer_key[row_idx]
     first_of_tile = np.zeros(total, dtype=bool)
     first_of_tile[np.concatenate([[0], cum[:-1]])] = True
     seg_flag = first_of_tile.copy()
@@ -622,12 +488,8 @@ def _encode_final_tiles(tiles, zoom, tile_h, layer_rank, layers, fids, n_tags,
     # --- run-level fixed-width buffers; per tile/segment = byte slices
     ids_b = np.ascontiguousarray(fids, dtype=np.int64).tobytes()
     ntags_b = np.ascontiguousarray(n_tags, dtype=np.uint16).tobytes()
-    if geom_lens is None:
-        glens_b = np.ones(len(n_tags), dtype=np.uint32).tobytes()
-        pt_off = None  # 1 point/feature: pts slice == row slice
-    else:
-        glens_b = np.ascontiguousarray(geom_lens, dtype=np.uint32).tobytes()
-        pt_off = np.concatenate([[0], np.cumsum(geom_lens, dtype=np.int64)])
+    glens_b = np.ascontiguousarray(geom_lens, dtype=np.uint32).tobytes()
+    pt_off = np.concatenate([[0], np.cumsum(geom_lens, dtype=np.int64)])
     pts_b = np.ascontiguousarray(pts, dtype=np.int16).tobytes()
     kvi_b = kv_intern.astype(np.uint32).tobytes()
 
@@ -652,188 +514,197 @@ def _encode_final_tiles(tiles, zoom, tile_h, layer_rank, layers, fids, n_tags,
             parts.append(ntags_b[2 * ga : 2 * gb])
             parts.append(kvi_b[4 * fr_kv_off[a] : 4 * fr_kv_off[b]])
             parts.append(glens_b[4 * ga : 4 * gb])
-            if pt_off is None:
-                parts.append(pts_b[4 * ga : 4 * gb])
-            else:
-                parts.append(pts_b[4 * pt_off[ga] : 4 * pt_off[gb]])
+            parts.append(pts_b[4 * pt_off[ga] : 4 * pt_off[gb]])
         payload = b"".join(parts)
         tile_id = (
             (z << 47) | th if th <= 140_737_488_355_327 else th % 4_503_599_627_370_495
         )
         rows.append(
             (z, th, True, tile_id, int(n_layers_per_tile[ti]), e_ - s_, payload,
-             len(payload), None, None, None)
+             len(payload), None, None)
         )
     return rows
 
 
-def _chunk_rows_for_tile(zoom, tile_h, s, e, layer_rank, layers, hs, raw_ids, n_tags,
-                         kv_flat, kv_off, pts):
-    """Boundary tile -> mergeable chunk rows (same format as _chunk_of)."""
+
+
+def _chunk_rows_for_tile(zoom, tile_h, s, e, layer_key, layers, hs, ids, seq, n_tags,
+                         kv_flat, kv_off, geom_lens, pt_off, pts):
+    """Boundary tile (sorted rows [s:e)) -> one mergeable chunk row per
+    layer, in the format ``_merge_tiles_batch`` reads."""
     rows = []
-    bounds = [s] + list(s + 1 + np.flatnonzero(layer_rank[s + 1 : e] != layer_rank[s : e - 1])) + [e]
+    bounds = [s] + list(s + 1 + np.flatnonzero(layer_key[s + 1 : e] != layer_key[s : e - 1])) + [e]
     for a, b in zip(bounds[:-1], bounds[1:]):
         chunk = pickle.dumps(
             {
-                "ids": raw_ids[a:b],
+                "ids": ids[a:b],
                 "h": hs[a:b],
+                "seq": seq[a:b],
                 "n_tags": n_tags[a:b],
                 "kv": list(kv_flat[kv_off[a] : kv_off[b]]),
-                "geom_lens": np.ones(b - a, dtype=np.int64),
-                "pts": pts[2 * a : 2 * b].copy(),
+                "geom_lens": geom_lens[a:b],
+                "pts": pts[2 * pt_off[a] : 2 * pt_off[b]],
             },
             protocol=4,
         )
         rows.append(
-            (zoom, tile_h, False, None, None, None, None, None, layers[a], b - a, chunk)
+            (zoom, tile_h, False, None, None, None, None, None, layers[a], chunk)
         )
     return rows
 
 
-def _phase1_points_stream(batches, exclude_keys=None):
-    """Stateless per-batch processing with boundary chunking.
+def _phase1_batch(pdf: pd.DataFrame, layer_order: list[str]) -> list[tuple]:
+    """One Arrow batch of render-feature rows -> UNIFIED_SCHEMA rows.
 
-    Safety argument: ``point_phase1`` range-partitions its input by
-    (zoom, tile_h, h) and sorts within partitions, so a tile's rows are
-    one contiguous run of a partition, or of adjacent partitions (a hot
-    tile: the last tile of one, the first of the next); the partition's
-    Arrow batches arrive in order, so only a batch's FIRST and LAST
-    tiles may continue in a neighbouring batch or partition. Those are
-    emitted as mergeable chunks; strictly interior tiles are provably
-    complete -> final payloads. No cross-batch carry state needed — chunks merge in
-    phase 2. Tiles whose key (``tile_keys``) is in the sorted int64
-    array ``exclude_keys`` are emitted as chunks too.
+    Safety argument: ``phase1`` range-partitions its input by (zoom,
+    tile_h, h) and sorts within partitions by (zoom, tile_h), so a tile's
+    rows are one contiguous run of a partition, or of adjacent partitions
+    (a hot tile: the last tile of one, the first of the next); the
+    partition's Arrow batches arrive in order, so only a batch's FIRST and
+    LAST tiles may continue in a neighbouring batch or partition. Those
+    come out as chunks; strictly interior tiles are complete -> final
+    payloads, encoded in one vectorized pass. No carry state across
+    batches: chunks merge in phase 2.
     """
-    cols = [
-        "zoom", "tile_h", "final", "tile_id", "layer_count", "feature_count",
-        "payload", "payload_size", "layer", "n_features", "chunk",
-    ]
-    # exclude_keys may arrive as a Broadcast (fetched once per executor,
-    # not shipped in every task closure) — deref lazily, i.e. on the
-    # executor, when the generator first runs
-    if exclude_keys is not None and hasattr(exclude_keys, "value"):
-        exclude_keys = exclude_keys.value
+    n = len(pdf)
+    cols = pdf.columns
+    # a point row has no geometry array: project its grid coords here
+    point = pdf["geom_x"].isna().to_numpy() if "geom_x" in cols else np.ones(n, bool)
+    # geom_seq breaks the tie between a relation's ring rows, which share
+    # feature_id AND h
+    seq = (
+        pdf["geom_seq"].fillna(0).to_numpy(dtype=np.int64)
+        if "geom_seq" in cols
+        else np.zeros(n, dtype=np.int64)
+    )
+    zoom = pdf["zoom"].to_numpy(dtype=np.int64)
+    tile_h = pdf["tile_h"].to_numpy(dtype=np.int64)
+    hs = pdf["h"].to_numpy(dtype=np.int64)
+    ids = pdf["feature_id"].to_numpy(dtype=np.int64)
+    layers = pdf["layer"].to_numpy()
+    layer_key = _layer_keys(layers, layer_order)
+    order = np.lexsort((seq, ids, hs, layer_key, tile_h, zoom))
+    zoom, tile_h, hs, ids, seq, layer_key, layers, point = (
+        a[order] for a in (zoom, tile_h, hs, ids, seq, layer_key, layers, point)
+    )
+    n_tags = pdf["n_tags"].to_numpy(dtype=np.int64)[order]
+    kv_flat = np.concatenate(pdf["kv"].to_numpy()[order])
+    kv_off = np.concatenate([[0], np.cumsum(n_tags * 2)])
 
-    def process_run(run: pd.DataFrame):
-        run = run.sort_values(
-            ["zoom", "tile_h", "layer_rank", "h", "feature_id"], kind="mergesort"
-        ).reset_index(drop=True)
-        n = len(run)
-        zoom = run["zoom"].to_numpy(dtype=np.int64)
-        tile_h = run["tile_h"].to_numpy(dtype=np.int64)
-        layer_rank = run["layer_rank"].to_numpy(dtype=np.int64)
-        layers = run["layer"].to_numpy()
-        hs = run["h"].to_numpy(dtype=np.int64)
-        raw_ids = run["feature_id"].to_numpy(dtype=np.int64)
-        n_tags = run["n_tags"].to_numpy(dtype=np.int64)
-        gx = run["gx"].to_numpy(dtype=np.float64)
-        gy = run["gy"].to_numpy(dtype=np.float64)
-        kv_cells = run["kv"].to_numpy()
-        kv_flat = np.concatenate(kv_cells) if n else np.empty(0, dtype=object)
-        kv_off = np.concatenate([[0], np.cumsum(n_tags * 2)])
-        tx, ty = _tile_origin_xy(zoom, tile_h)
-        px, py = tile_project(
-            zoom.astype(np.float64), tx.astype(np.float64), ty.astype(np.float64), gx, gy
+    geom_lens = np.ones(n, dtype=np.int64)
+    geo = ~point  # rows carrying an int16 geometry array
+    if geo.any():
+        gx_cells = pdf["geom_x"].to_numpy()[order][geo]
+        gy_cells = pdf["geom_y"].to_numpy()[order][geo]
+        geom_lens[geo] = np.fromiter(map(len, gx_cells), np.int64, count=len(gx_cells))
+    pt_off = np.concatenate([[0], np.cumsum(geom_lens)])
+    xs = np.empty(pt_off[-1], dtype=np.int16)
+    ys = np.empty(pt_off[-1], dtype=np.int16)
+    at = pt_off[:-1][point]
+    if point.any():
+        tx, ty = _tile_origin_xy(zoom[point], tile_h[point])
+        xs[at], ys[at] = tile_project(
+            zoom[point], tx, ty,
+            pdf["gx"].to_numpy(dtype=np.float64)[order][point],
+            pdf["gy"].to_numpy(dtype=np.float64)[order][point],
         )
-        pts = np.empty(2 * n, dtype=np.int16)
-        pts[0::2] = px
-        pts[1::2] = py
-        fids = _feature_tile_id(zoom, hs)
-        tb = np.concatenate([
-            [0],
-            1 + np.flatnonzero((tile_h[1:] != tile_h[:-1]) | (zoom[1:] != zoom[:-1])),
-            [n],
-        ])
-        boundary = np.zeros(len(tb) - 1, dtype=bool)
-        boundary[[0, -1]] = True
-        if exclude_keys is not None and len(exclude_keys):
-            keys = tile_keys(zoom[tb[:-1]], tile_h[tb[:-1]])
-            at = np.searchsorted(exclude_keys, keys).clip(max=len(exclude_keys) - 1)
-            boundary |= exclude_keys[at] == keys
-        rows = []
-        final_slices = []
-        for i, (s_, e_) in enumerate(zip(tb[:-1].tolist(), tb[1:].tolist())):
-            if boundary[i]:
-                rows.extend(
-                    _chunk_rows_for_tile(
-                        int(zoom[s_]), int(tile_h[s_]), s_, e_, layer_rank, layers,
-                        hs, raw_ids, n_tags, kv_flat, kv_off, pts,
-                    )
-                )
-            else:
-                final_slices.append((s_, e_))
-        # all final tiles of the run encode in ONE vectorized pass
+    if geo.any():
+        rest = np.ones(len(xs), dtype=bool)
+        rest[at] = False
+        xs[rest] = np.concatenate([np.asarray(g, np.int16) for g in gx_cells])
+        ys[rest] = np.concatenate([np.asarray(g, np.int16) for g in gy_cells])
+    pts = np.empty(2 * len(xs), dtype=np.int16)
+    pts[0::2] = xs
+    pts[1::2] = ys
+
+    tb = np.concatenate([
+        [0],
+        1 + np.flatnonzero((tile_h[1:] != tile_h[:-1]) | (zoom[1:] != zoom[:-1])),
+        [n],
+    ]).tolist()
+    rows = []
+    for i in sorted({0, len(tb) - 2}):
         rows.extend(
-            _encode_final_tiles(
-                final_slices, zoom, tile_h, layer_rank, layers, fids, n_tags,
-                kv_flat, kv_off, pts,
+            _chunk_rows_for_tile(
+                int(zoom[tb[i]]), int(tile_h[tb[i]]), tb[i], tb[i + 1], layer_key,
+                layers, hs, ids, seq, n_tags, kv_flat, kv_off, geom_lens, pt_off, pts,
             )
         )
-        return rows
+    rows.extend(
+        _encode_final_tiles(
+            list(zip(tb[1:-2], tb[2:-1])), zoom, tile_h, layer_key, layers,
+            _feature_tile_id(zoom, hs), n_tags, kv_flat, kv_off, pts, geom_lens,
+        )
+    )
+    return rows
 
+
+def _phase1_stream(batches, layer_order: list[str]):
     for pdf in batches:
-        if pdf.empty:
-            continue
-        yield pd.DataFrame(process_run(pdf), columns=cols)
+        if not pdf.empty:
+            yield pd.DataFrame(_phase1_batch(pdf, layer_order), columns=_UNIFIED_COLS)
 
 
-def point_phase1(render_features: DataFrame, exclude_keys=None) -> DataFrame:
-    """Phase 1 of the point fast path (UNIFIED_SCHEMA rows: finals and
-    boundary chunks) over point render-features in any layout.
+def phase1(render_features: DataFrame, layer_order: list[str]) -> DataFrame:
+    """Phase 1 (UNIFIED_SCHEMA rows: finals and boundary chunks) over
+    render-features in any layout.
 
     The input is range-partitioned by (zoom, tile_h, h) and sorted
-    within partitions here — the one place that clusters point content
-    for tile assembly, so the build's content stage and a fold's dirty
+    within partitions here — the one place that clusters content for
+    tile assembly, so the build's content stages and a fold's dirty
     slice both pass their rows as they are. A hot tile is one long run
     of the key, so the range bounds split it across tasks; its pieces
     are batch-boundary tiles and come out as chunks.
     """
-    spark = render_features.sparkSession
-    # demotion key set rides a broadcast variable, not the task closure
-    bc_exclude = (
-        spark.sparkContext.broadcast(exclude_keys) if exclude_keys is not None else None
-    )
     clustered = render_features.repartitionByRange(
         "zoom", "tile_h", "h"
     ).sortWithinPartitions("zoom", "tile_h")
     return clustered.mapInPandas(
-        lambda it: _phase1_points_stream(it, bc_exclude), UNIFIED_SCHEMA
+        lambda it: _phase1_stream(it, layer_order), UNIFIED_SCHEMA
     )
 
 
-def compose_points(
+def compose_features(render_features: DataFrame, layer_order: list[str]) -> DataFrame:
+    """Render-features in any layout -> tiles table (TILE_SCHEMA).
+
+    Input columns (``layer`` already exploded, one row per feature x
+    layer; nothing per-row crosses Arrow as Python objects except the
+    flat kv strings and geometry arrays):
+      zoom int, tile_h long, feature_id long, h long, layer string,
+      kv array<string> and n_tags int (``tag_kv``), and either
+      gx long, gy long (a point, in grid coords) or geom_x/geom_y
+      array<short> (tile-local, ``project_geometry``) with an optional
+      geom_seq int; a row whose ``geom_x`` is null is a point.
+
+    Phase 1 (``phase1``) clusters the rows and emits FINAL payloads for
+    tiles interior to an Arrow batch (almost all of them) and mergeable
+    chunks only for the first/last tile of each batch — a hot tile
+    split across tasks among them; phase 2 merges those few boundary
+    tiles. Phase 1 is cached through ``session.persist`` (finals and
+    chunks both read it): compose inside ``held_caches`` to release it.
+    """
+    ph1 = persist(phase1(render_features, layer_order))
+    finals = ph1.where(F.col("final")).select(*_TILE_COLS)
+    chunks = ph1.where(~F.col("final")).select("zoom", "tile_h", "layer", "chunk")
+    merged = chunks.repartition("zoom", "tile_h").sortWithinPartitions(
+        "zoom", "tile_h", "layer"
+    )
+    return finals.unionByName(
+        merged.mapInPandas(lambda it: _phase2_stream(it, layer_order), TILE_SCHEMA)
+    )
+
+
+def compose_tiles(
     render_features: DataFrame,
     layer_order: list[str],
-    exclude_keys=None,
-    extra_chunks: DataFrame | None = None,
+    tolerance: float = DEFAULT_TOLERANCE,
 ) -> DataFrame:
-    """Single-point-feature compose over point render-features in any
-    layout.
+    """render_features(zoom, tile_h, feature_id, h, layer, out_tags,
+    geom_x array<long>, geom_y array<long>) -> tiles table: the
+    world-coordinate entry of ``compose_features``.
 
-    Input columns (all primitive — nothing per-row crosses Arrow as
-    Python objects except the flat kv string array):
-      zoom int, tile_h long, feature_id long, h long, layer string,
-      layer_rank int, kv array<string> (sorted k,v pairs interleaved),
-      n_tags int, gx long, gy long
-
-    Phase 1 (``point_phase1``) clusters the rows and emits FINAL
-    payloads for tiles interior to an Arrow batch (almost all of them)
-    and mergeable chunks only for the first/last tile of each batch —
-    a hot tile split across tasks among them; phase 2 merges those few
-    boundary tiles.
-
-    Mixed builds: ``exclude_keys`` (sorted int64 ``tile_keys``) demotes
-    the listed tiles from finals to chunks so their point rows can merge
-    with ``extra_chunks`` (way/relation geometry chunks) in phase 2 —
-    every other tile keeps the finals fast path.
+    ``layer`` must already be exploded (one row per feature x layer).
     """
-    # finals and partials both read phase 1: cached, released with the
-    # enclosing held_caches block (the tiles write)
-    ph1 = persist(point_phase1(render_features, exclude_keys))
-    finals = ph1.where(F.col("final")).select(*_TILE_COLS)
-    partials = ph1.where(~F.col("final")).select(
-        "zoom", "tile_h", "layer", "n_features", "chunk"
+    return compose_features(
+        tag_kv(project_geometry(render_features, tolerance)), layer_order
     )
-    if extra_chunks is not None:
-        partials = partials.unionByName(extra_chunks)
-    return finals.unionByName(merge_chunks(partials, layer_order))

@@ -79,7 +79,7 @@ def write_content(content: DataFrame, path: str) -> None:
     No shuffle: the sort is task-local, so each file holds a tile_h-
     sorted run of its zoom and parquet row-group stats stay tight for
     the fold's per-zoom interval cover (``compaction._rows_at_keys``).
-    Tile assembly does not rely on this layout (``compose_points``
+    Tile assembly does not rely on this layout (``compose_features``
     clusters its own input).
     """
     content.sortWithinPartitions("zoom", "tile_h").write.mode("overwrite").partitionBy(

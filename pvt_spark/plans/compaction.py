@@ -240,12 +240,12 @@ def _recompose_dirty_tiles(
     steps: dict | None = None,
 ) -> bool:
     """Run the build's compose on the dirty keys' (old + delta) content
-    slice as read (``compose_points`` clusters it; mixed planets re-merge
-    the dirty slice of the unchanged content_mp stage as geometry
-    chunks), and write the recomposed tiles and the keys' manifest rows
-    as generation ``gen`` of the ``tiles`` and ``tile_manifest`` logs.
-    The two writes are independent consumers of the cached dirty slice
-    and run as concurrent jobs. Per-step walls land in ``steps``
+    slice as read (``compose_features`` clusters it; mixed planets add
+    the dirty slice of the unchanged content_mp stage to it), and write
+    the recomposed tiles and the keys' manifest rows as generation
+    ``gen`` of the ``tiles`` and ``tile_manifest`` logs. The two writes
+    are independent consumers of the cached dirty slice and run as
+    concurrent jobs. Per-step walls land in ``steps``
     (overlapping).
 
     Returns whether generation ``gen`` was written: keys without point
@@ -272,9 +272,8 @@ def _recompose_dirty_tiles(
         return False
     mp_dirty = None
     if mixed:
-        # same merge shape as build_planet's mixed compose, restricted
-        # to the dirty keys: the mp tile subset demotes from finals to
-        # chunks and merges with its (unchanged) geometry chunks
+        # build_planet's mixed compose, restricted to the dirty keys:
+        # their (unchanged) multi-point rows compose with the points
         mp_dirty = persist(
             spark.read.parquet(os.path.join(planet_dir, "content_mp")).join(
                 F.broadcast(dirty), ["zoom", "tile_h"], "left_semi"

@@ -37,18 +37,12 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 from urllib.parse import unquote, urlparse
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.geo import grid_x, grid_y
 from ..manifest import DEFAULT_MANIFEST, Manifest, compile_rules
-from ..operators.compose import (
-    compose_points,
-    geometry_chunks,
-    project_geometry,
-    tile_keys,
-)
+from ..operators.compose import compose_features, project_geometry, tag_kv
 from ..operators.content import (
     render_content,
     tile_manifest,
@@ -71,7 +65,7 @@ from ..operators.hilbert_sort import hilbert_sort
 from ..operators.leaves import build_leaves
 from ..operators.rules import include_evals, include_tags
 from ..operators.tree import build_tile_tree
-from ..session import held_caches, int64_columns, local_frame
+from ..session import held_caches, local_frame
 from ..sources.ways import synthesize_relations, synthesize_ways
 
 PIPELINE_VERSION = 5  # v5: hot tiles split on the (zoom, tile_h, h) range key
@@ -409,54 +403,26 @@ def _layer_order(config: BuildConfig) -> list[str]:
     return ["no_rule"] + config.manifest.layer_order
 
 
-def _points_rf(spark, content: DataFrame, compiled, config: BuildConfig) -> DataFrame:
-    """Point-content rows -> primitive-only render-features for the
-    point fast path (see compose_points input contract)."""
+def _render_features(spark, content: DataFrame, compiled, config: BuildConfig) -> DataFrame:
+    """Content rows (point, multi-point or their union) -> render-features
+    for ``compose_features``: one row per feature x layer, tags as
+    ``kv``/``n_tags``, the geometry columns the rows carry."""
     evals_df = include_evals(spark, compiled)
     feats = include_tags(
         content.join(F.broadcast(evals_df), "eval_i", "left"),
         all_tags=config.manifest.all_tags,
     )
-    layer_order = _layer_order(config)
-    rank_args = []
-    for i, name in enumerate(layer_order):
-        rank_args.extend([F.lit(name), F.lit(i)])
-    rank_map = F.create_map(*rank_args)
-    return feats.select(
-        "zoom",
-        "tile_h",
-        "feature_id",
-        "h",
-        F.explode("layers").alias("layer"),
-        F.expr(
-            "flatten(transform(array_sort(map_entries(out_tags)),"
-            " e -> array(e.key, e.value)))"
-        ).alias("kv"),
-        F.size("out_tags").alias("n_tags"),
-        "gx",
-        "gy",
-    ).withColumn(
-        "layer_rank", F.coalesce(F.element_at(rank_map, F.col("layer")), F.lit(999))
-    )
-
-
-def _mp_rf(spark, content_mp: DataFrame, compiled, config: BuildConfig) -> DataFrame:
-    """Multi-point content rows -> render-features for geometry_chunks."""
-    evals_df = include_evals(spark, compiled)
-    feats = include_tags(
-        content_mp.join(F.broadcast(evals_df), "eval_i", "left"),
-        all_tags=config.manifest.all_tags,
-    )
-    return feats.select(
-        "zoom",
-        "tile_h",
-        "feature_id",
-        "h",
-        F.explode("layers").alias("layer"),
-        "out_tags",
-        "geom_x",
-        "geom_y",
-        "geom_seq",
+    geometry = [c for c in ("gx", "gy", "geom_x", "geom_y", "geom_seq") if c in feats.columns]
+    return tag_kv(
+        feats.select(
+            "zoom",
+            "tile_h",
+            "feature_id",
+            "h",
+            F.explode("layers").alias("layer"),
+            "out_tags",
+            *geometry,
+        )
     )
 
 
@@ -468,8 +434,8 @@ def sorted_points(pages: DataFrame, config: BuildConfig) -> DataFrame:
 
 def point_content(points: DataFrame, config: BuildConfig, compiled) -> DataFrame:
     """Rule-pyramid content rows of point features, grid coords carried
-    for the point compose fast path (purely per-feature, so a fold's
-    delta content appends to the build's)."""
+    for the compose to project (purely per-feature, so a fold's delta
+    content appends to the build's)."""
     pts = points.withColumn("gx", grid_x(F.col("lon_dm7"))).withColumn(
         "gy", grid_y(F.col("lat_dm7"))
     )
@@ -489,27 +455,18 @@ def manifest_input(content: DataFrame, content_mp: DataFrame | None) -> DataFram
 def compose_planet_tiles(
     content: DataFrame, content_mp: DataFrame | None, compiled, config: BuildConfig
 ) -> DataFrame:
-    """Tile payload assembly (A6/P7/DP) on point content in any layout
-    (``compose_points`` clusters it) — fast path with interior-tile
-    finals; mixed: the point rows of multi-point tiles become chunks
-    that merge with the geometry chunks in one phase 2. The build
-    composes the whole planet, a fold its dirty slice."""
-    spark = content.sparkSession
-    layer_order = _layer_order(config)
-    rf = _points_rf(spark, content, compiled, config)
-    if content_mp is None:
-        return compose_points(rf, layer_order)
-    # content_mp stores tile-local simplified coords (project_geometry)
-    gchunks = geometry_chunks(_mp_rf(spark, content_mp, compiled, config))
-    # the point finals fast path stays available for every tile with
-    # NO multi-point features: demote only the mp tile set to chunks
-    # (one collect of sorted int64 tile keys, 8 driver bytes each,
-    # riding a sparkContext.broadcast inside compose_points), merge
-    # those with the geometry chunks
-    keys = np.sort(
-        tile_keys(*int64_columns(content_mp.select("zoom", "tile_h").distinct()))
+    """Tile payload assembly (A6/P7/DP) over point content and, in a
+    mixed build, the multi-point content (tile-local simplified coords,
+    ``project_geometry``) in any layout: one union, one compose, so every
+    tile's nodes, ways and relations assemble together
+    (``compose_features`` clusters them). The build composes the whole
+    planet, a fold its dirty slice."""
+    if content_mp is not None:
+        content = content.unionByName(content_mp, allowMissingColumns=True)
+    return compose_features(
+        _render_features(content.sparkSession, content, compiled, config),
+        _layer_order(config),
     )
-    return compose_points(rf, layer_order, exclude_keys=keys, extra_chunks=gchunks)
 
 
 def build_planet(
@@ -526,7 +483,7 @@ def build_planet(
     range partition, fused with extraction into the points stage); the
     tree is a 16x-shrinking rollup; content is written with no shuffle
     (a task-local sort per zoom); tile assembly range-clusters the
-    index+attr rows once (``compose_points``: phase 1 emits finals from
+    index+attr rows once (``compose_features``: phase 1 emits finals from
     that shuffle, phase 2 shuffles only chunk rows).
 
     Mixed builds (reference compose.rs:41-349 + leaf.rs:214-380): pass
@@ -535,9 +492,9 @@ def build_planet(
     — or set config.synth_ways/synth_relations to derive them from the
     points. Way/relation h-assignment (J3/A1/A2), external leaf
     membership (J5/J6), and line/ring geometry then flow through the
-    SAME per-tile payload merge as points: the point fast path emits
-    mergeable chunks instead of finals and one phase-2 shuffle unifies
-    node/way/relation features per tile.
+    SAME compose as points: the point and multi-point content are one
+    union, so a tile's node/way/relation features assemble in one phase 1
+    (finals for batch-interior tiles) and one phase-2 merge.
     """
     config = config or BuildConfig()
     os.makedirs(planet_dir, exist_ok=True)
@@ -746,7 +703,7 @@ def build_planet(
         if f_mp is not None:
             content_mp = f_mp.result()
 
-    # 4. tile payload assembly (compose_points clusters the content)
+    # 4. tile payload assembly (compose_features clusters the content)
     # 5. metrics tables (S11 report analog); zoom metrics derive from the
     #    small tile manifest, not a content re-scan. tiles and manifest
     #    both read only the (already-written) content stages -> concurrent

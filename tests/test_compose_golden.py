@@ -166,7 +166,8 @@ def test_batched_final_encoder_byte_identical():
     )
     slices = list(zip(tb[:-1], tb[1:]))
     batched = _encode_final_tiles(
-        slices, zoom, tile_h, layer_rank, layers, fids, n_tags, kv_flat, kv_off, pts
+        slices, zoom, tile_h, layer_rank, layers, fids, n_tags, kv_flat, kv_off, pts,
+        np.ones(n, dtype=np.int64),
     )
     assert len(batched) == len(slices)
     for row, (s, e) in zip(batched, slices):
@@ -212,6 +213,7 @@ def test_batched_phase2_merge_byte_identical():
                     {
                         "ids": rng.randint(1, 1 << 40, nf).astype(np.int64),
                         "h": np.sort(rng.randint(1, 1 << 60, nf)).astype(np.int64),
+                        "seq": rng.randint(0, 3, nf).astype(np.int64),
                         "n_tags": n_tags,
                         "kv": kv,
                         "geom_lens": geom_lens,
@@ -231,3 +233,113 @@ def test_batched_phase2_merge_byte_identical():
     for o, n in zip(old, new):
         assert tuple(o[:5]) == tuple(n[:5])
         assert bytes(o[5]) == bytes(n[5]) and o[6] == n[6]
+
+
+def test_phase1_kernel_matches_per_tile_merge():
+    """The one phase-1 kernel over a mixed batch stream — points (null
+    geom_x, grid coords), lines, relation rings that share (h,
+    feature_id) with distinct geom_seq, off-manifest layer names, tiles
+    cut across Arrow batches — emits finals plus boundary chunks that,
+    merged by ``_merge_tiles_batch``, equal the per-tile
+    ``_merge_tile_rows`` of the same rows byte for byte."""
+    import pickle
+
+    import numpy as np
+    import pandas as pd
+
+    from pvt_spark.operators.compose import (
+        _merge_tile_rows,
+        _merge_tiles_batch,
+        _phase1_stream,
+        _tile_origin_xy,
+    )
+    from pvt_spark.tile import tile_project
+
+    rng = np.random.RandomState(13)
+    layer_order = ["no_rule", "Places", "Roads", "Buildings"]
+    recs = []
+    for t in range(400):
+        zoom = int(rng.choice([4, 8, 12]))
+        tile_h = t % 256 if zoom == 4 else t
+        for _ in range(rng.randint(1, 6)):
+            kind = rng.choice(["point", "line", "ring"])
+            layer = str(rng.choice(["Places", "Roads", "Zeta", "Alpha", "no_rule"]))
+            fid, h = int(rng.randint(1, 1 << 40)), int(rng.randint(-(1 << 62), 1 << 62))
+            for seq in range(rng.randint(2, 4) if kind == "ring" else 1):
+                n_tags = int(rng.randint(0, 3))
+                kv = np.array(
+                    [f"{c}{rng.randint(4)}" for _ in range(n_tags) for c in "kv"], dtype=object
+                )
+                rec = dict(zoom=zoom, tile_h=tile_h, feature_id=fid, h=h, layer=layer,
+                           kv=kv, n_tags=n_tags, gx=np.nan, gy=np.nan, geom_x=None,
+                           geom_y=None, geom_seq=np.nan)
+                if kind == "point":
+                    rec.update(gx=float(rng.randint(0, 1 << 32)), gy=float(rng.randint(0, 1 << 32)))
+                else:
+                    n_pts = rng.randint(1, 6)
+                    rec.update(
+                        geom_x=rng.randint(-4096, 4096, n_pts).astype(np.int16),
+                        geom_y=rng.randint(-4096, 4096, n_pts).astype(np.int16),
+                        geom_seq=float(seq),
+                    )
+                recs.append(rec)
+    df = pd.DataFrame(recs).sort_values(["zoom", "tile_h"], kind="mergesort")
+    df = df.reset_index(drop=True)
+
+    # the oracle: every (tile, layer) as 1-2 chunks of its rows, points
+    # projected to tile-local coords, merged per tile
+    point = df["geom_x"].isna().to_numpy()
+    zoom = df["zoom"].to_numpy(np.int64)
+    tile_h = df["tile_h"].to_numpy(np.int64)
+    tx, ty = _tile_origin_xy(zoom[point], tile_h[point])
+    px, py = tile_project(zoom[point], tx, ty, df["gx"][point], df["gy"][point])
+    xs, ys = list(df["geom_x"]), list(df["geom_y"])
+    for i, x, y in zip(np.flatnonzero(point), px, py):
+        xs[i], ys[i] = np.array([x], np.int16), np.array([y], np.int16)
+    seq = df["geom_seq"].fillna(0).astype(np.int64)
+    oracle_rows = []
+    for (z, th, layer), grp in df.groupby(["zoom", "tile_h", "layer"], sort=False):
+        idx = rng.permutation(grp.index.to_numpy())
+        for part in np.array_split(idx, rng.randint(1, 3)):
+            if not len(part):
+                continue
+            pts = np.empty(2 * sum(len(xs[i]) for i in part), np.int16)
+            pts[0::2] = np.concatenate([xs[i] for i in part])
+            pts[1::2] = np.concatenate([ys[i] for i in part])
+            chunk = {
+                "ids": df["feature_id"][part].to_numpy(np.int64),
+                "h": df["h"][part].to_numpy(np.int64),
+                "seq": seq[part].to_numpy(),
+                "n_tags": df["n_tags"][part].to_numpy(np.int64),
+                "kv": list(np.concatenate([df["kv"][i] for i in part])),
+                "geom_lens": np.array([len(xs[i]) for i in part], np.int64),
+                "pts": pts,
+            }
+            oracle_rows.append((z, th, layer, pickle.dumps(chunk, protocol=4)))
+    oracle = pd.DataFrame(oracle_rows, columns=["zoom", "tile_h", "layer", "chunk"])
+    expected = {
+        (z, th): _merge_tile_rows(int(z), int(th), grp, layer_order)
+        for (z, th), grp in oracle.groupby(["zoom", "tile_h"])
+    }
+
+    # the kernel: the (zoom, tile_h)-clustered rows cut into Arrow-like
+    # batches at arbitrary rows (tiles span batches), shuffled within
+    cuts = [0, *np.sort(rng.choice(np.arange(1, len(df)), 5, replace=False)), len(df)]
+    batches = [
+        df.iloc[a:b].sample(frac=1, random_state=rng) for a, b in zip(cuts[:-1], cuts[1:])
+    ]
+    out = pd.concat(list(_phase1_stream(iter(batches), layer_order)), ignore_index=True)
+    finals = out[out["final"]]
+    chunks = out[~out["final"]].sort_values(["zoom", "tile_h", "layer"], kind="mergesort")
+    # chunks only from each batch's first and last tile
+    assert chunks[["zoom", "tile_h"]].drop_duplicates().shape[0] <= 2 * len(batches)
+    assert len(finals) > len(expected) // 2
+    got = [
+        (r.zoom, r.tile_h, r.tile_id, r.layer_count, r.feature_count, r.payload, r.payload_size)
+        for r in finals.itertuples()
+    ] + _merge_tiles_batch(chunks.reset_index(drop=True), layer_order)
+    assert sorted(k[:2] for k in got) == sorted(expected)
+    for row in got:
+        exp = expected[(row[0], row[1])]
+        assert tuple(row[:5]) == tuple(exp[:5])
+        assert bytes(row[5]) == bytes(exp[5]) and row[6] == exp[6]

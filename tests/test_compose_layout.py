@@ -1,7 +1,8 @@
 """Tile assembly does not depend on how its input content is laid out:
-``compose_points`` clusters the point rows itself, so any order and
-partitioning of the content stage composes the same tiles; and a hot
-tile split across phase-1 tasks composes the same bytes as one task."""
+``compose_features`` clusters the rows itself, so any order and
+partitioning of the content stages composes the same tiles; mixed tiles
+leave phase 1 as finals; and a hot tile split across phase-1 tasks
+composes the same bytes as one task."""
 
 import glob
 import os
@@ -14,13 +15,19 @@ from pyspark.sql import functions as F
 from pvt_spark import hilbert
 from pvt_spark.manifest import compile_rules
 from pvt_spark.operators.compose import (
-    compose_points,
+    compose_features,
     compose_tiles,
-    geometry_chunks,
-    point_phase1,
+    phase1,
     project_geometry,
+    tag_kv,
 )
-from pvt_spark.plans.pipeline import BuildConfig, build_planet, compose_planet_tiles
+from pvt_spark.plans.pipeline import (
+    BuildConfig,
+    _layer_order,
+    _render_features,
+    build_planet,
+    compose_planet_tiles,
+)
 from pvt_spark.session import held_caches
 from pvt_spark.sources.pages import synthesize_pages
 
@@ -40,15 +47,43 @@ def _rows(tiles):
 
 
 def test_compose_does_not_depend_on_content_layout(planet):
-    """The built content scattered over several partitions (a tile's
-    rows in many of them, in hash order) composes the built tiles."""
+    """The built content (and multi-point content) scattered over several
+    partitions (a tile's rows in many of them, in hash order) composes
+    the built tiles."""
     _, _, cfg, out = planet
     scatter = F.xxhash64("feature_id", "zoom")
-    scrambled = out["content"].repartition(6, scatter).sortWithinPartitions(scatter)
+
+    def scrambled(df):
+        return df.repartition(6, scatter).sortWithinPartitions(scatter)
+
+    mp = out.get("content_mp")
     tiles = compose_planet_tiles(
-        scrambled, out.get("content_mp"), compile_rules(cfg.manifest), cfg
+        scrambled(out["content"]),
+        None if mp is None else scrambled(mp),
+        compile_rules(cfg.manifest),
+        cfg,
     )
     assert _rows(tiles) == _rows(out["tiles"])
+
+
+@pytest.mark.parametrize("planet", ["mixed"], indirect=True)
+def test_mixed_phase1_chunks_only_batch_boundary_tiles(planet, spark):
+    """Tiles holding points, ways and relations leave phase 1 as finals:
+    chunk rows come only from a partition's first and last tile (one
+    Arrow batch per phase-1 partition at this size), not from every
+    tile with multi-point content."""
+    _, _, cfg, out = planet
+    content = out["content"].unionByName(out["content_mp"], allowMissingColumns=True)
+    rf = _render_features(spark, content, compile_rules(cfg.manifest), cfg)
+    ph1 = phase1(rf, _layer_order(cfg))
+    per_partition = (
+        ph1.where(~F.col("final"))
+        .groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.countDistinct("zoom", "tile_h").alias("tiles"))
+        .collect()
+    )
+    assert per_partition and max(r.tiles for r in per_partition) <= 2
+    assert ph1.where(F.col("final")).count() > 0
 
 
 @pytest.mark.parametrize("planet", ["mixed"], indirect=True)
@@ -86,9 +121,9 @@ def _hot_rows(n_hot=12_000, n_cold=200, per_cold=20, seed=5):
 
 def _point_rf(spark, pdf):
     return spark.createDataFrame(
-        pdf.assign(layer="Places", layer_rank=1, kv=[["amenity", "cafe"]] * len(pdf), n_tags=1),
+        pdf.assign(layer="Places", kv=[["amenity", "cafe"]] * len(pdf), n_tags=1),
         "zoom int, tile_h long, feature_id long, h long, gx long, gy long, "
-        "layer string, layer_rank int, kv array<string>, n_tags int",
+        "layer string, kv array<string>, n_tags int",
     )
 
 
@@ -117,19 +152,19 @@ def _hot_partitions(phase1):
 
 
 def test_hot_tile_splits_across_phase1_tasks(spark):
-    """A tile holding most of the rows is split by the range key on both
-    compose paths, and the tiles equal a one-partition compose byte for
-    byte (phase 2 merges the pieces' chunks in any order)."""
+    """A tile holding most of the rows is split by the range key, for
+    points and for lines, and the tiles equal a one-partition compose
+    byte for byte (phase 2 merges the pieces' chunks in any order)."""
     pdf = _hot_rows()
     points, lines = _point_rf(spark, pdf), _geometry_rf(spark, pdf)
     layers = ["no_rule", "Places", "Roads"]
 
     def composed():
-        # the point phase 1 cache goes with the block: a later compose
-        # of the same plan must not read it back at the old width
+        # the phase 1 caches go with the block: a later compose of the
+        # same plan must not read them back at the old width
         with held_caches():
             return (
-                _rows(compose_points(points, layers)),
+                _rows(compose_features(points, layers)),
                 _rows(compose_tiles(lines, layers)),
             )
 
@@ -138,8 +173,8 @@ def test_hot_tile_splits_across_phase1_tasks(spark):
     old_width = conf.get("spark.sql.shuffle.partitions")
     try:
         conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        assert _hot_partitions(point_phase1(points)) > 1
-        assert _hot_partitions(geometry_chunks(project_geometry(lines))) > 1
+        assert _hot_partitions(phase1(points, layers)) > 1
+        assert _hot_partitions(phase1(tag_kv(project_geometry(lines)), layers)) > 1
         split = composed()
         conf.set("spark.sql.shuffle.partitions", "1")
         whole = composed()

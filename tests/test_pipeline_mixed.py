@@ -80,12 +80,12 @@ def test_mixed_build_end_to_end(spark):
 
         # conservation: payload features == point rf rows + mp rf rows
         from pvt_spark.manifest import compile_rules
-        from pvt_spark.plans.pipeline import _mp_rf, _points_rf
+        from pvt_spark.plans.pipeline import _render_features
 
         compiled = compile_rules(cfg.manifest)
         expected = (
-            _points_rf(spark, out["content"], compiled, cfg).count()
-            + _mp_rf(spark, out["content_mp"], compiled, cfg).count()
+            _render_features(spark, out["content"], compiled, cfg).count()
+            + _render_features(spark, out["content_mp"], compiled, cfg).count()
         )
         got = tiles.agg(F.sum("feature_count")).first()[0]
         assert got == expected
